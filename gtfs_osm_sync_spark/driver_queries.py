@@ -21,14 +21,16 @@ Portability rules used throughout (Spark SQL vs DuckDB must hash-match):
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from .functions.geo import EARTH_RADIUS_M, haversine_m_col, haversine_sql
+from .functions.geo import VIN_OVER_HAV_MIN, haversine_sql
 from .functions.cells import grid_cell_col, grid_cell_sql
+from .operators.spatial_join import cover_radius_join
 
 # ---------------------------------------------------------------------------
 # registry plumbing
@@ -88,103 +90,17 @@ def with_synth_coords(df: DataFrame, key: str, lat: str = "lat", lon: str = "lon
     )
 
 
-# Covering proof (r7, asymmetric grid sized to the radius instead of a
-# square 0.5 deg — ~3.9x fewer candidate pairs reach the distance code):
-# haversine d >= R*|dlat_rad|, so d < 20 km implies |dlat| < 0.179865 deg
-# < GRID_LAT_DEG; and d >= 2R*asin(sqrt(cos(lat1)cos(lat2))*|sin(dlon/2)|)
-# with |lat| <= 58 deg in the synth range implies |dlon| < 0.339419 deg
-# < GRID_LON_DEG. Hence any in-radius pair differs by at most one cell
-# index per axis and the 3x3 neighborhood covers the 20 km radius.
-GRID_LAT_DEG = 0.185
-GRID_LON_DEG = 0.35
 RADIUS_M = 20_000.0
 
-# Conservative pair-level bbox prefilter (evaluated BEFORE any trig in the
-# join condition; guide §2.3 "shuffle/compute fewer bytes"): d < RADIUS_M
-# implies |dlat| <= 0.17986407 deg (bound above) and
-# dlon^2 * cos(lat1)*cos(lat2) <= (0.17986659 deg)^2 (the asin/sin bound
-# above with the sin(x) >= 0.999986*x linearization valid for the <= 1.05
-# deg dlon a 3x3 candidate can have). False keeps are discarded by the
-# exact haversine; no true pair can be dropped.
-_PRE_DLAT_DEG = 0.1798641
-_PRE_DLON2_DEG2 = 0.03235201
 
-
-def _ring_cell(lat, lon):
-    """Asymmetric floor-grid cell key (lat-row * 400000 + lon-col).
-
-    Local to the ring join; lon cols span [-458, 366] so rows never
-    collide under the 400000 packing."""
-    return (
-        F.floor(lat / F.lit(GRID_LAT_DEG)) * F.lit(400000)
-        + F.floor(lon / F.lit(GRID_LON_DEG))
-    ).cast("long")
-
-
-def _grid_ring_join(
-    left: DataFrame, right: DataFrame, radius_m: float = RADIUS_M
-) -> DataFrame:
-    """Cell-prejoined radius join (the engine pattern, J1 analog).
-
-    left gets its exact grid cell; right is exploded to the 3x3 cell
-    neighborhood so every pair within one cell width is co-bucketed, then
-    the exact haversine predicate filters. Catalyst broadcasts the small
-    exploded side; at 100 TB the same plan shuffles on `cell` with AQE
-    skew splitting.
-
-    r7 optimization (guide §1.2 step 1 + §2.3): the grid is sized to the
-    radius per axis (see covering proof above) so ~3.9x fewer candidates
-    enter the join, a cheap bbox prefilter rejects most survivors before
-    any trig runs, and cos(radians(lat)) is hoisted to one evaluation per
-    ROW instead of two per PAIR. dist_m is bit-identical to the previous
-    formulation (same expression tree, the cos factors are merely
-    materialized per side).
-    """
-    lcell = left.withColumn("cell", _ring_cell(F.col("lat"), F.col("lon"))).withColumn(
-        "_coslat", F.cos(F.radians(F.col("lat")))
-    )
-    offs = F.expr(
-        "explode(array(-400001,-400000,-399999,-1,0,1,399999,400000,400001))"
-    )
-    rcell = (
-        right.withColumn("base_cell", _ring_cell(F.col("lat"), F.col("lon")))
-        .withColumn("off", offs)
-        .withColumn("cell", F.col("base_cell") + F.col("off"))
-        .drop("base_cell", "off")
-    )
-    r = rcell.select(
-        F.col("cell"),
-        F.col("lat").alias("r_lat"),
-        F.col("lon").alias("r_lon"),
-        F.cos(F.radians(F.col("lat"))).alias("_r_coslat"),
-        *[
-            F.col(c)
-            for c in rcell.columns
-            if c not in ("cell", "lat", "lon")
-        ],
-    )
-    dlat = F.col("r_lat") - F.col("lat")
-    dlon = F.col("r_lon") - F.col("lon")
-    cosprod = F.col("_coslat") * F.col("_r_coslat")
-    pre = (F.abs(dlat) < F.lit(_PRE_DLAT_DEG)) & (
-        dlon * dlon * cosprod < F.lit(_PRE_DLON2_DEG2)
-    )
-    # same haversine expression tree as functions.geo.haversine_m_col with
-    # the two COS(RADIANS(lat)) factors replaced by the per-row columns —
-    # identical double results, half the per-pair trig.
-    dist = F.lit(2.0 * EARTH_RADIUS_M) * F.asin(
-        F.sqrt(
-            F.pow(F.sin(F.radians(dlat) / 2.0), 2)
-            + cosprod * F.pow(F.sin(F.radians(dlon) / 2.0), 2)
-        )
-    )
-    joined = (
-        lcell.join(F.broadcast(r), "cell")
-        .filter(pre)
-        .withColumn("dist_m", dist)
-        .drop("_coslat", "_r_coslat")
-    )
-    return joined
+def _near_pairs(cust: DataFrame, supp: DataFrame, reach_m: float = RADIUS_M, **kw) -> DataFrame:
+    """Customer x supplier pairs with haversine < reach_m, through the
+    engine's one radius-join builder (the J1 analog): the supplier side
+    explodes to its cover-grid cells and is broadcast, customers key by
+    their own cell. Supplier coordinates come back as r_lat/r_lon, the
+    haversine as dist_m; kw passes through (on=, dist_col=)."""
+    supp = supp.withColumnsRenamed({"lat": "r_lat", "lon": "r_lon"})
+    return cover_radius_join(cust, supp, ("lat", "lon"), ("r_lat", "r_lon"), reach_m, **kw)
 
 
 # ---------------------------------------------------------------------------
@@ -456,13 +372,12 @@ _DIST_SQL = haversine_sql("c.lat", "c.lon", "s.lat", "s.lon")
     """,
 )
 def q09(spark, sf_dir):
-    """Radius distance join via grid-cell prejoin (J1; replaces the
+    """Radius distance join via cover-grid prejoin (J1; replaces the
     reference's O(N*M) loop CompareData.java:1016-1069). The DuckDB oracle
     IS the O(N*M) loop, so equality proves covering correctness."""
     cust = _cust_coords(spark, sf_dir)
     supp = _supp_coords(spark, sf_dir)
-    j = _grid_ring_join(cust, supp)
-    return j.filter(F.col("dist_m") < RADIUS_M).select(
+    return _near_pairs(cust, supp).select(
         "c_custkey", "s_suppkey", F.round("dist_m", 1).alias("dist_m")
     )
 
@@ -488,7 +403,7 @@ def q10(spark, sf_dir):
     (J4, CompareData.java:73-82,272-312; north_rule k=5 haversine)."""
     cust = _cust_coords(spark, sf_dir)
     supp = _supp_coords(spark, sf_dir)
-    j = _grid_ring_join(cust, supp).filter(F.col("dist_m") < RADIUS_M)
+    j = _near_pairs(cust, supp)
     w = W.partitionBy("c_custkey").orderBy(F.asc("dist_m"), F.asc("s_suppkey"))
     return (
         j.withColumn("rank_k", F.row_number().over(w))
@@ -537,8 +452,7 @@ def q11(spark, sf_dir):
     CompareData.java:1059-1287): one category column, not four mutable sets."""
     cust = _cust_coords(spark, sf_dir)
     supp = _supp_coords(spark, sf_dir)
-    pairs = _grid_ring_join(cust, supp).filter(F.col("dist_m") < RADIUS_M)
-    pairs = pairs.withColumn(
+    pairs = _near_pairs(cust, supp).withColumn(
         "id_match",
         F.when((F.col("s_suppkey") * 13) % 1500 == F.col("c_custkey") % 1500, 1).otherwise(0),
     )
@@ -1433,7 +1347,7 @@ def _sf_n(sf_dir: str, per_unit: int = 200_000, lo: int = 2_000) -> int:
 )
 def g01(spark, sf_dir):
     """Flagship engine pipeline on the synthetic images world (north_rule):
-    geotag -> hex ring join -> kNN + 4-way category; emits category counts."""
+    geotag -> cover-grid radius join -> kNN + 4-way category; emits category counts."""
     from . import synth
     from .pipeline import assign_images
 
@@ -1472,13 +1386,14 @@ def g02(spark, sf_dir):
     gate's sf=0.01 scale (g01 convention; the pairwise semantics are
     brute-force-verified against numpy Vincenty in
     tests/test_spatial_join.py). Any drift in the Vincenty constants,
-    the ring prejoin, the radius gate, or the tie-break ordering changes
+    the cover-grid prejoin, the radius gate, or the tie-break ordering changes
     some checksum."""
     from .functions.geo import vincenty_m_udf
 
     cust = _cust_coords(spark, sf_dir)
     supp = _supp_coords(spark, sf_dir)
-    j = _grid_ring_join(cust, supp)
+    # vincenty < RADIUS_M implies haversine < RADIUS_M / VIN_OVER_HAV_MIN
+    j = _near_pairs(cust, supp, RADIUS_M / VIN_OVER_HAV_MIN, dist_col=None)
     j = j.withColumn(
         "vdist_m", vincenty_m_udf(F.col("lat"), F.col("lon"), F.col("r_lat"), F.col("r_lon"))
     ).filter(F.col("vdist_m") < RADIUS_M)
@@ -1867,16 +1782,7 @@ def q20(spark, sf_dir):
     here). Relation membership analog = shared key % 16."""
     cust = _cust_coords(spark, sf_dir).withColumn("grp", F.col("c_custkey") % 16)
     supp = _supp_coords(spark, sf_dir).withColumn("grp", F.col("s_suppkey") % 16)
-    s = supp.select(
-        "grp",
-        F.col("s_suppkey"),
-        F.col("lat").alias("r_lat"),
-        F.col("lon").alias("r_lon"),
-    )
-    pairs = cust.join(F.broadcast(s), "grp").withColumn(
-        "dist_m",
-        haversine_m_col(F.col("lat"), F.col("lon"), F.col("r_lat"), F.col("r_lon")),
-    ).filter(F.col("dist_m") < 30000.0)
+    pairs = _near_pairs(cust, supp, 30000.0, on=["grp"])
     w = W.partitionBy("c_custkey").orderBy("dist_m", "s_suppkey")
     return (
         pairs.withColumn("rn", F.row_number().over(w))
@@ -2183,6 +2089,10 @@ def g08(spark, sf_dir):
     from .sources import osmxml
 
     ref_dir = "/root/reference/Data"
+    if not os.path.isdir(ref_dir):
+        raise FileNotFoundError(
+            f"g08 reads the reference snapshot directory {ref_dir}, which does not exist"
+        )
     agency = "Hillsborough Area Regional Transit"
     stops = G.read_stops(spark, f"{ref_dir}/GTFS_Temp/stops.txt", id_digits=4, operator=agency)
     nodes = osmxml.osm_nodes(osmxml.read_osm_xml(spark, f"{ref_dir}/DataFromServer.osm"))

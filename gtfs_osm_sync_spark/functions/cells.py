@@ -14,8 +14,9 @@ Three index families, three jobs:
 2. ``hex_cell`` — aperture-7-style hexagonal binning in axial coordinates
    on an equirectangular plane, with H3-compatible resolution sizing
    (edge_m(res) = res-0 edge / sqrt(7)^res, so res 9 ~ 174.4 m edge,
-   matching H3 res 9). Hex k-rings are exact and cheap in axial coords,
-   which is what the cell-ring-expansion kNN needs. NOTE: this is an
+   matching H3 res 9). Stored as a data column and used for tiling (the
+   aperture-7 mosaic pyramid) and the streaming sync's partitioning;
+   hex k-rings are exact and cheap in axial coords. NOTE: this is an
    H3-*style* index (same cell sizing, same ring semantics), not
    bit-identical to Uber H3 — the h3 library is unavailable in this
    environment and the engine never assumes H3's exact bit layout.
@@ -24,10 +25,12 @@ Three index families, three jobs:
    expressible in ANSI SQL, used by the DuckDB-oracle-checked queries so
    the oracle can reproduce candidate generation exactly.
 
-The radius-join prejoin contract for all three: ``ring(cell, k)`` must
-cover every point within R meters of any point in ``cell`` when k is
-chosen by ``rings_needed_*`` (a covering, not exact, set — the precise
-haversine filter runs after the equi-join).
+Radius-join candidates come from a fourth, JVM-only grid at the end of
+this module (``cover_cell_col`` / ``cover_cells_col``): a cell per point
+on one side, the cells covering its radius on the other, so every pair
+within the radius shares a cell (a covering, not exact, set — the
+precise distance predicate runs after the equi-join). The one join
+built on it is operators.spatial_join.cover_radius_join.
 
 Reference analog: GO_Sync has *no* spatial index (O(N*M) nested loop,
 task/CompareData.java:1016-1069); this module is the headline
@@ -42,6 +45,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .geo import EARTH_RADIUS_M
 
 # ---------------------------------------------------------------------------
 # S2 (real algorithm, vectorized)
@@ -235,20 +240,10 @@ def s2_cell_center_latlon(cell_id, level: int = 15):
     return lat, lon
 
 
-def make_s2_cell_udf(level: int = 15):
-    @F.pandas_udf(T.LongType())
-    def s2_cell(lat: pd.Series, lon: pd.Series) -> pd.Series:
-        out = s2_cell_np(lat.to_numpy(np.float64), lon.to_numpy(np.float64), level)
-        return pd.Series(out)
-
-    return s2_cell
-
-
 # ---------------------------------------------------------------------------
 # Hex index (H3-style sizing, axial coordinates, exact k-rings)
 # ---------------------------------------------------------------------------
 
-EARTH_RADIUS_M = 6371008.8
 _HEX_RES0_EDGE_M = 1107712.591  # H3 res-0 mean edge; edge(res) = this / sqrt(7)^res
 _HEX_OFF = 1 << 27  # axial coordinate offset so packed coords are non-negative
 
@@ -331,31 +326,6 @@ def make_hex_parent_udf():
         return pd.Series(hex_parent_np(cell.to_numpy(np.int64)))
 
     return hex_parent
-
-
-def make_hex_ring_udf(k: int = 1):
-    """Pandas UDF: cell id -> array of all cell ids within hex distance k
-    (the filled k-ring / grid_disk, (k+1)*3*k + 1 cells). Explode after."""
-
-    offsets = [
-        (dq, dr)
-        for dq in range(-k, k + 1)
-        for dr in range(max(-k, -dq - k), min(k, -dq + k) + 1)
-    ]
-    dqs = np.array([o[0] for o in offsets], dtype=np.int64)
-    drs = np.array([o[1] for o in offsets], dtype=np.int64)
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def hex_ring(cell: pd.Series) -> pd.Series:
-        cid = cell.to_numpy(np.int64)
-        res, q, r = hex_cell_unpack(cid)
-        # broadcast: (n, m) neighbor coords
-        qn = q[:, None] + dqs[None, :]
-        rn = r[:, None] + drs[None, :]
-        packed = (res[:, None] << np.int64(58)) | ((qn + _HEX_OFF) << np.int64(29)) | (rn + _HEX_OFF)
-        return pd.Series(list(packed))
-
-    return hex_ring
 
 
 def hex_rings_needed_np(radius_m: float, res: int, abs_lat_deg: np.ndarray) -> np.ndarray:
@@ -453,9 +423,9 @@ def grid_cell_sql(lat: str, lon: str, cell_deg: float) -> str:
 # joins without the Python hex-ring boundary
 # ---------------------------------------------------------------------------
 #
-# The hex k-ring UDF above is geometry-faithful but pays two scale costs
-# in a radius-join prejoin: an Arrow round-trip per exploded side, and a
-# ring of 37-91 cells per row at res 9 for a 400 m radius. A plain
+# A hex k-ring is geometry-faithful but pays two scale costs in a
+# radius-join prejoin: an Arrow round-trip per exploded side, and a ring
+# of 37-91 cells per row at res 9 for a 400 m radius. A plain
 # floor grid whose cell height equals the radius needs only 3 lat-rows,
 # and an ADAPTIVE number of lon-columns derived from the row's latitude
 # (3 below |lat| 47, 5 at 60, growing toward the poles where meridians
@@ -477,6 +447,7 @@ def grid_cell_sql(lat: str, lon: str, cell_deg: float) -> str:
 # a pair straddling +/-180 deg is not co-bucketed.
 
 _COVER_STRIDE = 1 << 21  # lon-index packing stride (|lonidx| < 2^20 for any radius >= 70 m)
+COVER_MIN_RADIUS_M = 70.0
 
 
 def cover_grid_deg(radius_m: float) -> float:
@@ -487,12 +458,12 @@ def cover_grid_deg(radius_m: float) -> float:
     silently. Every engine radius (400 m compare/assign, 20 km driver
     queries) is far above the floor; the guard makes a future misuse
     fail loudly instead of corrupting the candidate set."""
-    if radius_m < 70.0:
+    if radius_m < COVER_MIN_RADIUS_M:
         raise ValueError(
-            f"cover grid requires radius_m >= 70 (got {radius_m!r}); "
+            f"cover grid requires radius_m >= {COVER_MIN_RADIUS_M} (got {radius_m!r}); "
             "the lon-index packing would overflow"
         )
-    return math.degrees(radius_m / 6371008.8) * 1.05
+    return math.degrees(radius_m / EARTH_RADIUS_M) * 1.05
 
 
 def cover_cell_col(lat, lon, radius_m: float) -> "F.Column":
@@ -511,7 +482,7 @@ def cover_cells_col(lat, lon, radius_m: float) -> "F.Column":
     # B = conservative |dlon| bound in degrees for a partner point; the
     # asin argument is clamped: >= 1 (near-polar) degenerates to the
     # whole lon range.
-    sin_half = math.sin(radius_m / (2.0 * 6371008.8))
+    sin_half = math.sin(radius_m / (2.0 * EARTH_RADIUS_M))
     arg = F.lit(sin_half) / F.cos(
         F.radians(F.least(F.abs(lat) + F.lit(g), F.lit(89.9999)))
     )

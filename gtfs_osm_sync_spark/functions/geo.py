@@ -27,6 +27,18 @@ from pyspark.sql import types as T
 
 EARTH_RADIUS_M = 6371008.8  # IUGG mean Earth radius
 
+# Vincenty (WGS-84) over haversine (EARTH_RADIUS_M) bracket, valid at any
+# distance: the ellipsoid line element ds^2 = M^2 dphi^2 + N^2 cos^2 phi
+# dlambda^2 has curvature radii M in [6335439, 6399594] and N in [6378137,
+# 6399594], so on every curve the ellipsoid length lies within
+# [6335439/R, 6399594/R] times the sphere length; taking each distance's
+# shortest curve bounds vincenty/haversine by the same interval
+# (0.9944169, 1.0044868). Both constants are rounded OUTWARD, so
+# vincenty < T implies haversine < T / VIN_OVER_HAV_MIN, and haversine
+# < T / VIN_OVER_HAV_MAX implies vincenty < T.
+VIN_OVER_HAV_MIN = 0.99441
+VIN_OVER_HAV_MAX = 1.00449
+
 # Reference constants, OsmDistance.java:34-36
 WGS84_A = 6378137.0
 WGS84_B = 6356752.3142

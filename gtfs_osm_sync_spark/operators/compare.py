@@ -45,42 +45,34 @@ Reference semantics (task/CompareData.java:1000-1290):
   (OsmPrimitive.addTags, non-overwriting).
 
 Plan shape: the id match is a hash equi-join on the padded id (cheap,
-exact); the conflict probe is the cell-prejoin radius join (ring-exploded
-SMALL gtfs side, hash join on hex_cell, haversine prefilter in codegen,
-exact Vincenty only on survivors). No O(N*M) scan anywhere — the
-reference's nested parallelStream loop (CompareData.java:1016-1069)
-becomes two hash joins.
+exact); the conflict and adoption probes go through the engine's
+radius-join builder (spatial_join.cover_radius_join: cover-cell-exploded
+SMALL stop side, hash join on the cover cell, bbox then haversine in
+codegen). The haversine keep set is the proven superset of the Vincenty
+one (functions.geo.VIN_OVER_HAV_MIN/MAX), so exact Vincenty runs only on
+its survivors, and for conflicts only on the thin shells around each
+threshold. No O(N*M) scan anywhere — the reference's nested
+parallelStream loop (CompareData.java:1016-1069) becomes hash joins.
 """
 
 from __future__ import annotations
-
-import math
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from ..functions.geo import EARTH_RADIUS_M, haversine_m_col, vincenty_m_udf
+from ..functions.geo import (
+    VIN_OVER_HAV_MAX,
+    VIN_OVER_HAV_MIN,
+    haversine_m_col,
+    vincenty_m_udf,
+)
 from ..functions.mappings import zero_pad_id
-from ..operators.spatial_join import HEX_RES
-from ..functions.cells import cover_cell_col, cover_cells_col
+from .spatial_join import cover_radius_join
 
 RANGE_M = 400.0  # CompareData.java:129
 ERROR_TO_ZERO_M = 0.5  # CompareData.java:127
 FIXME_REDUNDANT = "This bus stop could be redundant"  # CompareData.java:1155
-
-# r7: Vincenty(WGS-84) vs haversine(R = 6371008.8 mean) bounds for SHORT
-# distances — the local ellipsoid metric ds^2 = M^2 dphi^2 + N^2 cos^2
-# phi dlambda^2 has curvature radii M in [6335439, 6399594] and N in
-# [6378137, 6399594], so vincenty/haversine lies in [6335439/R,
-# 6399594/R]. Second-order corrections are O((d/R)^2) ~ 4e-9 at 400 m,
-# far inside the margins these constants carry. They let a band test on
-# the cheap haversine CLASSIFY most pairs exactly (certainly-in /
-# certainly-out of a Vincenty threshold), reserving the Python Vincenty
-# kernel for the thin ambiguity shells around each threshold.
-_VIN_OVER_HAV_MIN = 0.99442
-_VIN_OVER_HAV_MAX = 1.00449
-
 
 def operator_gate(op_col, agency_names: list[str], alias_regexes: list[str] | None = None):
     """OperatorInfo.isTheSameOperator as a Column predicate
@@ -180,17 +172,17 @@ def _probe_pairs(
     n: DataFrame,
     unmatched: DataFrame,
     radius_m: float,
-    b,
+    hint: str,
     known_ids: DataFrame | None = None,
     max_pre_m: float | None = None,
 ):
-    """Cell-prejoin radius join between the UNMATCHED stops and the
-    FOREIGN nodes (gtfs_id absent / 'missing' / known to NO stop in the
-    feed — the UPLOAD_CONFLICT gate, CompareData.java:1216-1222, and the
-    only nodes that can source a node-side modify): ring-exploded stop
-    side (bounded — a transit feed), streaming node side, haversine
-    codegen prefilter, exact Vincenty on survivors. Returns pairs with
-    dist_m < radius_m.
+    """Radius join between the UNMATCHED stops and the FOREIGN nodes
+    (gtfs_id absent / 'missing' / known to NO stop in the feed — the
+    UPLOAD_CONFLICT gate, CompareData.java:1216-1222, and the only nodes
+    that can source a node-side modify): cover-cell-exploded stop side
+    (bounded — a transit feed) as the hinted build side, streaming node
+    side, bbox + haversine in codegen, exact Vincenty on survivors.
+    Returns pairs with Vincenty dist_m < radius_m.
 
     The anti-join prefilter matters at scale: in a synced region most
     nodes carry valid ids, so probing ALL gated nodes quadruples the
@@ -203,78 +195,33 @@ def _probe_pairs(
     incremental-sync delta path re-compares only affected stops, but a
     node carrying some other stop's valid id is still not foreign).
 
-    r7 (guide §2.3/§8 "decide with small rows"): the stop side entering
-    the candidate join is SLIMMED to (gtfs_id, lat, lon[,
-    public_transport]) — the full stop row (g_tags map, raw strings)
-    used to ride the ring-cell explosion into the hash-join BUILD side,
-    which at 2M stops was a multi-GB build that thrashed execution
-    memory (observed: 'Can't acquire 536870912 bytes to build hash
-    relation' and a 48-146 s wall spread). Downstream branches that need
-    the full stop row (the adoption branch) re-attach it by gtfs_id to
-    the tiny <= 0.5 m subset. A conservative bbox prefilter (no trig)
-    also now runs before the haversine prefilter, which runs before the
-    exact Vincenty — three stages, each feeding the next only its
-    survivors; the kept pair set is unchanged (every bound is
-    conservative for the stage after it)."""
+    The stop side entering the join is SLIMMED to (gtfs_id, lat, lon[,
+    public_transport]): the full stop row (g_tags map, raw strings) used
+    to ride the cell explosion into the hash-join BUILD side, which at 2M
+    stops was a multi-GB build that thrashed execution memory. Branches
+    that need the full stop row (adoption) re-attach it by gtfs_id to the
+    tiny <= 0.5 m subset.
+
+    max_pre_m: a consumer that only needs pairs below some Vincenty
+    threshold T passes T / VIN_OVER_HAV_MIN, so the join keeps, and the
+    Python kernel sees, just that band."""
     gids = (known_ids if known_ids is not None else g).select(
         F.col("gtfs_id").alias("osm_gtfs_id")
     ).distinct()
-    fn = n.join(b(gids), "osm_gtfs_id", "left_anti")
-    # r7: candidate cells come from the JVM covering grid
-    # (functions.cells.cover_cells_col) instead of the hex k-ring pandas
-    # UDF — same covering contract, but 9-15 cells per stop instead of
-    # 37-91 at res 9, zero Python in the prejoin, and the whole stage
-    # codegens (guide §4.1 "prefer built-ins"). The grid is sized for
-    # the haversine-prefilter keep set (radius * 1.01), which contains
-    # every Vincenty-true pair.
-    r_cover = radius_m * 1.01
+    fn = n.join(gids.hint(hint), "osm_gtfs_id", "left_anti")
     slim_cols = ["gtfs_id", "lat", "lon"] + (
         ["public_transport"] if "public_transport" in unmatched.columns else []
     )
-    u = (
-        unmatched.select(*slim_cols)
-        .withColumn(
-            "_pcell", F.explode(cover_cells_col(F.col("lat"), F.col("lon"), r_cover))
-        )
-        .withColumn("_s_coslat", F.cos(F.radians(F.col("lat"))))
-    )
-    fn = fn.withColumn(
-        "_pcell", cover_cell_col(F.col("o_lat"), F.col("o_lon"), r_cover)
-    ).withColumn("_n_coslat", F.cos(F.radians(F.col("o_lat"))))
-    # bbox bounds conservative for {haversine < radius_m * 1.01} (the
-    # stage-2 keep set): d >= R|dlat|, and the lon test only applies
-    # under the |dlon| < 1 deg guard where sin(x) >= 0.9999874*x holds.
-    r_eff = radius_m * 1.01
-    dlat_bound = math.degrees(r_eff / EARTH_RADIUS_M) * 1.0000001
-    dlon_bound2 = (math.degrees((r_eff / EARTH_RADIUS_M) / 0.9999874) * 1.0000001) ** 2
-    dlat = F.col("o_lat") - F.col("lat")
-    dlon = F.col("o_lon") - F.col("lon")
-    cosprod = F.col("_s_coslat") * F.col("_n_coslat")
-    bbox = (F.abs(dlat) < F.lit(dlat_bound)) & (
-        (dlon * dlon * cosprod < F.lit(dlon_bound2)) | (F.abs(dlon) >= F.lit(1.0))
-    )
-    # broadcast the STOP side: unmatched stops x ring cells is bounded
-    # (a transit feed), the foreign-node layer is not — it streams through
-    # the hash join like the id-match scan
-    out = (
-        fn.join(b(u), "_pcell")
-        .filter(bbox)
-        .withColumn(
-            "_pre", haversine_m_col(F.col("lat"), F.col("lon"), F.col("o_lat"), F.col("o_lon"))
-        )
-        .filter(F.col("_pre") < radius_m * 1.01)
-    )
-    # optional caller-supplied haversine band cap (r7): a consumer that
-    # only needs pairs below some Vincenty threshold T passes
-    # max_pre_m = T / 0.99442 so the Python kernel sees just that band
-    if max_pre_m is not None:
-        out = out.filter(F.col("_pre") <= max_pre_m)
+    reach_m = max_pre_m if max_pre_m is not None else radius_m / VIN_OVER_HAV_MIN
     return (
-        out.withColumn(
+        cover_radius_join(
+            fn, unmatched.select(*slim_cols), ("o_lat", "o_lon"), ("lat", "lon"),
+            reach_m, hint=hint, dist_col=None,
+        )
+        .withColumn(
             "dist_m", vincenty_m_udf(F.col("o_lat"), F.col("o_lon"), F.col("lat"), F.col("lon"))
         )
         .filter(F.col("dist_m") < radius_m)
-        .drop("_pre", "_pcell", "_s_coslat", "_n_coslat")
     )
 
 
@@ -283,89 +230,55 @@ def _conflict_stop_ids(
     n: DataFrame,
     unmatched: DataFrame,
     radius_m: float,
-    b,
+    hint: str,
     known_ids: DataFrame | None = None,
 ) -> DataFrame:
     """Distinct gtfs_ids of unmatched stops with at least one FOREIGN
     node at Vincenty distance in (ERROR_TO_ZERO_M, radius_m) — the
     UPLOAD_CONFLICT evidence — computed as EXISTENCE, not as a pair
-    materialization (r7, guide §1.2 step 1).
+    materialization.
 
     Why: the conflict branch only ever consumed
     `pairs.select(gtfs_id).distinct()`, yet the dense-city worst case
     yields ~10^9 candidate pairs and ~10^8 true ones, all of which
-    previously crossed the Python Vincenty kernel. Here:
+    would cross the Python Vincenty kernel. Here:
 
-    1. a LEFT SEMI cell join with the whole predicate in the join
-       condition — bbox, then haversine inside the CERTAIN band
-       (hav in (ERROR_TO_ZERO/0.99442, radius/1.00449), where the
-       curvature bounds guarantee the Vincenty classification) — marks
-       a stop as conflicted at its FIRST qualifying node, without
-       emitting pairs or calling Python;
-    2. only stops with NO certain pair (geometrically: all their
-       candidates within ~6 mm of the 0.5 m threshold or ~6 m of the
-       400 m threshold) fall through to an exact Vincenty refinement
-       over their shell pairs. Any pair with vin in (0.5, 400) has
-       hav in (0.5/1.00449, 400/0.99442), which the certain band plus
-       the two shells cover completely, so the returned id set is
-       identical to the pair-based one.
+    1. a LEFT SEMI radius join keeps the stops with a node whose
+       haversine lies in the CERTAIN band (ERROR_TO_ZERO/VIN_OVER_HAV_MIN,
+       radius/VIN_OVER_HAV_MAX), where the curvature bracket guarantees
+       the Vincenty classification — no pairs emitted, no Python;
+    2. only stops with NO certain pair fall through to an exact Vincenty
+       refinement over their shell pairs, haversine in
+       (ERROR_TO_ZERO/VIN_OVER_HAV_MAX, radius/VIN_OVER_HAV_MIN). Any pair
+       with vin in (0.5, 400) has its haversine in that open interval,
+       and a stop that reaches step 2 has no pair inside the certain
+       band (step 1 would have kept it), so the refinement sees exactly
+       the two thin shells and the returned id set is identical to the
+       pair-based one.
 
     The node side ships only coordinates (existence needs nothing
-    else); both joins hash the node side by cell so the per-row probe
-    is bucket-local."""
+    else) and is the shuffle-hash build side of both joins; both share
+    one reach, hence one cover cell and one node exchange."""
     gids = (known_ids if known_ids is not None else g).select(
         F.col("gtfs_id").alias("osm_gtfs_id")
     ).distinct()
-    r_cover = radius_m * 1.01
-    fn = (
-        n.join(b(gids), "osm_gtfs_id", "left_anti")
-        .select("o_lat", "o_lon")
-        .withColumn("_pcell_n", cover_cell_col(F.col("o_lat"), F.col("o_lon"), r_cover))
-        .withColumn("_n_coslat", F.cos(F.radians(F.col("o_lat"))))
-        .hint("shuffle_hash")
-    )
-    u = (
-        unmatched.select("gtfs_id", "lat", "lon")
-        .withColumn(
-            "_pcell", F.explode(cover_cells_col(F.col("lat"), F.col("lon"), r_cover))
-        )
-        .withColumn("_s_coslat", F.cos(F.radians(F.col("lat"))))
-    )
-    dlat = F.col("o_lat") - F.col("lat")
-    dlon = F.col("o_lon") - F.col("lon")
-    cosprod = F.col("_s_coslat") * F.col("_n_coslat")
-    dlat_bound = math.degrees(r_cover / EARTH_RADIUS_M) * 1.0000001
-    dlon_bound2 = (math.degrees((r_cover / EARTH_RADIUS_M) / 0.9999874) * 1.0000001) ** 2
-    bbox = (F.abs(dlat) < F.lit(dlat_bound)) & (
-        (dlon * dlon * cosprod < F.lit(dlon_bound2)) | (F.abs(dlon) >= F.lit(1.0))
-    )
-    pre = haversine_m_col(F.col("lat"), F.col("lon"), F.col("o_lat"), F.col("o_lon"))
-    cell_eq = F.col("_pcell") == F.col("_pcell_n")
-    lo_sure = ERROR_TO_ZERO_M / _VIN_OVER_HAV_MIN  # hav above => vin > ERROR_TO_ZERO
-    hi_sure = radius_m / _VIN_OVER_HAV_MAX  # hav below => vin < radius
-    lo_shell = ERROR_TO_ZERO_M / _VIN_OVER_HAV_MAX  # hav below => vin <= ERROR_TO_ZERO
-    hi_shell = radius_m / _VIN_OVER_HAV_MIN  # hav above => vin >= radius
+    fn = n.join(gids.hint(hint), "osm_gtfs_id", "left_anti").select("o_lat", "o_lon")
+    u = unmatched.select("gtfs_id", "lat", "lon")
+    hi_shell = radius_m / VIN_OVER_HAV_MIN  # hav at or above => vin >= radius
 
-    sure = (
-        u.join(
-            fn,
-            cell_eq & bbox & (pre > F.lit(lo_sure)) & (pre < F.lit(hi_sure)),
-            "left_semi",
+    def near_nodes(stops: DataFrame, band: tuple, how: str) -> DataFrame:
+        return cover_radius_join(
+            stops, fn, ("lat", "lon"), ("o_lat", "o_lon"), hi_shell,
+            band=band, how=how, hint="shuffle_hash", explode="left", dist_col=None,
         )
-        .select("gtfs_id")
-        .distinct()
-    )
-    amb = u.join(b(sure), "gtfs_id", "left_anti")
+
+    # hav above lo_sure => vin > ERROR_TO_ZERO; below hi_sure => vin < radius
+    certain = (ERROR_TO_ZERO_M / VIN_OVER_HAV_MIN, radius_m / VIN_OVER_HAV_MAX)
+    sure = near_nodes(u, certain, "left_semi").select("gtfs_id").distinct()
+    amb = u.join(sure.hint(hint), "gtfs_id", "left_anti")
+    # hav at or below ERROR_TO_ZERO / VIN_OVER_HAV_MAX => vin <= ERROR_TO_ZERO
     shell_refined = (
-        amb.join(
-            fn,
-            cell_eq
-            & bbox
-            & (pre >= F.lit(lo_shell))
-            & (pre <= F.lit(hi_shell))
-            & ((pre <= F.lit(lo_sure)) | (pre >= F.lit(hi_sure))),
-            "inner",
-        )
+        near_nodes(amb, (ERROR_TO_ZERO_M / VIN_OVER_HAV_MAX, None), "inner")
         .withColumn(
             "dist_m",
             vincenty_m_udf(F.col("o_lat"), F.col("o_lon"), F.col("lat"), F.col("lon")),
@@ -399,7 +312,7 @@ def compare_stops(
     join becomes a map-side hash join over the streaming node scan. For a
     continental stop/feature layer that outgrows broadcast, pass False:
     the same equi-joins shuffle-hash-partition on their keys (gtfs_id /
-    hex_cell) and scale with cores instead of paying a serial broadcast
+    cover cell) and scale with cores instead of paying a serial broadcast
     build (measured: 1M-stop world 0.60 -> >=0.8 efficiency at 2->8
     cores; tools/bench_compare.py).
 
@@ -413,27 +326,25 @@ def compare_stops(
     # static size estimates under filter/explode chains otherwise pick
     # BroadcastHashJoin and try to broadcast a multi-GiB side at 10^6+
     # stops (observed: 10 GiB broadcast attempt at 4M stops)
-    b = F.broadcast if broadcast_stops else (lambda df: df.hint("shuffle_hash"))
+    hint = "broadcast" if broadcast_stops else "shuffle_hash"
+    b = lambda df: df.hint(hint)  # noqa: E731
     n = _gated_nodes(nodes, agency_names, id_digits, network_key, alias_regexes)
 
     # ---- id matches: hash equi-join on the padded id, exact Vincenty gate
     # the stop side is the SMALL side at any scale (a transit feed is
     # 10^3-10^6 stops; the node layer is unbounded): broadcast it so the
     # id match is a map-side hash join over the node scan, never an SMJ
-    # r7: haversine prefilter before the Vincenty Python boundary (guide
-    # §4 — fewer rows cross it). Vincenty(WGS-84) and haversine(R mean)
-    # agree within the min/max local curvature ratio [0.9944, 1.0045], so
-    # vincenty < radius implies haversine < radius*1.006 — the 1.01
-    # tolerance (the same one _probe_pairs has always used) can never
-    # drop a true match; far pairs (e.g. a stale id 2.5 km away) skip
-    # the Python round-trip entirely.
+    # haversine prefilter before the Vincenty Python boundary: vincenty <
+    # radius implies haversine < radius / VIN_OVER_HAV_MIN, so no true
+    # match is dropped; far pairs (e.g. a stale id 2.5 km away) skip the
+    # Python round-trip entirely.
     idm = (
         b(g).join(n, g["gtfs_id"] == n["osm_gtfs_id"])
         .withColumn(
             "_hpre",
             haversine_m_col(F.col("lat"), F.col("lon"), F.col("o_lat"), F.col("o_lon")),
         )
-        .filter(F.col("_hpre") < radius_m * 1.01)
+        .filter(F.col("_hpre") < radius_m / VIN_OVER_HAV_MIN)
         .drop("_hpre")
         .withColumn(
             "dist_m", vincenty_m_udf(F.col("o_lat"), F.col("o_lon"), F.col("lat"), F.col("lon"))
@@ -475,8 +386,8 @@ def compare_stops(
     has_pt = "public_transport" in gtfs.columns
     if has_pt:
         pairs = _probe_pairs(
-            g, n, unmatched, radius_m, b, known_ids,
-            max_pre_m=ERROR_TO_ZERO_M / _VIN_OVER_HAV_MIN,
+            g, n, unmatched, radius_m, hint, known_ids,
+            max_pre_m=ERROR_TO_ZERO_M / VIN_OVER_HAV_MIN,
         )
 
     # same-location adoption (CompareData.java:1224-1262): node within
@@ -491,7 +402,7 @@ def compare_stops(
     # probe then reads the pairs subtree exactly once (measured: 69.9 ->
     # 59.5 s best-of-3 on the 4M-stop compare phase at 8 cores).
     if has_pt:
-        # pairs carry only the slim stop columns (see _probe_pairs r7
+        # pairs carry only the slim stop columns (see _probe_pairs
         # note); the full stop row is re-attached here, to the tiny
         # <= 0.5 m winner set only, by an equi-join on gtfs_id with the
         # adoption rows as the build/broadcast side.
@@ -552,7 +463,7 @@ def compare_stops(
     # (_conflict_stop_ids; distinct, so the outer join cannot duplicate
     # rows); the per-row when() reproduces both branches' columns exactly.
     conflict_flag = b(
-        _conflict_stop_ids(g, n, unmatched, radius_m, b, known_ids)
+        _conflict_stop_ids(g, n, unmatched, radius_m, hint, known_ids)
         .withColumn("_cfl", F.lit(1))
     )
     is_cfl = F.col("_cfl").isNotNull()
@@ -636,19 +547,20 @@ def redundant_node_modifies(
     # static size estimates under filter/explode chains otherwise pick
     # BroadcastHashJoin and try to broadcast a multi-GiB side at 10^6+
     # stops (observed: 10 GiB broadcast attempt at 4M stops)
-    b = F.broadcast if broadcast_stops else (lambda df: df.hint("shuffle_hash"))
+    hint = "broadcast" if broadcast_stops else "shuffle_hash"
+    b = lambda df: df.hint(hint)  # noqa: E731
     n = _gated_nodes(nodes, agency_names, id_digits, network_key, alias_regexes)
 
     matched_ids = (
         b(g.select("gtfs_id", "lat", "lon"))
         .join(n.select("osm_gtfs_id", "o_lat", "o_lon"), g["gtfs_id"] == n["osm_gtfs_id"])
-        # r7: same haversine-before-Vincenty prefilter as compare_stops'
-        # id-match branch (1.01 tolerance covers the curvature spread)
+        # same haversine-before-Vincenty prefilter as compare_stops'
+        # id-match branch
         .withColumn(
             "_hpre",
             haversine_m_col(F.col("lat"), F.col("lon"), F.col("o_lat"), F.col("o_lon")),
         )
-        .filter(F.col("_hpre") < radius_m * 1.01)
+        .filter(F.col("_hpre") < radius_m / VIN_OVER_HAV_MIN)
         .drop("_hpre")
         .withColumn(
             "dist_m", vincenty_m_udf(F.col("o_lat"), F.col("o_lon"), F.col("lat"), F.col("lon"))
@@ -658,7 +570,7 @@ def redundant_node_modifies(
         .distinct()
     )
     unmatched = g.join(b(matched_ids), "gtfs_id", "left_anti")
-    pairs = _probe_pairs(g, n, unmatched, radius_m, b, known_ids)
+    pairs = _probe_pairs(g, n, unmatched, radius_m, hint, known_ids)
 
     stop_pt = (
         F.col("public_transport")

@@ -1,56 +1,142 @@
-"""The flagship operator set: cell-prejoined radius join, ring-expansion
-kNN, and four-way match categorization.
+"""The flagship operator set: the cover-grid radius-join builder,
+radius-bounded kNN, and image geotagging.
 
 This is the Spark-first re-expression of the reference's
 compareBusStopData (task/CompareData.java:1000-1290), which is an O(N*M)
-nested Vincenty loop over parallelStream. Here:
+nested Vincenty loop over parallelStream. Every radius join in the
+engine (radius_join/knn_join here, assign_images, compare's conflict and
+adoption probes, the driver's spatial queries) goes through ONE builder,
+cover_radius_join:
 
-  images --phash_latlon--> lat/lon --hex_cell--> cell
-  features --hex_cell + k-ring explode--> candidate cells
-  equi-join on cell  (broadcast small side / shuffle+AQE-skew big side)
-  haversine filter < radius  (JVM codegen, no Python)
-  row_number() over (partition by image order by dist, id) <= k
+  build side --cover_cells_col--> explode to the covering-grid cells
+  probe side --cover_cell_col-->  its own cell (floor arithmetic)
+  hash equi-join on (extra keys, cell)   (broadcast / shuffle-hash)
+  conservative bbox test  (no trig)
+  haversine with cos(lat) hoisted to one evaluation per row
+  keep: haversine < reach_m, or inside a (lo, hi) band
 
-Scale notes (the part that matters at 100 TB):
-- Candidate generation multiplies the SMALL side (features) by the ring
-  size, never the big side. With a broadcastable feature set the big
-  side is a single map-only stage: scan -> pandas_udf(cell) -> hash
-  lookup -> filter -> local top-k, no shuffle of the images at all
-  except the final window (which AQE coalesces per cell group).
-- When features don't fit a broadcast, both sides shuffle on `cell`;
-  dense urban cells are the skew risk, handled by (a) AQE skew-join
-  splitting and (b) explicit salting (salt_dense_cells below): the big
-  side salts cell -> (cell, salt), the small side explodes to all salts.
-- kNN ring expansion: k=1 ring covers the 400 m radius at res 9
-  (rings_needed computes this from the geometry; at high |lat| it grows).
-  The guarantee is covering, not exactness — the haversine filter is the
-  precise predicate (same contract as the reference's RANGE check).
+Scale notes:
+- Candidate generation multiplies ONE side by its 9-15 cover cells (a
+  hundred or more only near the poles); it is all JVM Column
+  arithmetic, so the join stage codegens with no Python boundary.
+- When the exploded side does not fit a broadcast, both sides shuffle on
+  the cell; dense urban cells are the skew risk, handled by AQE skew
+  splitting and, in radius_join, by explicit salting (n_salt).
+- The cover grid is a covering, not an exact set: the haversine keep
+  predicate is the precise filter (same contract as the reference's
+  RANGE check), and Vincenty consumers ask for the proven haversine
+  superset of their Vincenty keep set (VIN_OVER_HAV_MIN).
 """
 
 from __future__ import annotations
 
 import math
+from collections.abc import Sequence
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from ..functions.cells import (
-    cover_cell_col,
-    cover_cells_col,
-    make_hex_cell_udf,
-    make_hex_ring_adaptive_udf,
-    make_s2_cell_udf,
-)
-from ..functions.geo import EARTH_RADIUS_M, haversine_m_col
-from ..synth import make_phash_latlon_udf
+from ..functions.cells import COVER_MIN_RADIUS_M, cover_cell_col, cover_cells_col
+from ..functions.geo import EARTH_RADIUS_M
 
 DEFAULT_RADIUS_M = 400.0  # reference RANGE, CompareData.java:129
 ERROR_TO_ZERO_M = 0.5  # reference ERROR_TO_ZERO, CompareData.java:127
 DEFAULT_K = 5  # north_rule kNN k
 HEX_RES = 9
+
+
+def cover_radius_join(
+    left: DataFrame,
+    right: DataFrame,
+    left_ll: tuple[str, str],
+    right_ll: tuple[str, str],
+    reach_m: float,
+    band: tuple[float | None, float | None] | None = None,
+    how: str = "inner",
+    on: Sequence[str] = (),
+    hint: str | None = "broadcast",
+    explode: str = "right",
+    dist_col: str | None = "dist_m",
+) -> DataFrame:
+    """Every (left, right) row pair whose haversine distance is < reach_m.
+
+    left_ll / right_ll name each side's (lat, lon) columns; they must not
+    collide. band=(lo, hi) narrows the keep set to lo < haversine < hi
+    (either end None = unbounded; hi <= reach_m): reach_m alone sizes the
+    bbox and the cover grid (never below cells.COVER_MIN_RADIUS_M), so
+    joins sharing a reach share the cell column. how: inner / left / left_semi. on: extra equi-keys present on
+    both sides (emitted once, the left's). hint applies to the right
+    side: "broadcast", "shuffle_hash" or None. explode names the side
+    that carries the cover cells; the other side keys by its own cell.
+    dist_col, when set, is the haversine in meters (NULL for a left
+    join's unmatched rows) -- the same expression tree as
+    functions.geo.haversine_m_col with the cos factors materialized per
+    row, so its doubles are bit-identical. Right-side columns whose name
+    collides with a left-side column (other than the keys) are dropped:
+    the left's copy is the one emitted.
+    """
+    if explode not in ("left", "right"):
+        raise ValueError(f"explode must be 'left' or 'right' (got {explode!r})")
+    (llat, llon), (rlat, rlon) = left_ll, right_ll
+    grid_m = max(reach_m, COVER_MIN_RADIUS_M)
+
+    def cell(lat, lon, exploded):
+        if exploded:
+            return F.explode(cover_cells_col(F.col(lat), F.col(lon), grid_m))
+        return cover_cell_col(F.col(lat), F.col(lon), grid_m)
+
+    # one projection per side (every DataFrame step is a driver-side
+    # analysis pass, which a ~1 s join pays per call)
+    left_cols = left.columns
+    right_cols = [c for c in right.columns if c not in left_cols or c in on]
+    lhs = left.select(
+        "*",
+        F.cos(F.radians(F.col(llat))).alias("_lcos"),
+        cell(llat, llon, explode == "left").alias("_lcell"),
+    )
+    rhs = right.select(
+        *[F.col(c).alias(f"_on_{c}") if c in on else F.col(c) for c in right_cols],
+        F.cos(F.radians(F.col(rlat))).alias("_rcos"),
+        cell(rlat, rlon, explode == "right").alias("_rcell"),
+    )
+    if hint is not None:
+        rhs = rhs.hint(hint)
+
+    # Conservative bbox, evaluated before any trig: haversine d >= R|dlat|
+    # gives the lat bound; d >= 2R*asin(sqrt(cos1*cos2)*|sin(dlon/2)|) with
+    # sin(x) >= 0.9999873*x for |x| <= 0.5 deg (0.9999874 divided by the
+    # 1.0000001 float margin) gives the lon bound, which only applies under
+    # the |dlon| < 1 deg guard -- larger dlon skips the test, it never drops.
+    dlat = F.col(rlat) - F.col(llat)
+    dlon = F.col(rlon) - F.col(llon)
+    cosprod = F.col("_lcos") * F.col("_rcos")
+    dlat_bound = math.degrees(reach_m / EARTH_RADIUS_M) * 1.0000001
+    dlon_bound2 = (math.degrees((reach_m / EARTH_RADIUS_M) / 0.9999874) * 1.0000001) ** 2
+    bbox = (F.abs(dlat) < F.lit(dlat_bound)) & (
+        (dlon * dlon * cosprod < F.lit(dlon_bound2)) | (F.abs(dlon) >= F.lit(1.0))
+    )
+    hav = F.lit(2.0 * EARTH_RADIUS_M) * F.asin(
+        F.sqrt(
+            F.pow(F.sin(F.radians(dlat) / 2.0), 2)
+            + cosprod * F.pow(F.sin(F.radians(dlon) / 2.0), 2)
+        )
+    )
+    lo, hi = band or (None, None)
+    keep = hav < F.lit(reach_m if hi is None else hi)
+    if lo is not None:
+        keep = (hav > F.lit(lo)) & keep
+    cond = F.col("_lcell") == F.col("_rcell")
+    for k in on:
+        cond = cond & (F.col(k) == F.col(f"_on_{k}"))
+    out_cols = left_cols
+    if how != "left_semi":
+        out_cols = out_cols + [c for c in right_cols if c not in on]
+    if dist_col is not None:
+        out_cols = out_cols + [hav.alias(dist_col)]
+    return lhs.join(rhs, cond & bbox & keep, how).select(*out_cols)
 
 
 def geotag_images(images: DataFrame) -> DataFrame:
@@ -80,22 +166,6 @@ def geotag_images(images: DataFrame) -> DataFrame:
     return out.select("*", "_g.lat", "_g.lon", "_g.hex_cell", "_g.s2_cell").drop("_g")
 
 
-def features_with_ring_cells(
-    features: DataFrame, radius_m: float = DEFAULT_RADIUS_M
-) -> DataFrame:
-    """Explode features to every hex cell whose points could be within
-    radius_m: cell(feature) + filled k-ring, with the ring size computed
-    PER FEATURE from its latitude (equator k=3 / 37 cells vs the |lat|=60
-    worst case k=5 / 91 cells — a ~2x cut in candidate rows)."""
-    hexc = make_hex_cell_udf(HEX_RES)
-    ring = make_hex_ring_adaptive_udf(radius_m, HEX_RES)
-    return (
-        features.withColumn("_c", hexc("lat", "lon"))
-        .withColumn("hex_cell", F.explode(ring(F.col("_c"), F.col("lat"))))
-        .drop("_c")
-    )
-
-
 def radius_join(
     images_geo: DataFrame,
     features: DataFrame,
@@ -105,74 +175,32 @@ def radius_join(
 ) -> DataFrame:
     """J1: every (image, feature) pair within radius_m meters.
 
-    images_geo must already carry (lat, lon, hex_cell) — see geotag_images.
-    Returns the joined frame with `dist_m`.
+    images_geo must carry (image_id, lat, lon); the feature coordinates
+    come back as f_lat/f_lon, plus `dist_m`.
 
     Skew handling for the shuffle path (broadcast_features=False):
     AQE skew-join splitting is on session-wide; n_salt > 1 additionally
     salts the hot-cell shuffle EXPLICITLY (north_rule): the big side gets
-    salt = hash(image_id) % n_salt, the small (ring-exploded) side is
+    salt = hash(image_id) % n_salt, the small (cell-exploded) side is
     replicated across all salts, and the equi-join key becomes
-    (hex_cell, salt) — a dense urban cell spreads over n_salt tasks.
+    (cell, salt) -- a dense urban cell spreads over n_salt tasks.
     Results are identical with/without salting (tests pin this).
     """
-    # r7: candidate cells come from the JVM covering grid (cover_cells_col
-    # — 9-15 cells per feature vs the hex k-ring's 37-91 at res 9, zero
-    # Python, ~5x smaller broadcast); the image side computes its exact
-    # cover cell as floor arithmetic instead of using the stored hex_cell
-    # as the join key (hex_cell stays untouched as a data column).
-    f = features.select(
-        F.explode(
-            cover_cells_col(F.col("lat"), F.col("lon"), radius_m)
-        ).alias("_ccell"),
-        F.col("feature_id"),
-        F.col("lat").alias("f_lat"),
-        F.col("lon").alias("f_lon"),
-        F.cos(F.radians(F.col("lat"))).alias("_f_coslat"),
-        *[
-            c
-            for c in features.columns
-            if c not in ("feature_id", "lat", "lon")
-        ],
-    )
-    keys = ["_ccell"]
-    left = images_geo.withColumn(
-        "_ccell", cover_cell_col(F.col("lat"), F.col("lon"), radius_m)
-    ).withColumn("_i_coslat", F.cos(F.radians(F.col("lat"))))
-    if broadcast_features:
-        f = F.broadcast(f)
-    elif n_salt and n_salt > 1:
-        left = left.withColumn("_salt", F.pmod(F.xxhash64("image_id"), F.lit(n_salt)))
+    f = features.withColumnsRenamed({"lat": "f_lat", "lon": "f_lon"})
+    on = []
+    if not broadcast_features and n_salt and n_salt > 1:
+        images_geo = images_geo.withColumn(
+            "_salt", F.pmod(F.xxhash64("image_id"), F.lit(n_salt))
+        )
         f = f.withColumn(
             "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1)))
         ).withColumn("_salt", F.col("_salt").cast("long"))
-        keys = ["_ccell", "_salt"]
-    joined = left.join(f, keys)
-    # r7 (guide §2.3/§3): conservative bbox prefilter evaluated before any
-    # trig in the (pushed-down) join condition, with cos(lat) hoisted to
-    # one evaluation per ROW. haversine d >= R*|dlat| gives the lat bound;
-    # d >= 2R*asin(sqrt(cos(lat1)cos(lat2))*|sin(dlon/2)|) with the
-    # sin(x) >= 0.9999874*x linearization (valid for |dlon| < 1 deg —
-    # larger dlon skips the test via the OR guard, it never drops) gives
-    # the lon bound. False keeps fall to the exact haversine below, so
-    # the pair set is unchanged; dist_m is bit-identical (same expression
-    # tree as haversine_m_col with the cos factors materialized).
-    dlat = F.col("f_lat") - F.col("lat")
-    dlon = F.col("f_lon") - F.col("lon")
-    cosprod = F.col("_i_coslat") * F.col("_f_coslat")
-    dlat_bound = math.degrees(radius_m / EARTH_RADIUS_M) * 1.0000001
-    dlon_bound2 = (math.degrees((radius_m / EARTH_RADIUS_M) / 0.9999874) * 1.0000001) ** 2
-    pre = (F.abs(dlat) < F.lit(dlat_bound)) & (
-        (dlon * dlon * cosprod < F.lit(dlon_bound2)) | (F.abs(dlon) >= F.lit(1.0))
+        on = ["_salt"]
+    out = cover_radius_join(
+        images_geo, f, ("lat", "lon"), ("f_lat", "f_lon"), radius_m,
+        on=on, hint="broadcast" if broadcast_features else None,
     )
-    dist = F.lit(2.0 * EARTH_RADIUS_M) * F.asin(
-        F.sqrt(
-            F.pow(F.sin(F.radians(dlat) / 2.0), 2)
-            + cosprod * F.pow(F.sin(F.radians(dlon) / 2.0), 2)
-        )
-    )
-    out = joined.filter(pre).withColumn("dist_m", dist).filter(F.col("dist_m") < radius_m)
-    return out.drop("_salt", "_i_coslat", "_f_coslat", "_ccell")
+    return out.drop(*on)
 
 
 def knn_join(
@@ -191,72 +219,3 @@ def knn_join(
     return pairs.withColumn("rank_k", F.row_number().over(w)).filter(
         F.col("rank_k") <= k
     )
-
-
-def categorize_matches(
-    images_geo: DataFrame,
-    features: DataFrame,
-    radius_m: float = DEFAULT_RADIUS_M,
-    id_col: str = "image_id",
-    gtfs_id_col: str = "gtfs_id_img",
-) -> DataFrame:
-    """J2+J3+J5+J6: the reference's four-way decision
-    (CompareData.java:1059-1287) as one category column:
-
-    - best candidate has matching gtfs_id, dist <= 0.5 m -> NOTHING_NEW
-    - matching gtfs_id, dist > 0.5 m                     -> MODIFY
-      (stop moved; reference re-locates it, CompareData.java:1071-1148)
-    - candidates in range but no id match                -> UPLOAD_CONFLICT
-    - nothing in range                                   -> UPLOAD_NO_CONFLICT
-
-    Priority (id-match first, then nearest) replaces the reference's
-    mutable-set precedence passes (reviseUpload/reviseNoUpload,
-    CompareData.java:410-439) with one deterministic window.
-    """
-    pairs = radius_join(images_geo, features, radius_m).withColumn(
-        "id_match",
-        F.when(
-            F.col("gtfs_id").isNotNull() & (F.col("gtfs_id") == F.col(gtfs_id_col)), 1
-        ).otherwise(0),
-    )
-    w = W.partitionBy(id_col).orderBy(
-        F.desc("id_match"), F.asc("dist_m"), F.asc("feature_id")
-    )
-    best = (
-        pairs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(id_col, "feature_id", "dist_m", "id_match")
-    )
-    out = images_geo.join(best, id_col, "left")
-    return out.withColumn(
-        "category",
-        F.when(F.col("id_match").isNull(), "UPLOAD_NO_CONFLICT")
-        .when((F.col("id_match") == 1) & (F.col("dist_m") <= ERROR_TO_ZERO_M), "NOTHING_NEW")
-        .when(F.col("id_match") == 1, "MODIFY")
-        .otherwise("UPLOAD_CONFLICT"),
-    )
-
-
-def salt_dense_cells(
-    big: DataFrame,
-    small: DataFrame,
-    cell_col: str = "hex_cell",
-    n_salt: int = 8,
-    row_key: str = "image_id",
-) -> tuple[DataFrame, DataFrame, str]:
-    """Explicit skew salting (north_rule requires it alongside AQE).
-
-    Big side: salted_cell = (cell, hash(row) % n_salt).
-    Small side: exploded to all n_salt variants.
-    Join on the composite key spreads a hot cell over n_salt tasks.
-    Returns (big', small', join_col).
-    """
-    salted_big = big.withColumn(
-        "_salt", F.pmod(F.hash(F.col(row_key)), F.lit(n_salt))
-    ).withColumn("_salted_cell", F.concat_ws("#", F.col(cell_col), F.col("_salt")))
-    salted_small = (
-        small.withColumn("_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1))))
-        .withColumn("_salted_cell", F.concat_ws("#", F.col(cell_col), F.col("_salt")))
-        .drop("_salt")
-    )
-    return salted_big.drop("_salt"), salted_small, "_salted_cell"

@@ -6,7 +6,7 @@ point (task/CompareData.java:1388-1445 -> startCompare 1324-1386 ->
 compareBusStopData 1000-1290), generalized per the north rule:
 
   images --phash_latlon--> (lat,lon) --hex/s2 cells--> tiles
-         --ring-join features, haversine<400, kNN k=5--> nearest feature
+         --cover-grid radius join, haversine<400--> nearest feature
          --id-match priority window--> 4-way category
          --SnapTable.append (atomic, with per-chunk lineage/metrics)-->
 
@@ -22,19 +22,17 @@ atomic commit as the data so there is no lost+recomputed window.
 
 from __future__ import annotations
 
-import math
 import time
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .functions.cells import cover_cell_col, cover_cells_col
-from .functions.geo import EARTH_RADIUS_M
 from .operators.spatial_join import (
     DEFAULT_K,
     DEFAULT_RADIUS_M,
     ERROR_TO_ZERO_M,
+    cover_radius_join,
     geotag_images,
 )
 from .sources.snaptable import SnapTable
@@ -56,10 +54,11 @@ def assign_images(
 
     Shuffle budget (r7 single-pass shape): ONE consumer of images_geo.
     The candidate join is a LEFT outer broadcast hash join against the
-    ring-exploded features with the radius predicate (bbox prefilter
-    first, then exact haversine) in the join condition, so images with
-    no candidate survive as a single null-candidate row — the previous
-    shape consumed images_geo twice (pairs + a final restore join),
+    cover-cell-exploded features (spatial_join.cover_radius_join) with
+    the radius predicate (bbox prefilter first, then exact haversine) in
+    the join condition, so images with no candidate survive as a single
+    null-candidate row — the previous shape consumed images_geo twice
+    (pairs + a final restore join),
     which re-ran the upstream generator/scan and paid a second 10^6-row
     join (guide §2.4: remove shuffles/passes outright). BOTH the
     nearest-by-distance head and the id-match-priority best then reduce
@@ -68,10 +67,10 @@ def assign_images(
     (id_match desc, dist, feature_id) priorities; null-candidate rows
     contribute NULL structs which min() ignores, reproducing the old
     left-join NULL semantics exactly. Payload columns (phash, caption,
-    ...) ride the same pass via first(): they fan out ~ring-size per
-    candidate map-side only — nothing crosses the wire more than once,
-    because the partial aggregate reduces to per-image rows before the
-    single exchange.
+    ...) ride the same pass via first(): they fan out per candidate
+    map-side only — nothing crosses the wire more than once, because
+    the partial aggregate reduces to per-image rows before the single
+    exchange.
 
     images_geo must already carry lat/lon/hex_cell (geotag_images) — at
     scale that is the stored table scan.
@@ -89,55 +88,23 @@ def assign_images(
         for c in ("image_id", "phash", "caption", "lat", "lon", "hex_cell", "s2_cell")
         if c in images_geo.columns
     ]
-    # r7: JVM covering-grid candidate cells (cover_cells_col — 9-15 per
-    # feature vs the hex k-ring UDF's 37-91, zero Python, ~5x smaller
-    # broadcast); the image side derives its cover cell as floor
-    # arithmetic, hex_cell remains an untouched data column.
-    f = features.select("feature_id", "lat", "lon", "gtfs_id").select(
-        F.explode(cover_cells_col(F.col("lat"), F.col("lon"), radius_m)).alias(
-            "f_cell"
-        ),
+    # the radius predicate sits inside the LEFT join condition, so an image
+    # with no candidate survives as one null-candidate row (dist_m NULL)
+    f = features.select(
         "feature_id",
         F.col("lat").alias("f_lat"),
         F.col("lon").alias("f_lon"),
-        F.cos(F.radians(F.col("lat"))).alias("_f_coslat"),
         "gtfs_id",
     )
-    if broadcast_features:
-        f = F.broadcast(f)
-    left = geo.withColumn(
-        "_icell", cover_cell_col(F.col("lat"), F.col("lon"), radius_m)
-    ).withColumn("_i_coslat", F.cos(F.radians(F.col("lat"))))
-    # radius predicate inside the LEFT join condition: bbox prefilter
-    # (same conservative bounds as radius_join) short-circuits before the
-    # trig; dist recomputed once more in the projection for survivors
-    # (bit-identical expression, f_lat NULL -> dist_m NULL for the
-    # no-candidate row).
-    dlat = F.col("f_lat") - F.col("lat")
-    dlon = F.col("f_lon") - F.col("lon")
-    cosprod = F.col("_i_coslat") * F.col("_f_coslat")
-    dlat_bound = math.degrees(radius_m / EARTH_RADIUS_M) * 1.0000001
-    dlon_bound2 = (math.degrees((radius_m / EARTH_RADIUS_M) / 0.9999874) * 1.0000001) ** 2
-    pre = (F.abs(dlat) < F.lit(dlat_bound)) & (
-        (dlon * dlon * cosprod < F.lit(dlon_bound2)) | (F.abs(dlon) >= F.lit(1.0))
-    )
-    dist = F.lit(2.0 * EARTH_RADIUS_M) * F.asin(
-        F.sqrt(
-            F.pow(F.sin(F.radians(dlat) / 2.0), 2)
-            + cosprod * F.pow(F.sin(F.radians(dlon) / 2.0), 2)
-        )
-    )
-    cond = (F.col("_icell") == F.col("f_cell")) & pre & (dist < F.lit(radius_m))
-    pairs = (
-        left.join(f, cond, "left")
-        .withColumn("dist_m", dist)
-        .withColumn(
-            "id_match",
-            F.when(
-                F.col("gtfs_id").isNotNull() & (F.col("gtfs_id") == F.col("gtfs_id_img")),
-                1,
-            ).otherwise(0),
-        )
+    pairs = cover_radius_join(
+        geo, f, ("lat", "lon"), ("f_lat", "f_lon"), radius_m,
+        how="left", hint="broadcast" if broadcast_features else None,
+    ).withColumn(
+        "id_match",
+        F.when(
+            F.col("gtfs_id").isNotNull() & (F.col("gtfs_id") == F.col("gtfs_id_img")),
+            1,
+        ).otherwise(0),
     )
     # physical note: min(struct) (like min_by and min(string)) lowers to
     # SortAggregate — HashAggregate needs fixed-width mutable buffers.

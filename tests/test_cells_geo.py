@@ -3,6 +3,8 @@
 import math
 
 import numpy as np
+import pytest
+from pyspark.sql import functions as F
 
 from gtfs_osm_sync_spark.functions import cells, geo
 
@@ -134,3 +136,77 @@ def test_hex_parent_res0_raises():
     c9 = cells.hex_cell_np(np.array([10.0]), np.array([20.0]), 9)
     with pytest.raises(ValueError, match="res-0"):
         cells.hex_parent_np(np.concatenate([c9, c0]))
+
+
+def test_vin_over_hav_bracket_contains_curvature_radii():
+    """VIN_OVER_HAV_MIN/MAX must bracket both WGS-84 curvature radii
+    (meridional M, prime-vertical N) over the mean radius at every
+    latitude: the haversine bands that skip the Vincenty kernel rest on
+    M/R and N/R lying inside [MIN, MAX]."""
+    e2 = geo.WGS84_F * (2.0 - geo.WGS84_F)
+    s2 = np.sin(np.radians(np.linspace(0.0, 90.0, 9001))) ** 2
+    m = geo.WGS84_A * (1.0 - e2) / (1.0 - e2 * s2) ** 1.5
+    n = geo.WGS84_A / np.sqrt(1.0 - e2 * s2)
+    ratios = np.concatenate([m, n]) / geo.EARTH_RADIUS_M
+    assert geo.VIN_OVER_HAV_MIN <= ratios.min()
+    assert geo.VIN_OVER_HAV_MAX >= ratios.max()
+    # the bracket is tight to ~1e-5, not a loose tolerance
+    assert ratios.min() - geo.VIN_OVER_HAV_MIN < 1e-5
+    assert geo.VIN_OVER_HAV_MAX - ratios.max() < 1e-5
+
+
+def _partners_within(rng, n, radius_m):
+    """n random (point, partner) pairs with haversine(point, partner) <
+    radius_m, |lat| <= 89 on both ends and no antimeridian crossing."""
+    lat = rng.uniform(-89.0, 89.0, 4 * n)
+    lon = rng.uniform(-179.0, 179.0, 4 * n)
+    d = radius_m * np.sqrt(rng.uniform(0.0, 1.0, 4 * n)) * 0.999999
+    brg = rng.uniform(0.0, 2.0 * np.pi, 4 * n)
+    # spherical destination point (the haversine metric's geodesic)
+    phi1, lam1, delta = np.radians(lat), np.radians(lon), d / geo.EARTH_RADIUS_M
+    phi2 = np.arcsin(
+        np.sin(phi1) * np.cos(delta) + np.cos(phi1) * np.sin(delta) * np.cos(brg)
+    )
+    lam2 = lam1 + np.arctan2(
+        np.sin(brg) * np.sin(delta) * np.cos(phi1),
+        np.cos(delta) - np.sin(phi1) * np.sin(phi2),
+    )
+    plat, plon = np.degrees(phi2), np.degrees(lam2)
+    ok = (
+        (np.abs(plat) <= 89.0)
+        & (np.abs(plon) < 180.0)
+        & (geo.haversine_m_np(lat, lon, plat, plon) < radius_m)
+    )
+    idx = np.nonzero(ok)[0][:n]
+    assert len(idx) == n
+    return lat[idx], lon[idx], plat[idx], plon[idx]
+
+
+def test_cover_cells_contain_every_partner_cell(spark):
+    """The one candidate primitive: for random (point, partner within r)
+    pairs, the partner's cover_cell_col lies in the point's
+    cover_cells_col, at every radius the engine joins with (compare's
+    70 m floor, 400 m, the 402.25 m Vincenty shell, 20 km, 30 km)."""
+    radii = [70.0, 400.0, 402.25, 20_000.0, 30_000.0]
+    rng = np.random.default_rng(20261016)
+    rows = []
+    for i, r in enumerate(radii):
+        lat, lon, plat, plon = _partners_within(rng, 400, r)
+        rows += [(i, *map(float, t)) for t in zip(lat, lon, plat, plon)]
+    df = spark.createDataFrame(rows, "ri int, lat double, lon double, plat double, plon double")
+    covered = F.coalesce(
+        *[
+            F.when(
+                F.col("ri") == i,
+                F.array_contains(
+                    cells.cover_cells_col(F.col("lat"), F.col("lon"), r),
+                    cells.cover_cell_col(F.col("plat"), F.col("plon"), r),
+                ),
+            )
+            for i, r in enumerate(radii)
+        ]
+    )
+    missed = df.filter(~covered).select("ri", "lat", "lon", "plat", "plon").collect()
+    assert not missed, f"{len(missed)} partners outside the cover, e.g. {missed[:3]}"
+    with pytest.raises(ValueError):
+        cells.cover_grid_deg(69.9)

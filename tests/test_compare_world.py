@@ -445,3 +445,20 @@ def test_hot_cell_world_conflict_probe(spark):
     assert cats["0000001"] in ("MODIFY", "NOTHING_NEW")  # the id match
     # every other stop has an id-less node within (0.5m, 400m): conflict
     assert all(v == "UPLOAD_CONFLICT" for k, v in cats.items() if k != "0000001")
+
+
+def test_conflict_at_vincenty_shell_boundary(spark):
+    """A foreign node on the stop's meridian, across the equator, at
+    Vincenty 399.999 m: haversine 402.2447 m, above 400 / 0.99442 (a
+    curvature bracket rounded the wrong way) but below the proven 400 /
+    VIN_OVER_HAV_MIN. The pair must reach the Vincenty refinement shell,
+    so the stop is UPLOAD_CONFLICT."""
+    h = 0.0018087344
+    vin = float(vincenty_m_np(-h, 20.0, h, 20.0))
+    assert 399.998 < vin < 400.0
+    stops = _mk_stops(spark, [("0000001", -h, 20.0, "S")])
+    nodes = _mk_nodes(
+        spark, [("nA", h, 20.0, {"operator": synth.COMPARE_AGENCY}, 1)]
+    )
+    r = C.compare_stops(stops, nodes, [synth.COMPARE_AGENCY], id_digits=7).collect()[0]
+    assert r["category"] == "UPLOAD_CONFLICT"

@@ -15,11 +15,13 @@ from __future__ import annotations
 import xml.etree.ElementTree as ET
 
 import pytest
+from conftest import needs_dir
 from pyspark.sql import types as T
 
 from gtfs_osm_sync_spark.sources import sinks
 
 REF = "/root/reference/Data"
+needs_ref = needs_dir(REF)
 
 MEMBER_T = T.ArrayType(
     T.StructType(
@@ -133,6 +135,7 @@ def _parse_osmchange_str(s):
     return out
 
 
+@needs_ref
 def test_k4_create_nodes_roundtrip(dummy2):
     fixture, mine = dummy2
     want = {e["id"]: e for e in fixture["create"]}
@@ -146,6 +149,7 @@ def test_k4_create_nodes_roundtrip(dummy2):
         assert g["tags"] == {k: v for k, v in e["tags"].items() if v != "none"}
 
 
+@needs_ref
 def test_k4_modify_nodes_and_relations_roundtrip(dummy2):
     fixture, mine = dummy2
     want = {(e["type"], e["id"]): e for e in fixture["modify"]}
@@ -164,6 +168,7 @@ def test_k4_modify_nodes_and_relations_roundtrip(dummy2):
         assert g["tags"] == {k: v for k, v in e["tags"].items() if v != "none"}
 
 
+@needs_ref
 def test_k4_created_relation_version_and_creator_tag(spark):
     """OSM_CHANGE_XML.txt semantics: a CREATED relation carries
     version=<temp id> and an injected creator source tag

@@ -28,6 +28,7 @@ import csv
 import textwrap
 
 import pytest
+from conftest import needs_dir
 from pyspark.sql import functions as F
 
 from gtfs_osm_sync_spark.operators import compare as C
@@ -35,6 +36,7 @@ from gtfs_osm_sync_spark.sources import gtfs as G
 from gtfs_osm_sync_spark.sources import osmxml
 
 REF = "/root/reference/Data"
+needs_ref = needs_dir(REF)
 AGENCY = "Hillsborough Area Regional Transit"
 
 
@@ -142,6 +144,7 @@ def hart_export(spark):
     return cmp, {r["stop_id"]: r.asDict() for r in exp.collect()}
 
 
+@needs_ref
 def test_hart_category_counts(hart_export):
     cmp, _ = hart_export
     got = {r["category"]: r["cnt"] for r in cmp.groupBy("category").agg(F.count("*").alias("cnt")).collect()}
@@ -154,6 +157,7 @@ def test_hart_category_counts(hart_export):
     }
 
 
+@needs_ref
 def test_hart_golden_export_parity(hart_export):
     _, mine = hart_export
     assert len(mine) == 3802  # one row per committed stop
@@ -214,6 +218,7 @@ def test_api_version_supported():
     assert osmxml.api_version_supported("<osm/>", "0.6") is False
 
 
+@needs_ref
 def test_compare_plan_all_hash_joins(hart_export):
     """The compare pipeline must plan broadcast hash joins only — no
     SortMergeJoin (stop side is small at any scale), no
@@ -226,6 +231,7 @@ def test_compare_plan_all_hash_joins(hart_export):
     assert "BroadcastHashJoin" in plan
 
 
+@needs_ref
 def test_export_osm_value_variants(hart_export):
     """K1 OSM-value exports: MODIFY rows carry the matched node's
     location/name; conflicts_only = exactly the MODIFY set."""
@@ -247,6 +253,7 @@ def test_export_osm_value_variants(hart_export):
         assert float(e["stop_lon"]) == r["final_lon"]
 
 
+@needs_ref
 def test_split_parse_matches_single_task(spark):
     """Byte-range split of ONE .osm file across multiple tasks yields the
     same elements in the same document order as the single-task parse

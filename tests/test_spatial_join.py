@@ -4,7 +4,7 @@ The oracle reimplements the reference's semantics (nearest-wins,
 (dist, feature_id) tie-break — SURVEY §4 deviations) in pandas/numpy with
 NO cell index: every (image, feature) pair is evaluated, exactly like
 CompareData.java:1016-1069's nested loop. Equality therefore proves both
-the kNN/category logic AND that the hex-cell ring prejoin is a covering.
+the kNN/category logic AND that the cover-grid prejoin is a covering.
 """
 
 import numpy as np
@@ -13,8 +13,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from gtfs_osm_sync_spark import synth
-from gtfs_osm_sync_spark.functions.geo import haversine_m_np
+from gtfs_osm_sync_spark.functions.geo import VIN_OVER_HAV_MIN, haversine_m_np, vincenty_m_np
 from gtfs_osm_sync_spark.operators import spatial_join as SJ
+from gtfs_osm_sync_spark.pipeline import assign_images
 
 N_IMAGES = 3000
 N_FEATURES = 60
@@ -116,15 +117,23 @@ def test_knn_matches_bruteforce(spark, data):
 
 
 def test_categorize_matches_bruteforce(spark, data):
+    """assign_images' four-way category and nearest feature against the
+    brute-force oracle."""
     images_geo, features = data
     got = (
-        SJ.categorize_matches(images_geo, features)
-        .select("image_id", "category")
+        assign_images(images_geo, features)
+        .select("image_id", "category", "nearest_feature_id")
         .toPandas()
         .sort_values("image_id")
         .reset_index(drop=True)
     )
     pairs = _oracle_pairs()
+    nearest = (
+        pairs.sort_values(["image_id", "dist_m", "feature_id"])
+        .groupby("image_id")
+        .head(1)[["image_id", "feature_id"]]
+        .rename(columns={"feature_id": "nearest_feature_id"})
+    )
     pairs["id_match"] = (
         pairs["gtfs_id"].notna() & (pairs["gtfs_id"] == pairs["gtfs_id_img"])
     ).astype(int)
@@ -143,7 +152,15 @@ def test_categorize_matches_bruteforce(spark, data):
     merged["category"] = np.select(
         conds, ["UPLOAD_NO_CONFLICT", "NOTHING_NEW", "MODIFY"], "UPLOAD_CONFLICT"
     )
-    want = merged[["image_id", "category"]].sort_values("image_id").reset_index(drop=True)
+    want = (
+        merged[["image_id", "category"]]
+        .merge(nearest, on="image_id", how="left")
+        .sort_values("image_id")
+        .reset_index(drop=True)
+    )
+    want["nearest_feature_id"] = want["nearest_feature_id"].astype(object).where(
+        want["nearest_feature_id"].notna(), None
+    )
     pd.testing.assert_frame_equal(got, want, check_dtype=False)
     # every branch of CompareData.java:1059-1287 must actually occur
     assert set(want["category"].unique()) == {
@@ -152,6 +169,77 @@ def test_categorize_matches_bruteforce(spark, data):
         "UPLOAD_CONFLICT",
         "UPLOAD_NO_CONFLICT",
     }
+
+
+def test_radius_join_emits_one_probe_hex_cell(spark, data):
+    """A build-side column that collides with a probe-side one is not
+    emitted: features carrying hex_cell come back with ONE hex_cell, the
+    image's."""
+    images_geo, features = data
+    out = SJ.radius_join(images_geo, features.withColumn("hex_cell", F.lit(-1).cast("long")))
+    assert out.columns.count("hex_cell") == 1
+    got = out.select("image_id", "hex_cell").distinct()
+    want = images_geo.select("image_id", "hex_cell")
+    assert got.count() > 50
+    assert got.exceptAll(want).count() == 0
+
+
+def test_builder_keeps_vincenty_pair_beyond_haversine_radius(spark):
+    """A meridional pair straddling the equator, dlat 0.18 deg: Vincenty
+    19,903 m (inside 20 km) but haversine 20,015 m. A Vincenty consumer
+    asks the builder for haversine < r / VIN_OVER_HAV_MIN and must get
+    it; the plain haversine keep set must not contain it."""
+    left = spark.createDataFrame([(1, -0.09, 20.0)], "c int, lat double, lon double")
+    right = spark.createDataFrame([(2, 0.09, 20.0)], "s int, r_lat double, r_lon double")
+    vin = float(vincenty_m_np(-0.09, 20.0, 0.09, 20.0))
+    hav = float(haversine_m_np(-0.09, 20.0, 0.09, 20.0))
+    assert vin < 20_000.0 < hav
+
+    def join(reach_m):
+        return SJ.cover_radius_join(left, right, ("lat", "lon"), ("r_lat", "r_lon"), reach_m)
+
+    got = join(20_000.0 / VIN_OVER_HAV_MIN).collect()
+    assert [(r["c"], r["s"]) for r in got] == [(1, 2)]
+    assert got[0]["dist_m"] == pytest.approx(hav, abs=1e-6)
+    assert join(20_000.0).count() == 0
+
+
+@pytest.mark.parametrize(
+    "how,explode", [("inner", "right"), ("inner", "left"), ("left_semi", "left"), ("left", "right")]
+)
+def test_builder_band_and_keys_match_bruteforce(spark, how, explode):
+    """Every builder mode against a NumPy brute force: a (lo, hi)
+    haversine band, an extra equi-key, and either side exploded."""
+    rng = np.random.default_rng(7)
+    n_l, n_r, lo, hi = 300, 200, 150.0, 900.0
+    llat, llon = rng.uniform(44.99, 45.01, n_l), rng.uniform(6.99, 7.02, n_l)
+    rlat, rlon = rng.uniform(44.99, 45.01, n_r), rng.uniform(6.99, 7.02, n_r)
+    lgrp, rgrp = rng.integers(0, 3, n_l), rng.integers(0, 3, n_r)
+    left = spark.createDataFrame(
+        [(i, int(lgrp[i]), float(llat[i]), float(llon[i])) for i in range(n_l)],
+        "a int, grp int, lat double, lon double",
+    )
+    right = spark.createDataFrame(
+        [(j, int(rgrp[j]), float(rlat[j]), float(rlon[j])) for j in range(n_r)],
+        "b int, grp int, r_lat double, r_lon double",
+    )
+    d = haversine_m_np(llat[:, None], llon[:, None], rlat[None, :], rlon[None, :])
+    hit = (d > lo) & (d < hi) & (lgrp[:, None] == rgrp[None, :])
+    out = SJ.cover_radius_join(
+        left, right, ("lat", "lon"), ("r_lat", "r_lon"), hi, band=(lo, None),
+        how=how, on=["grp"], explode=explode, dist_col=None if how == "left_semi" else "dist_m",
+    )
+    if how == "left_semi":
+        got = sorted({r["a"] for r in out.collect()})
+        assert got == sorted(np.nonzero(hit.any(axis=1))[0].tolist())
+        return
+    rows = out.select("a", "b").collect()
+    got = sorted((r["a"], r["b"]) for r in rows if r["b"] is not None)
+    assert got == sorted(zip(*map(lambda x: x.tolist(), np.nonzero(hit))))
+    assert len(got) > 100
+    if how == "left":
+        assert len({r["a"] for r in rows}) == n_l
+    assert out.columns.count("grp") == 1
 
 
 def test_knn_subset_of_radius(spark, data):

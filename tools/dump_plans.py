@@ -1,11 +1,16 @@
-"""Dump .explain("formatted") for named driver queries to plans/<tag>/.
+"""Dump .explain("formatted") for named driver queries and pipelines to
+plans/<tag>/<name>_<suffix>.txt.
 
-Usage: python tools/dump_plans.py <tag> <suffix> [query ...]
-e.g.   python tools/dump_plans.py r07 before q10_knn q09_radius_join
+Usage: python tools/dump_plans.py <tag> <suffix> [name ...]
+e.g.   python tools/dump_plans.py cover_join after assign_images compare_stops \
+           q09_radius_join q10_knn q11_match_categories \
+           q20_platform_pairing g02_vincenty_knn
 
-Plans are captured at $SPARK_GRAFT_SF_DIR (default sf0.1) on a small
-local session — plan SHAPE does not depend on input scale for these
-queries (broadcast sides are explicit hints, not size-estimated).
+A name is a driver query (driver_queries.QUERIES) or one of PIPELINES:
+assign_images and compare_stops, run on a small synthetic world (2,000
+images / stops). Queries read $SPARK_GRAFT_SF_DIR (default sf0.1) on a
+small local session — plan SHAPE does not depend on input scale here
+(broadcast sides are explicit hints, not size-estimated).
 """
 
 from __future__ import annotations
@@ -17,6 +22,28 @@ sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."
 
 from gtfs_osm_sync_spark.session import get_spark
 from gtfs_osm_sync_spark import driver_queries as dq
+from gtfs_osm_sync_spark import synth
+
+N_SYNTH = 2000
+
+
+def _assign_images(spark, sf_dir):
+    from gtfs_osm_sync_spark.pipeline import assign_images
+
+    geo = synth.generate_geo_only(spark, N_SYNTH)
+    return assign_images(geo, synth.generate_features(spark, N_SYNTH, N_SYNTH // 50))
+
+
+def _compare_stops(spark, sf_dir):
+    from gtfs_osm_sync_spark.operators.compare import compare_stops
+
+    stops, nodes = synth.generate_compare_world(spark, N_SYNTH, partitions=4)
+    return compare_stops(
+        stops, nodes, [synth.COMPARE_AGENCY], id_digits=synth._CMP_DIGITS
+    )
+
+
+PIPELINES = {"assign_images": _assign_images, "compare_stops": _compare_stops}
 
 
 def main() -> None:
@@ -34,7 +61,7 @@ def main() -> None:
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark(cpus=4, app_name="dump_plans")
     for name in names:
-        df = dq.QUERIES[name](spark, sf_dir)
+        df = (PIPELINES.get(name) or dq.QUERIES[name])(spark, sf_dir)
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
