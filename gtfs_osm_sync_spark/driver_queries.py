@@ -98,7 +98,7 @@ def _near_pairs(cust: DataFrame, supp: DataFrame, reach_m: float = RADIUS_M, **k
     engine's one radius-join builder (the J1 analog): the supplier side
     explodes to its cover-grid cells and is broadcast, customers key by
     their own cell. Supplier coordinates come back as r_lat/r_lon, the
-    haversine as dist_m; kw passes through (on=, dist_col=)."""
+    haversine as dist_m; kw passes through (on=)."""
     supp = supp.withColumnsRenamed({"lat": "r_lat", "lon": "r_lon"})
     return cover_radius_join(cust, supp, ("lat", "lon"), ("r_lat", "r_lon"), reach_m, **kw)
 
@@ -1393,7 +1393,7 @@ def g02(spark, sf_dir):
     cust = _cust_coords(spark, sf_dir)
     supp = _supp_coords(spark, sf_dir)
     # vincenty < RADIUS_M implies haversine < RADIUS_M / VIN_OVER_HAV_MIN
-    j = _near_pairs(cust, supp, RADIUS_M / VIN_OVER_HAV_MIN, dist_col=None)
+    j = _near_pairs(cust, supp, RADIUS_M / VIN_OVER_HAV_MIN)
     j = j.withColumn(
         "vdist_m", vincenty_m_udf(F.col("lat"), F.col("lon"), F.col("r_lat"), F.col("r_lon"))
     ).filter(F.col("vdist_m") < RADIUS_M)

@@ -216,7 +216,7 @@ def _probe_pairs(
     return (
         cover_radius_join(
             fn, unmatched.select(*slim_cols), ("o_lat", "o_lon"), ("lat", "lon"),
-            reach_m, hint=hint, dist_col=None,
+            reach_m, hint=hint,
         )
         .withColumn(
             "dist_m", vincenty_m_udf(F.col("o_lat"), F.col("o_lon"), F.col("lat"), F.col("lon"))
@@ -269,7 +269,7 @@ def _conflict_stop_ids(
     def near_nodes(stops: DataFrame, band: tuple, how: str) -> DataFrame:
         return cover_radius_join(
             stops, fn, ("lat", "lon"), ("o_lat", "o_lon"), hi_shell,
-            band=band, how=how, hint="shuffle_hash", explode="left", dist_col=None,
+            band=band, how=how, hint="shuffle_hash", explode="left",
         )
 
     # hav above lo_sure => vin > ERROR_TO_ZERO; below hi_sure => vin < radius

@@ -59,24 +59,25 @@ def cover_radius_join(
     on: Sequence[str] = (),
     hint: str | None = "broadcast",
     explode: str = "right",
-    dist_col: str | None = "dist_m",
 ) -> DataFrame:
     """Every (left, right) row pair whose haversine distance is < reach_m.
 
-    left_ll / right_ll name each side's (lat, lon) columns; they must not
-    collide. band=(lo, hi) narrows the keep set to lo < haversine < hi
-    (either end None = unbounded; hi <= reach_m): reach_m alone sizes the
-    bbox and the cover grid (never below cells.COVER_MIN_RADIUS_M), so
-    joins sharing a reach share the cell column. how: inner / left / left_semi. on: extra equi-keys present on
-    both sides (emitted once, the left's). hint applies to the right
-    side: "broadcast", "shuffle_hash" or None. explode names the side
-    that carries the cover cells; the other side keys by its own cell.
-    dist_col, when set, is the haversine in meters (NULL for a left
-    join's unmatched rows) -- the same expression tree as
-    functions.geo.haversine_m_col with the cos factors materialized per
-    row, so its doubles are bit-identical. Right-side columns whose name
-    collides with a left-side column (other than the keys) are dropped:
-    the left's copy is the one emitted.
+    left_ll / right_ll name each side's (lat, lon) columns. band=(lo, hi)
+    narrows the keep set to lo < haversine < hi (either end None =
+    unbounded; hi <= reach_m): reach_m alone sizes the bbox and the cover
+    grid (never below cells.COVER_MIN_RADIUS_M), so joins sharing a reach
+    share the cell column. how: inner / left / left_semi. on: extra
+    equi-keys present on both sides (emitted once, the left's). hint
+    applies to the right side: "broadcast", "shuffle_hash" or None.
+    explode names the side that carries the cover cells; the other side
+    keys by its own cell. Apart from the keys, no right-side column may
+    share a name with a left-side one (ValueError).
+
+    Output: the left columns, then (unless left_semi) the right columns
+    and dist_m, the haversine in meters (NULL for a left join's unmatched
+    rows) -- the same expression tree as functions.geo.haversine_m_col
+    with the cos factors materialized per row, so its doubles are
+    bit-identical.
     """
     if explode not in ("left", "right"):
         raise ValueError(f"explode must be 'left' or 'right' (got {explode!r})")
@@ -91,7 +92,10 @@ def cover_radius_join(
     # one projection per side (every DataFrame step is a driver-side
     # analysis pass, which a ~1 s join pays per call)
     left_cols = left.columns
-    right_cols = [c for c in right.columns if c not in left_cols or c in on]
+    clash = [c for c in right.columns if c in left_cols and c not in on]
+    if clash:
+        raise ValueError(f"right-side columns {clash} also name left-side columns")
+    right_cols = right.columns
     lhs = left.select(
         "*",
         F.cos(F.radians(F.col(llat))).alias("_lcos"),
@@ -133,9 +137,7 @@ def cover_radius_join(
         cond = cond & (F.col(k) == F.col(f"_on_{k}"))
     out_cols = left_cols
     if how != "left_semi":
-        out_cols = out_cols + [c for c in right_cols if c not in on]
-    if dist_col is not None:
-        out_cols = out_cols + [hav.alias(dist_col)]
+        out_cols = out_cols + [c for c in right_cols if c not in on] + [hav.alias("dist_m")]
     return lhs.join(rhs, cond & bbox & keep, how).select(*out_cols)
 
 
@@ -176,7 +178,9 @@ def radius_join(
     """J1: every (image, feature) pair within radius_m meters.
 
     images_geo must carry (image_id, lat, lon); the feature coordinates
-    come back as f_lat/f_lon, plus `dist_m`.
+    come back as f_lat/f_lon, plus `dist_m`. A hex_cell/s2_cell on both
+    sides comes back once, the image's; any other shared column name
+    raises ValueError.
 
     Skew handling for the shuffle path (broadcast_features=False):
     AQE skew-join splitting is on session-wide; n_salt > 1 additionally
@@ -186,7 +190,12 @@ def radius_join(
     (cell, salt) -- a dense urban cell spreads over n_salt tasks.
     Results are identical with/without salting (tests pin this).
     """
-    f = features.withColumnsRenamed({"lat": "f_lat", "lon": "f_lon"})
+    # cell ids the features carry give way to the image's own
+    derived = [
+        c for c in ("hex_cell", "s2_cell") if c in features.columns and c in images_geo.columns
+    ]
+    f = features.drop(*derived) if derived else features
+    f = f.withColumnsRenamed({"lat": "f_lat", "lon": "f_lon"})
     on = []
     if not broadcast_features and n_salt and n_salt > 1:
         images_geo = images_geo.withColumn(

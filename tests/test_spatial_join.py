@@ -172,9 +172,8 @@ def test_categorize_matches_bruteforce(spark, data):
 
 
 def test_radius_join_emits_one_probe_hex_cell(spark, data):
-    """A build-side column that collides with a probe-side one is not
-    emitted: features carrying hex_cell come back with ONE hex_cell, the
-    image's."""
+    """Features carrying the image's derived hex_cell come back with ONE
+    hex_cell, the image's."""
     images_geo, features = data
     out = SJ.radius_join(images_geo, features.withColumn("hex_cell", F.lit(-1).cast("long")))
     assert out.columns.count("hex_cell") == 1
@@ -204,6 +203,21 @@ def test_builder_keeps_vincenty_pair_beyond_haversine_radius(spark):
     assert join(20_000.0).count() == 0
 
 
+def test_builder_rejects_shared_column_names(spark):
+    """Apart from the equi-keys, a right-side column that names a
+    left-side one is an error, not a silent pick -- in particular the
+    right side's lat/lon columns."""
+    left = spark.createDataFrame([(1, 0.0, 0.0)], "c int, lat double, lon double")
+    for right, right_ll in [
+        (spark.createDataFrame([(1, 0.0, 0.0)], "c int, r_lat double, r_lon double"), ("r_lat", "r_lon")),
+        (spark.createDataFrame([(2, 0.0, 0.0)], "s int, lat double, r_lon double"), ("lat", "r_lon")),
+    ]:
+        with pytest.raises(ValueError, match="also name left-side"):
+            SJ.cover_radius_join(left, right, ("lat", "lon"), right_ll, 400.0)
+    with pytest.raises(ValueError, match="also name left-side"):
+        SJ.radius_join(left.withColumn("image_id", F.lit("i")), left.withColumn("feature_id", F.lit("f")))
+
+
 @pytest.mark.parametrize(
     "how,explode", [("inner", "right"), ("inner", "left"), ("left_semi", "left"), ("left", "right")]
 )
@@ -227,7 +241,7 @@ def test_builder_band_and_keys_match_bruteforce(spark, how, explode):
     hit = (d > lo) & (d < hi) & (lgrp[:, None] == rgrp[None, :])
     out = SJ.cover_radius_join(
         left, right, ("lat", "lon"), ("r_lat", "r_lon"), hi, band=(lo, None),
-        how=how, on=["grp"], explode=explode, dist_col=None if how == "left_semi" else "dist_m",
+        how=how, on=["grp"], explode=explode,
     )
     if how == "left_semi":
         got = sorted({r["a"] for r in out.collect()})
