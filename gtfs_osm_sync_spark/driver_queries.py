@@ -992,8 +992,9 @@ _PIP_UNION_SQL = " UNION ALL ".join(
     """,
 )
 def q13(spark, sf_dir):
-    """PIP join: engine's WKB ray-casting pandas UDF vs the oracle's
-    unrolled per-edge crossing SQL (north_rule custom operator)."""
+    """PIP join: engine's WKB ray cast (a JVM aggregate over the ring
+    edges) vs the oracle's unrolled per-edge crossing SQL (north_rule
+    custom operator)."""
     cust = _cust_coords(spark, sf_dir)
     rows = []
     for pid, ring in _PIP_POLYS.items():
@@ -2501,8 +2502,8 @@ def g16(spark, sf_dir):
     """The tile-SERVING read path, oracle-checked end to end: build the
     g14 pyramid (levels=2), store it write_pyramid (hive-partitioned by
     res, compacted), then tiles_for_bbox a fixed bbox at res 8 — the
-    level filter partition-prunes the scan and the bbox's covering
-    cells push as In(hex_cell, ...) (plan pinned in
+    level filter partition-prunes the scan and the bbox's cover
+    rectangle pushes as a hex_cell range (plan pinned in
     test_pyramid_serving_layout_pruned_fetch). Digested to one
     all-integer row (count, bit_xor of the tile cell ids — set
     sensitivity without int64 sum overflow on ~2.6e18 cell ids — image

@@ -23,7 +23,9 @@ Three index families, three jobs:
 
 3. ``grid_cell`` — a plain floor(lat/h), floor(lon/w) integer grid that is
    expressible in ANSI SQL, used by the DuckDB-oracle-checked queries so
-   the oracle can reproduce candidate generation exactly.
+   the oracle can reproduce candidate generation exactly, and by the PIP
+   join, whose polygons explode their bbox to its exact grid cells
+   (``grid_bbox_cells_col``).
 
 Radius-join candidates come from a fourth, JVM-only grid at the end of
 this module (``cover_cell_col`` / ``cover_cells_col``): a cell per point
@@ -246,6 +248,7 @@ def s2_cell_center_latlon(cell_id, level: int = 15):
 
 _HEX_RES0_EDGE_M = 1107712.591  # H3 res-0 mean edge; edge(res) = this / sqrt(7)^res
 _HEX_OFF = 1 << 27  # axial coordinate offset so packed coords are non-negative
+_HEX_R_MASK = (1 << 29) - 1  # low bits of a packed id: r + _HEX_OFF
 
 
 def hex_edge_m(res: int) -> float:
@@ -271,17 +274,54 @@ def _hex_axial(lat_deg: np.ndarray, lon_deg: np.ndarray, res: int):
     return rx.astype(np.int64), rz.astype(np.int64)
 
 
-def hex_cell_np(lat_deg, lon_deg, res: int = 9) -> np.ndarray:
-    """Packed hex cell id: (res << 58) | (q+OFF) << 29 | (r+OFF)."""
-    q, r = _hex_axial(lat_deg, lon_deg, res)
+def hex_cell_pack(res, q, r):
+    """Packed hex cell id: (res << 58) | (q+OFF) << 29 | (r+OFF). At one
+    res the id orders q-major, then r: an axial q x r rectangle is one
+    id range plus an r-bits range (hex_bbox_cover_col)."""
+    q, r = np.asarray(q, dtype=np.int64), np.asarray(r, dtype=np.int64)
     return (np.int64(res) << np.int64(58)) | ((q + _HEX_OFF) << np.int64(29)) | (r + _HEX_OFF)
+
+
+def hex_cell_np(lat_deg, lon_deg, res: int = 9) -> np.ndarray:
+    """Packed hex cell ids (hex_cell_pack) of arrays of lat/lon degrees."""
+    q, r = _hex_axial(lat_deg, lon_deg, res)
+    return hex_cell_pack(res, q, r)
+
+
+def hex_bbox_axial_range(min_lat, min_lon, max_lat, max_lon, res: int, pad: int = 2):
+    """(q_lo, q_hi, r_lo, r_hi): the axial rectangle holding the res-`res`
+    cell of every point in a lat/lon bbox (scalars or arrays of bboxes).
+
+    Axial q depends on BOTH lon and lat (q = (sqrt3/3*x - y/3)/size), so
+    the extremes come from ALL FOUR corners; the two diagonal corners
+    alone miss the (min_lat,max_lon)/(max_lat,min_lon) q extremes and drop
+    about half the interior. qf/rf are linear in (x, y), so over a
+    rectangle their extremes are at corners; `pad` covers cube rounding.
+    The rectangle over-covers the bbox: a covering, not an exact set."""
+    lats = np.stack(np.broadcast_arrays(min_lat, min_lat, max_lat, max_lat)).astype(np.float64)
+    lons = np.stack(np.broadcast_arrays(min_lon, max_lon, min_lon, max_lon)).astype(np.float64)
+    q, r = _hex_axial(lats, lons, res)
+    return q.min(axis=0) - pad, q.max(axis=0) + pad, r.min(axis=0) - pad, r.max(axis=0) + pad
+
+
+def hex_bbox_cover_col(cell, min_lat, min_lon, max_lat, max_lon, res: int) -> "F.Column":
+    """Predicate: hex `cell` lies in the bbox's hex_bbox_axial_range
+    rectangle at `res`. Two ranges with O(1) literals for any bbox size:
+    the packed-id range between the rectangle's corner cells (q-major,
+    pushed to a parquet scan as GreaterThanOrEqual/LessThanOrEqual) and
+    the r-bits range that cuts the rows of other q columns out of it."""
+    rect = hex_bbox_axial_range(min_lat, min_lon, max_lat, max_lon, res)
+    q_lo, q_hi, r_lo, r_hi = (int(v) for v in rect)
+    lo, hi = int(hex_cell_pack(res, q_lo, r_lo)), int(hex_cell_pack(res, q_hi, r_hi))
+    r_bits = cell.bitwiseAND(F.lit(_HEX_R_MASK))
+    return cell.between(lo, hi) & r_bits.between(r_lo + _HEX_OFF, r_hi + _HEX_OFF)
 
 
 def hex_cell_unpack(cell_id):
     cid = np.asarray(cell_id, dtype=np.int64)
     res = (cid >> np.int64(58)).astype(np.int64)
-    q = ((cid >> np.int64(29)) & np.int64((1 << 29) - 1)) - _HEX_OFF
-    r = (cid & np.int64((1 << 29) - 1)) - _HEX_OFF
+    q = ((cid >> np.int64(29)) & np.int64(_HEX_R_MASK)) - _HEX_OFF
+    r = (cid & np.int64(_HEX_R_MASK)) - _HEX_OFF
     return res, q, r
 
 
@@ -317,7 +357,7 @@ def hex_parent_np(cell_id) -> np.ndarray:
     lat, lon = hex_cell_center_latlon(cell_id)
     pres = (res - np.int64(1)).astype(np.int64)
     pq, pr = _hex_axial(lat, lon, pres)
-    return (pres << np.int64(58)) | ((pq + _HEX_OFF) << np.int64(29)) | (pr + _HEX_OFF)
+    return hex_cell_pack(pres, pq, pr)
 
 
 def make_hex_parent_udf():
@@ -407,10 +447,33 @@ def hex_rings_needed(radius_m: float, res: int, max_abs_lat_deg: float = 0.0) ->
 # ---------------------------------------------------------------------------
 
 
+_GRID_STRIDE = 400000  # lat-index packing stride (|lon index| < 200000 for cell_deg > 0.0009)
+
+
+def grid_index_col(deg, cell_deg: float) -> "F.Column":
+    """floor-grid row (lat) or column (lon) index of a coordinate."""
+    return F.floor(deg / F.lit(cell_deg))
+
+
 def grid_cell_col(lat, lon, cell_deg: float) -> "F.Column":
     """floor-grid cell key as a Column; same formula as grid_cell_sql."""
-    return (F.floor(lat / F.lit(cell_deg)) * F.lit(400000) + F.floor(lon / F.lit(cell_deg))).cast(
-        "long"
+    return (
+        grid_index_col(lat, cell_deg) * F.lit(_GRID_STRIDE) + grid_index_col(lon, cell_deg)
+    ).cast("long")
+
+
+def grid_bbox_cells_col(min_lat, min_lon, max_lat, max_lon, cell_deg: float) -> "F.Column":
+    """Array of the grid_cell_col cells of every point in a bbox. floor is
+    monotone, so a point with min <= v <= max has an index between the
+    bbox corners' indices: the set is exact and needs no padding."""
+    lon_lo, lon_hi = grid_index_col(min_lon, cell_deg), grid_index_col(max_lon, cell_deg)
+    return F.flatten(
+        F.transform(
+            F.sequence(grid_index_col(min_lat, cell_deg), grid_index_col(max_lat, cell_deg)),
+            lambda i: F.transform(
+                F.sequence(lon_lo, lon_hi), lambda j: (i * F.lit(_GRID_STRIDE) + j).cast("long")
+            ),
+        )
     )
 
 

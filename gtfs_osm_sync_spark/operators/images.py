@@ -511,33 +511,20 @@ def tiles_for_bbox(
 ) -> DataFrame:
     """Tile-server fetch: the tiles of ONE pyramid level that cover a
     bbox, from a write_pyramid layout. The level filter partition-prunes
-    the scan; the bbox's covering cells (operators/pip.py polygon_cells
-    — the same 4-corner axial cover the PIP join uses) push down as
-    In(hex_cell, ...) so the parquet reader row-group-skips inside the
-    level. COVERING semantics: every tile intersecting the bbox is
-    returned, plus a bounded margin of adjacent tiles from the
-    rectangular q x r cover (clients clip; exactness is the renderer's
-    job, pruning is the scan's). A bbox whose cover exceeds
-    polygon_cells' max_cells reads the whole (single-level) partition —
-    the global-band fallback, same as the PIP join's."""
-    from .pip import polygon_cells
+    the scan. The bbox's q x r axial cover rectangle
+    (cells.hex_bbox_axial_range, the rectangle pip.polygon_cells lists)
+    is one packed-id range pushed to the parquet reader as
+    GreaterThanOrEqual/LessThanOrEqual(hex_cell), so it row-group-skips
+    inside the level, plus an r-bits range applied after the scan. The
+    plan holds O(1) literals for any bbox size, so there is no cell cap
+    and no whole-level fallback. COVERING semantics: every tile
+    intersecting the bbox is returned, plus a bounded margin of adjacent
+    tiles from the rectangle (clients clip; exactness is the renderer's
+    job, pruning is the scan's)."""
+    from ..functions.cells import hex_bbox_cover_col
 
-    cover = polygon_cells(
-        pd.DataFrame(
-            [
-                {
-                    "poly_id": "bbox",
-                    "min_lat": min_lat,
-                    "min_lon": min_lon,
-                    "max_lat": max_lat,
-                    "max_lon": max_lon,
-                }
-            ]
-        ),
-        res=res,
+    return (
+        spark.read.parquet(path)
+        .filter(F.col("res") == res)
+        .filter(hex_bbox_cover_col(F.col("hex_cell"), min_lat, min_lon, max_lat, max_lon, res))
     )
-    cells = [int(c) for c in cover["hex_cell"].dropna()]
-    df = spark.read.parquet(path).filter(F.col("res") == res)
-    if cells:
-        df = df.filter(F.col("hex_cell").isin(cells))
-    return df

@@ -1,35 +1,53 @@
-"""Point-in-polygon join: vectorized ray casting over WKB polygons.
+"""Point-in-polygon join over WKB polygons, with no Python on the point side.
 
 The reference has no PIP (GO_Sync only uses bbox + radius,
-HttpRequest.java:121-163); this is a north_rule [custom] operator. Design:
+HttpRequest.java:121-163); this is a north_rule [custom] operator. The
+polygon layer is broadcast, so it is driver-sized by contract. pip_join:
 
-1. candidate pruning: polygons carry their bbox (min/max lat/lon). The
-   candidate join is images x polygons on bbox containment — expressed as
-   a range join; at scale, polygons are exploded to their covering hex
-   cells (polygon_cells below) and the join becomes a cell equi-join,
-   which Catalyst executes as a hash join instead of a theta join.
-2. exact test: one Arrow-batched pandas UDF running an even-odd
-   ray-casting crossing count in NumPy over the (already pruned) pairs.
-   Points exactly on an edge follow the half-open convention
-   (y1 > y) != (y2 > y) — deterministic, side-consistent.
+1. decode: collects the polygon frame once per call and decodes each WKB
+   outer ring into closed ``xs``/``ys`` array<double> columns (closed the
+   way point_in_ring_np closes a ring).
+2. candidates: each polygon explodes its bbox to its floor-grid cells
+   (cells.grid_bbox_cells_col at COVER_DEG, an F.sequence in the JVM);
+   each point keys by the same codegen floor expression
+   (cells.grid_cell_col). floor is monotone, so the covering is exact
+   with no padding and the equi-join plans as a BroadcastHashJoin.
+   Polygons whose bbox spans more than MAX_COVER_CELLS cells
+   (continental/global bands) take a bbox BroadcastNestedLoopJoin
+   instead, disjoint by poly_id.
+3. exact test: a bbox refine, then an even-odd ray cast (rays in +lon)
+   written as an F.aggregate over the ring's edges. It keeps
+   point_in_ring_np's half-open rule (y1 > y) != (y2 > y), so a point on
+   an edge is decided deterministically and side-consistently, and its
+   (x2-x1)*(y-y1)/(y2-y1)+x1 operation order, so both agree bit for bit.
+   The crossing is only evaluated under when(cond, ...), where y1 != y2,
+   so ANSI division never sees a zero divisor.
 
-WKB parsing happens once per polygon batch driver-side cheaply; the hot
-path ships decoded coordinate arrays, not WKB, to executors via the
-broadcast polygon frame.
+parse_wkb_polygon and point_in_ring_np are the NumPy reference (tests,
+oracles); polygon_cells is the NumPy hex cover of a bbox, the same
+rectangle tiles_for_bbox fetches.
 """
 
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.cells import _hex_axial, _HEX_OFF, make_hex_cell_udf
+from ..functions.cells import (
+    grid_bbox_cells_col,
+    grid_cell_col,
+    grid_index_col,
+    hex_bbox_axial_range,
+    hex_cell_pack,
+)
+
+COVER_DEG = 0.1  # candidate grid cell size (degrees); ~11 km, a 0.7 deg polygon spans ~64 cells
+MAX_COVER_CELLS = 10_000  # bboxes over ~10 x 10 deg take the bbox nested-loop join
 
 
 def parse_wkb_polygon(wkb: bytes) -> np.ndarray:
@@ -49,14 +67,20 @@ def parse_wkb_polygon(wkb: bytes) -> np.ndarray:
     return coords.reshape(npts, 2).copy()
 
 
+def close_ring(ring: np.ndarray) -> np.ndarray:
+    """The ring with its first vertex repeated at the end if it is open."""
+    if len(ring) and (ring[0] != ring[-1]).any():
+        return np.vstack([ring, ring[0]])
+    return ring
+
+
 def point_in_ring_np(lat: np.ndarray, lon: np.ndarray, ring: np.ndarray) -> np.ndarray:
     """Vectorized even-odd ray casting: rays cast in +lon direction.
 
     ring: (n, 2) of (lon, lat), closed or open (auto-closed).
     Returns boolean array, same shape as lat/lon.
     """
-    if len(ring) and (ring[0] != ring[-1]).any():
-        ring = np.vstack([ring, ring[0]])
+    ring = close_ring(ring)
     x = np.asarray(lon, dtype=np.float64)
     y = np.asarray(lat, dtype=np.float64)
     inside = np.zeros(x.shape, dtype=bool)
@@ -72,41 +96,70 @@ def point_in_ring_np(lat: np.ndarray, lon: np.ndarray, ring: np.ndarray) -> np.n
 
 
 def polygon_cells(poly_pdf: pd.DataFrame, res: int = 9, max_cells: int = 200_000) -> pd.DataFrame:
-    """Covering hex cells per polygon (from its bbox, padded one cell).
-
-    Used to turn the PIP candidate join into a cell equi-join. Polygons
-    whose bbox covers more than max_cells cells fall back to the bbox
-    range join (flagged with cell = NULL) — the global-band polygon case.
-    Returns (poly_id, hex_cell nullable).
+    """Covering hex cells per polygon: the q x r rectangle of its bbox
+    (cells.hex_bbox_axial_range), q-major. Polygons whose rectangle holds
+    more than max_cells cells get one row with a NULL cell (the
+    global-band marker). Returns (poly_id, hex_cell nullable Int64).
     """
-    rows: list[tuple[str, int | None]] = []
-    for _, row in poly_pdf.iterrows():
-        # axial q depends on BOTH lon and lat (q = (sqrt3/3*x - y/3)/size),
-        # so q/r extremes must come from ALL FOUR bbox corners — the two
-        # diagonal corners alone miss the (min_lat,max_lon)/(max_lat,min_lon)
-        # q extremes and drop ~half the interior cells. qf/rf are linear in
-        # (x, y), so over a rectangle their extremes ARE at corners; pad 2
-        # for cube rounding. Over-coverage (the full q x r rectangle) only
-        # adds candidates; the exact ray-cast removes them.
-        lats = np.array([row.min_lat, row.min_lat, row.max_lat, row.max_lat])
-        lons = np.array([row.min_lon, row.max_lon, row.min_lon, row.max_lon])
-        qc, rc = _hex_axial(lats, lons, res)
-        q_lo, q_hi = int(qc.min()) - 2, int(qc.max()) + 2
-        r_lo, r_hi = int(rc.min()) - 2, int(rc.max()) + 2
-        n = (q_hi - q_lo + 1) * (r_hi - r_lo + 1)
-        if n > max_cells:
-            rows.append((row.poly_id, None))
+    q_lo, q_hi, r_lo, r_hi = hex_bbox_axial_range(
+        poly_pdf["min_lat"].to_numpy(np.float64),
+        poly_pdf["min_lon"].to_numpy(np.float64),
+        poly_pdf["max_lat"].to_numpy(np.float64),
+        poly_pdf["max_lon"].to_numpy(np.float64),
+        res,
+    )
+    n = (q_hi - q_lo + 1) * (r_hi - r_lo + 1)
+    giant = n > max_cells
+    cells = [np.zeros(0, dtype=np.int64)]
+    for ql, qh, rl, rh, g in zip(q_lo, q_hi, r_lo, r_hi, giant):
+        if g:
+            cells.append(np.zeros(1, dtype=np.int64))
             continue
-        for q in range(q_lo, q_hi + 1):
-            for rr in range(r_lo, r_hi + 1):
-                cell = (res << 58) | ((q + _HEX_OFF) << 29) | (rr + _HEX_OFF)
-                rows.append((row.poly_id, int(cell)))
-    out = pd.DataFrame(rows, columns=["poly_id", "hex_cell"])
-    # a None (giant-polygon marker) must NOT upcast the int64 cell ids to
-    # float64 (2^53 mantissa silently corrupts ~2.6e18 cell ids): force
-    # the nullable Int64 extension dtype.
-    out["hex_cell"] = pd.array([r[1] for r in rows], dtype="Int64")
-    return out
+        q, r = np.meshgrid(np.arange(ql, qh + 1), np.arange(rl, rh + 1), indexing="ij")
+        cells.append(hex_cell_pack(res, q.ravel(), r.ravel()))
+    rows = np.where(giant, 1, n)
+    # the giant marker must NOT upcast the int64 cell ids to float64 (the
+    # 2^53 mantissa silently corrupts ~2.6e18 ids): nullable Int64
+    return pd.DataFrame(
+        {
+            "poly_id": np.repeat(poly_pdf["poly_id"].to_numpy(object), rows),
+            "hex_cell": pd.arrays.IntegerArray(np.concatenate(cells), np.repeat(giant, rows)),
+        }
+    )
+
+
+def _ring_frame(polygons: DataFrame) -> DataFrame:
+    """(poly_id, bbox, xs, ys): the polygon frame with each WKB outer ring
+    decoded and closed on the driver. Rings with no edge contain nothing
+    and are dropped."""
+    bbox = ["min_lat", "max_lat", "min_lon", "max_lon"]
+    rows = []
+    for p in polygons.select("poly_id", "wkb", *bbox).collect():
+        ring = close_ring(parse_wkb_polygon(bytes(p["wkb"])))
+        if len(ring) >= 2:
+            rows.append((p["poly_id"], *(p[c] for c in bbox), ring[:, 0].tolist(), ring[:, 1].tolist()))
+    ring_type = T.ArrayType(T.DoubleType(), False)
+    schema = T.StructType(
+        [polygons.schema[c] for c in ("poly_id", *bbox)]
+        + [T.StructField("xs", ring_type), T.StructField("ys", ring_type)]
+    )
+    # from pandas (Arrow), the frame is a LocalRelation: no Python worker
+    # deserializes it, unlike a list of Python rows (a Python RDD scan)
+    return polygons.sparkSession.createDataFrame(pd.DataFrame(rows, columns=schema.fieldNames()), schema)
+
+
+def _inside_ring_col(lat: Column, lon: Column) -> Column:
+    """Even-odd ray cast of (lat, lon) against the closed ring xs/ys:
+    point_in_ring_np's rule and operation order over edges i-1 -> i."""
+    xs, ys = F.col("xs"), F.col("ys")
+
+    def edge(inside: Column, i: Column) -> Column:
+        x1, y1, x2, y2 = F.get(xs, i - 1), F.get(ys, i - 1), F.get(xs, i), F.get(ys, i)
+        cross = (y1 > lat) != (y2 > lat)
+        x_at = (x2 - x1) * (lat - y1) / (y2 - y1) + x1
+        return inside != F.when(cross, lon < x_at).otherwise(F.lit(False))
+
+    return F.aggregate(F.sequence(F.lit(1), F.size(xs) - 1), F.lit(False), edge)
 
 
 def pip_join(
@@ -115,97 +168,31 @@ def pip_join(
     lat_col: str = "lat",
     lon_col: str = "lon",
     id_col: str = "image_id",
-    res: int = 7,
-    use_cells: bool = True,
-    max_cells: int = 200_000,
 ) -> DataFrame:
-    """All (point, polygon) pairs where the point lies inside the polygon.
+    """All (point, polygon) pairs where the point lies inside the polygon,
+    as (id_col, poly_id, lat_col, lon_col); the plan has no Python node.
 
-    Plan (use_cells=True, the scale path): polygons expand to their
-    covering hex cells via mapInPandas (distributed over the polygon
-    side); points compute their own cell; candidates come from a
-    BroadcastHashJoin on hex_cell — an equi-join Catalyst can hash,
-    instead of a BroadcastNestedLoopJoin over bbox theta predicates.
-    Polygons whose covering exceeds `max_cells` (continental/global bands)
-    fall back to the bbox range join, disjoint by poly_id. A bbox refine
-    filter after the cell join discards ring-overhang candidates cheaply
-    in codegen before the exact ray-cast pandas UDF runs on survivors.
-    `res` controls only the COVERING granularity (exactness comes from
-    the ray cast): coarser cells = smaller cell table, more candidate
-    overhang; res 7 (~1.2 km edge) suits city-scale polygon layers.
-
-    At a 10^5-polygon layer the cell table is the only broadcast growth;
-    if it outgrows broadcast the same equi-join shuffles on hex_cell —
-    still a hash join, never all-pairs.
+    Polygons (poly_id, wkb, min/max lat/lon) are decoded on the driver.
+    Candidates come from a BroadcastHashJoin on the floor-grid cell
+    (COVER_DEG); polygons over MAX_COVER_CELLS cells join on the bbox in
+    a BroadcastNestedLoopJoin. A bbox refine runs before the JVM ray
+    cast. See the module docstring for why the covering is exact.
     """
-    polys_cols = ["poly_id", "wkb", "min_lat", "max_lat", "min_lon", "max_lon"]
-    polys = polygons.select(*polys_cols)
-    bbox_pred = (
-        (F.col(lat_col) >= F.col("min_lat"))
-        & (F.col(lat_col) <= F.col("max_lat"))
-        & (F.col(lon_col) >= F.col("min_lon"))
-        & (F.col(lon_col) <= F.col("max_lon"))
+    lat, lon = F.col(lat_col), F.col(lon_col)
+    polys = _ring_frame(polygons)
+    box = [F.col(c) for c in ("min_lat", "min_lon", "max_lat", "max_lon")]
+    lat_lo, lon_lo, lat_hi, lon_hi = (grid_index_col(c, COVER_DEG) for c in box)
+    small = (lat_hi - lat_lo + 1) * (lon_hi - lon_lo + 1) <= MAX_COVER_CELLS
+    cover = polys.filter(small).select(
+        F.explode(grid_bbox_cells_col(*box, COVER_DEG)).alias("_cell"), *polys.columns
     )
+    keyed = points.select(id_col, lat_col, lon_col, grid_cell_col(lat, lon, COVER_DEG).alias("_cell"))
+    in_bbox = (lat >= box[0]) & (lat <= box[2]) & (lon >= box[1]) & (lon <= box[3])
+    cols = [id_col, "poly_id", lat_col, lon_col, "xs", "ys"]
+    # a filter, not a join condition: Catalyst pushes the ray cast into the
+    # join condition after the filters, so the bbox test is evaluated first
     pts = points.select(id_col, lat_col, lon_col)
-    if use_cells:
-        cell_schema = T.StructType(
-            [
-                T.StructField("poly_id", T.StringType()),
-                T.StructField("hex_cell", T.LongType()),
-            ]
-        )
-
-        def cover(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if len(pdf):
-                    yield polygon_cells(pdf, res=res, max_cells=max_cells)
-
-        pcells = polys.mapInPandas(cover, cell_schema)
-        normal = pcells.filter(F.col("hex_cell").isNotNull())
-        giant_ids = pcells.filter(F.col("hex_cell").isNull()).select("poly_id")
-
-        pts_cells = pts.withColumn(
-            "hex_cell", make_hex_cell_udf(res)(F.col(lat_col), F.col(lon_col))
-        )
-        cand_normal = (
-            pts_cells.join(F.broadcast(normal), "hex_cell")
-            .join(F.broadcast(polys), "poly_id")
-            .filter(bbox_pred)
-            .drop("hex_cell")
-        )
-        giants = polys.join(giant_ids, "poly_id", "left_semi")
-        cand_giant = pts.join(F.broadcast(giants), bbox_pred)
-        cand = cand_normal.select(id_col, lat_col, lon_col, "poly_id", "wkb").unionByName(
-            cand_giant.select(id_col, lat_col, lon_col, "poly_id", "wkb")
-        )
-    else:
-        cand = pts.join(F.broadcast(polys), bbox_pred)
-
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.StringType()),
-            T.StructField("poly_id", T.StringType()),
-            T.StructField(lat_col, T.DoubleType()),
-            T.StructField(lon_col, T.DoubleType()),
-        ]
-    )
-
-    def test_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ring_cache: dict[str, np.ndarray] = {}
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            keep = np.zeros(len(pdf), dtype=bool)
-            lat = pdf[lat_col].to_numpy(np.float64)
-            lon = pdf[lon_col].to_numpy(np.float64)
-            for pid, idx in pdf.groupby("poly_id").indices.items():
-                ring = ring_cache.get(pid)
-                if ring is None:
-                    ring = parse_wkb_polygon(pdf["wkb"].iloc[idx[0]])
-                    ring_cache[pid] = ring
-                keep[idx] = point_in_ring_np(lat[idx], lon[idx], ring)
-            sel = pdf.loc[keep, [id_col, "poly_id", lat_col, lon_col]]
-            if len(sel):
-                yield sel
-
-    return cand.mapInPandas(test_batches, out_schema)
+    giant = pts.crossJoin(F.broadcast(polys.filter(~small))).filter(in_bbox)
+    cand = keyed.join(F.broadcast(cover), "_cell").filter(in_bbox).select(*cols)
+    cand = cand.unionByName(giant.select(*cols))
+    return cand.filter(_inside_ring_col(lat, lon)).select(id_col, "poly_id", lat_col, lon_col)

@@ -3,6 +3,7 @@
 import math
 
 import numpy as np
+from pyspark.sql import functions as F
 
 from gtfs_osm_sync_spark import synth
 from gtfs_osm_sync_spark.functions.codecs import png_decode
@@ -88,10 +89,11 @@ def test_caption_and_pixel_equality_through_pipeline(spark):
 def test_pyramid_serving_layout_pruned_fetch(spark, tmp_path):
     """write_pyramid + tiles_for_bbox: the level filter reaches the scan
     as PartitionFilters (res is the hive partition column — other levels
-    are never opened) and the bbox's covering cells as In(hex_cell, …)
-    in PushedFilters; the fetch returns every level tile whose cell the
-    bbox cover names (covering semantics — a bounded margin of adjacent
-    tiles is allowed, nothing inside is missed)."""
+    are never opened) and the bbox's cover rectangle as a hex_cell range
+    (GreaterThanOrEqual/LessThanOrEqual) in PushedFilters; the fetch
+    returns every level tile whose cell the bbox cover names (covering
+    semantics — a bounded margin of adjacent tiles is allowed, nothing
+    inside is missed)."""
     images = synth.generate_images(spark, 400, partitions=2)
     pyr = IMG.mosaic_pyramid(geotag_images(images), levels=2)
     path = str(tmp_path / "pyr")
@@ -111,13 +113,61 @@ def test_pyramid_serving_layout_pruned_fetch(spark, tmp_path):
     scan = [l for l in plan.splitlines() if "PartitionFilters" in l]
     assert scan and "res" in scan[0].split("PartitionFilters")[1].split("]")[0]
     pushed = [l for l in plan.splitlines() if "PushedFilters" in l]
-    assert pushed and any("In(hex_cell" in s.split("PushedFilters")[1] for s in pushed)
+    pushed = [s.split("PushedFilters")[1] for s in pushed]
+    assert any(
+        "GreaterThanOrEqual(hex_cell" in s and "LessThanOrEqual(hex_cell" in s for s in pushed
+    )
     got_pdf = got.toPandas()
     assert set(got_pdf["res"]) <= {8}
     # completeness: the three seed tiles are all in the fetch
     assert set(cells[:3]) <= set(got_pdf["hex_cell"])
     # pruning is real: the fetch is a strict subset of the level itself
     assert 0 < len(got_pdf) < len(lvl8)
+
+
+def test_tiles_for_bbox_range_equals_cover_isin(spark, tmp_path):
+    """The range fetch returns exactly the rows of an isin over the
+    bbox's polygon_cells cover, for small, large, southern-hemisphere
+    and |lat| 60 boxes, against a level stored densely around each box."""
+    import pandas as pd
+
+    from gtfs_osm_sync_spark.functions.cells import hex_cell_np
+    from gtfs_osm_sync_spark.operators.pip import polygon_cells
+
+    res = 8
+    boxes = [
+        (10.0, 10.0, 10.004, 10.006),  # small
+        (30.0, -100.0, 30.5, -99.4),  # large
+        (-45.2, 170.1, -45.0, 170.4),  # southern hemisphere
+        (60.0, 10.0, 60.1, 10.3),  # |lat| 60
+        (-60.3, -20.4, -60.0, -20.1),  # |lat| 60, south-west
+    ]
+    cells = []
+    for min_lat, min_lon, max_lat, max_lon in boxes:
+        lat, lon = np.meshgrid(
+            np.arange(min_lat - 0.05, max_lat + 0.05, 0.002),
+            np.arange(min_lon - 0.1, max_lon + 0.1, 0.002),
+        )
+        cells.append(np.unique(hex_cell_np(lat.ravel(), lon.ravel(), res)))
+    level = pd.DataFrame({"hex_cell": np.unique(np.concatenate(cells)), "res": res})
+    path = str(tmp_path / "level")
+    spark.createDataFrame(level).write.partitionBy("res").parquet(path)
+
+    for box in boxes:
+        fetch = IMG.tiles_for_bbox(spark, path, *box, res=res)
+        got = sorted(r[0] for r in fetch.select("hex_cell").collect())
+        bbox = dict(poly_id="bbox", min_lat=box[0], min_lon=box[1], max_lat=box[2], max_lon=box[3])
+        cover = polygon_cells(pd.DataFrame([bbox]), res=res)
+        want = sorted(
+            r[0]
+            for r in spark.read.parquet(path)
+            .filter(F.col("res") == res)
+            .filter(F.col("hex_cell").isin([int(c) for c in cover["hex_cell"]]))
+            .select("hex_cell")
+            .collect()
+        )
+        assert got == want, box
+        assert 0 < len(got) < len(level), box
 
 
 def test_mosaic_pyramid_single_base_pass(spark):

@@ -7,7 +7,8 @@ e.g.   python tools/dump_plans.py cover_join after assign_images compare_stops \
            q20_platform_pairing g02_vincenty_knn
 
 A name is a driver query (driver_queries.QUERIES) or one of PIPELINES:
-assign_images and compare_stops, run on a small synthetic world (2,000
+assign_images, compare_stops and tiles_for_bbox (a bbox fetch from a
+written two-level pyramid), run on a small synthetic world (2,000
 images / stops). Queries read $SPARK_GRAFT_SF_DIR (default sf0.1) on a
 small local session — plan SHAPE does not depend on input scale here
 (broadcast sides are explicit hints, not size-estimated).
@@ -43,7 +44,26 @@ def _compare_stops(spark, sf_dir):
     )
 
 
-PIPELINES = {"assign_images": _assign_images, "compare_stops": _compare_stops}
+def _tiles_for_bbox(spark, sf_dir):
+    import atexit
+    import shutil
+    import tempfile
+
+    from gtfs_osm_sync_spark.operators.images import mosaic_pyramid, tiles_for_bbox, write_pyramid
+
+    path = tempfile.mkdtemp(prefix="dump_plans_pyr_")
+    atexit.register(shutil.rmtree, path, True)
+    write_pyramid(mosaic_pyramid(synth.generate_images_geo(spark, N_SYNTH), levels=2), path)
+    # a 0.2 deg box at the center of g16's: the parent's In list for g16's
+    # own 0.8 deg box prints as a ~1 MB plan
+    return tiles_for_bbox(spark, path, 9.9, -148.1, 10.1, -147.9, res=8)
+
+
+PIPELINES = {
+    "assign_images": _assign_images,
+    "compare_stops": _compare_stops,
+    "tiles_for_bbox": _tiles_for_bbox,
+}
 
 
 def main() -> None:
