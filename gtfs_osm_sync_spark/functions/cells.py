@@ -248,7 +248,7 @@ def s2_cell_center_latlon(cell_id, level: int = 15):
 
 _HEX_RES0_EDGE_M = 1107712.591  # H3 res-0 mean edge; edge(res) = this / sqrt(7)^res
 _HEX_OFF = 1 << 27  # axial coordinate offset so packed coords are non-negative
-_HEX_R_MASK = (1 << 29) - 1  # low bits of a packed id: r + _HEX_OFF
+_HEX_FIELD_MASK = (1 << 29) - 1  # one axial field of a packed id (q or r, + _HEX_OFF)
 
 
 def hex_edge_m(res: int) -> float:
@@ -288,7 +288,7 @@ def hex_cell_np(lat_deg, lon_deg, res: int = 9) -> np.ndarray:
     return hex_cell_pack(res, q, r)
 
 
-def hex_bbox_axial_range(min_lat, min_lon, max_lat, max_lon, res: int, pad: int = 2):
+def hex_bbox_axial_range(min_lat, min_lon, max_lat, max_lon, res: int):
     """(q_lo, q_hi, r_lo, r_hi): the axial rectangle holding the res-`res`
     cell of every point in a lat/lon bbox (scalars or arrays of bboxes).
 
@@ -296,12 +296,12 @@ def hex_bbox_axial_range(min_lat, min_lon, max_lat, max_lon, res: int, pad: int 
     the extremes come from ALL FOUR corners; the two diagonal corners
     alone miss the (min_lat,max_lon)/(max_lat,min_lon) q extremes and drop
     about half the interior. qf/rf are linear in (x, y), so over a
-    rectangle their extremes are at corners; `pad` covers cube rounding.
+    rectangle their extremes are at corners; a pad of 2 covers cube rounding.
     The rectangle over-covers the bbox: a covering, not an exact set."""
     lats = np.stack(np.broadcast_arrays(min_lat, min_lat, max_lat, max_lat)).astype(np.float64)
     lons = np.stack(np.broadcast_arrays(min_lon, max_lon, min_lon, max_lon)).astype(np.float64)
     q, r = _hex_axial(lats, lons, res)
-    return q.min(axis=0) - pad, q.max(axis=0) + pad, r.min(axis=0) - pad, r.max(axis=0) + pad
+    return q.min(axis=0) - 2, q.max(axis=0) + 2, r.min(axis=0) - 2, r.max(axis=0) + 2
 
 
 def hex_bbox_cover_col(cell, min_lat, min_lon, max_lat, max_lon, res: int) -> "F.Column":
@@ -313,15 +313,15 @@ def hex_bbox_cover_col(cell, min_lat, min_lon, max_lat, max_lon, res: int) -> "F
     rect = hex_bbox_axial_range(min_lat, min_lon, max_lat, max_lon, res)
     q_lo, q_hi, r_lo, r_hi = (int(v) for v in rect)
     lo, hi = int(hex_cell_pack(res, q_lo, r_lo)), int(hex_cell_pack(res, q_hi, r_hi))
-    r_bits = cell.bitwiseAND(F.lit(_HEX_R_MASK))
+    r_bits = cell.bitwiseAND(F.lit(_HEX_FIELD_MASK))
     return cell.between(lo, hi) & r_bits.between(r_lo + _HEX_OFF, r_hi + _HEX_OFF)
 
 
 def hex_cell_unpack(cell_id):
     cid = np.asarray(cell_id, dtype=np.int64)
     res = (cid >> np.int64(58)).astype(np.int64)
-    q = ((cid >> np.int64(29)) & np.int64(_HEX_R_MASK)) - _HEX_OFF
-    r = (cid & np.int64(_HEX_R_MASK)) - _HEX_OFF
+    q = ((cid >> np.int64(29)) & np.int64(_HEX_FIELD_MASK)) - _HEX_OFF
+    r = (cid & np.int64(_HEX_FIELD_MASK)) - _HEX_OFF
     return res, q, r
 
 
