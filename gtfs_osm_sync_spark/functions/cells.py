@@ -377,52 +377,30 @@ def hex_rings_needed_np(radius_m: float, res: int, abs_lat_deg: np.ndarray) -> n
     return np.maximum(np.ceil((plane_r + 2.0 * edge) / (1.5 * edge)).astype(np.int64), 1)
 
 
-def make_hex_ring_adaptive_udf(radius_m: float, res: int = 9, k_cap: int = 16):
-    """Pandas UDF: (cell, lat) -> covering cell array with PER-ROW ring
-    size from the row's latitude — features near the equator explode to
-    k=3 (37 cells) instead of the global worst case (k=5, 91 cells at
-    |lat| 60). The output is exactly the cells a correct covering needs,
-    nothing more. k_cap guards polar inputs (|lat| -> 90 makes the
-    equirectangular bound blow up; cap and accept over-coverage loss
-    there — the synthetic worlds stay under |lat| 62)."""
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def hex_ring_adaptive(cell: pd.Series, lat: pd.Series) -> pd.Series:
-        cid = cell.to_numpy(np.int64)
-        ks = np.minimum(
-            hex_rings_needed_np(radius_m, res, lat.to_numpy(np.float64)), k_cap
-        )
-        resv, q, r = hex_cell_unpack(cid)
-        kmax = int(ks.max()) if len(ks) else 1
-        # offsets for the max ring once; bucket rows by their distinct k
-        # (a handful of values per batch) and expand each bucket as ONE
-        # 2-D broadcast — no per-row Python loop.
-        offs = [
-            (dq, dr)
-            for dq in range(-kmax, kmax + 1)
-            for dr in range(max(-kmax, -dq - kmax), min(kmax, -dq + kmax) + 1)
-        ]
-        dqs = np.array([o[0] for o in offs], dtype=np.int64)
-        drs = np.array([o[1] for o in offs], dtype=np.int64)
-        hexdist = np.maximum(
-            np.maximum(np.abs(dqs), np.abs(drs)), np.abs(dqs + drs)
-        )
-        out = np.empty(len(cid), dtype=object)
-        for k in np.unique(ks):
-            rows = np.nonzero(ks == k)[0]
-            m = hexdist <= k
-            dq_k, dr_k = dqs[m], drs[m]
-            qn = q[rows][:, None] + dq_k[None, :]
-            rn = r[rows][:, None] + dr_k[None, :]
-            cells2d = (
-                (resv[rows][:, None].astype(np.int64) << np.int64(58))
-                | ((qn + _HEX_OFF) << np.int64(29))
-                | (rn + _HEX_OFF)
-            )
-            out[rows] = list(cells2d)
-        return pd.Series(list(out))
-
-    return hex_ring_adaptive
+def hex_cover_np(lat_deg, lon_deg, radius_m: float, res: int, max_cells: int) -> list[int] | None:
+    """Sorted res-`res` hex cells covering every point within radius_m
+    (haversine) of any input point, or None when more than max_cells
+    cells would be needed. Each input cell's filled k-ring takes k from
+    hex_rings_needed_np at the highest |lat| the radius reaches, with no
+    cap: near a pole k grows until the covering exceeds max_cells, so a
+    polar input gets None (scan everything), never a short covering."""
+    lat = np.asarray(lat_deg, dtype=np.float64)
+    lon = np.asarray(lon_deg, dtype=np.float64)
+    if not len(lat):
+        return []
+    ks = hex_rings_needed_np(radius_m, res, np.abs(lat) + math.degrees(radius_m / EARTH_RADIUS_M))
+    kmax = int(ks.max())
+    if 3 * kmax * (kmax + 1) + 1 > max_cells:
+        return None
+    # one ring per distinct input cell, at that cell's largest k
+    base, inv = np.unique(hex_cell_np(lat, lon, res), return_inverse=True)
+    kb = np.zeros(len(base), dtype=np.int64)
+    np.maximum.at(kb, inv.ravel(), ks)
+    _res, q, r = hex_cell_unpack(base)
+    dq, dr = (a.ravel() for a in np.meshgrid(np.arange(-kmax, kmax + 1), np.arange(-kmax, kmax + 1)))
+    keep = np.maximum(np.maximum(np.abs(dq), np.abs(dr)), np.abs(dq + dr))[None, :] <= kb[:, None]
+    cells = np.unique(hex_cell_pack(res, (q[:, None] + dq)[keep], (r[:, None] + dr)[keep]))
+    return None if len(cells) > max_cells else cells.tolist()
 
 
 def hex_rings_needed(radius_m: float, res: int, max_abs_lat_deg: float = 0.0) -> int:

@@ -1,96 +1,87 @@
 """Incremental stop↔node sync over a stream of OSM node updates.
 
 The reference is a one-shot batch tool: every sync re-downloads the bbox
-and re-compares EVERY stop (task/CompareData.java:1000-1290 via
-osm/HttpRequest.java bbox GET). At planet scale the node layer changes
-continuously but sparsely; re-comparing 10^6 stops because 10^2 nodes
-moved is the wrong plan. This module keeps the comparison incremental:
+and re-compares EVERY stop (task/CompareData.java:1000-1290). Here the
+comparison is incremental:
 
   node updates (micro-batches: adds / moves / retags / deletes)
     -> append-only NODE LOG (SnapTable; update_seq = stream batch id)
     -> merge-on-read CURRENT state (latest update per osm_id, deletes
-       dropped) — the same families of semantics as an Iceberg
-       merge-on-read equality-delete view
-    -> DELTA re-compare: only stops within the match radius of a changed
-       node's OLD or NEW location can change category (the id-match join
-       is Vincenty-gated by the same radius, so spatial adjacency bounds
-       ALL influence); those stops re-run the full compare_stops against
-       the merged node state, everyone else keeps their previous row
+       dropped)
+    -> DELTA re-compare: only stops within reach of a changed node's OLD
+       or NEW position can change category; those stops re-run the full
+       compare_stops against the merged node state, everyone else keeps
+       their previous row
     -> categorized RESULT LOG (SnapTable), merge-on-read latest per stop
 
 Equivalence contract (pinned in tests/test_streaming_sync.py): after any
 sequence of update batches, the merged result table is row-identical to
 a from-scratch batch compare_stops against the final node state.
 
-At cluster scale the delta path turns a full O(stops) re-compare into
-O(stops near changed nodes): the affected-stop set comes from the same
-hex-ring prejoin the batch compare uses, so a batch of k node updates
-touches O(k * ring_density) stops regardless of feed size. Both wide
-scans are bounded by LAYOUT, not post-scan filters:
+One cell system. Every compare branch keeps a node only when its
+haversine distance to the stop is < radius_m / VIN_OVER_HAV_MIN (the
+id-match prefilter and the probes), so that REACH bounds all influence.
+The two delta joins -- affected stops (stops near the changed positions)
+and the state prune (nodes near the re-compared stops) -- are
+spatial_join.cover_radius_join left-semi joins at that reach, the small
+side exploded to its cover cells and broadcast: JVM arithmetic on
+lat/lon, no Python and no stored cell column.
 
-- NODE side: hex_cell + cell_part (COARSE_RES cell) are stamped per
-  row at append time (O(batch)); open the node log as
-  `SnapTable(root, partition_by="cell_part")` and compact_node_log()
-  periodically. apply_update_batch then partition-prunes the compacted
-  BASE scan to the affected coarse rings (reading the small
-  post-compaction tail in full — sound, see read_split), semi-joins
-  the stored fine cell (prune_state_to_stop_rings), and shrinks the
-  foreign-id universe to (feed ∩ pruned-node ids).
-- FEED side (round 5): stops are static, so stamp the feed once with
-  stamp_feed_cells() and store it `partitionBy("cell_part")` COMPACTED
-  — `repartition("cell_part")` before the write so each hive partition
-  is one file (standard small-files discipline; one file per input
-  split per cell otherwise). When the gtfs frame carries cell_part,
-  apply_update_batch filters the stop scan to the changed nodes'
-  coarse rings BEFORE the affected-stop prejoin — the per-batch feed
-  BYTES drop from O(feed) to O(ring cells covered): a spatially
-  clustered batch (the realistic edit pattern) touches O(1)
-  partitions (~9% of feed bytes measured at k=100); a worldwide
-  scatter of k ~ n_partitions nodes would degenerate the filter to a
-  full scan that still pays the isin literal-set evaluation (~2.2x a
-  flat feed's compact scan on an idle-core replica), so batches whose
-  rings cover more than feed_prune_max_cells coarse cells skip the
-  filter and scan plain — the worst case is then the bare partitioned
-  layout's scan granularity (~1.3x flat), bounded, and still well
-  under the full re-compare (BENCH/BASELINE.md delta section). Pass n_feed (static per feed) so the fallback fraction
-  never re-counts the feed, and feed_ids (a cached single-column
-  gtfs_id frame) so the known-id shrink scans memory, not parquet.
-  The known-id universe itself is deliberately NEVER cell-pruned: a
-  node near a re-compared stop may carry the id of a stop far outside
-  the affected cells, and foreign-ness is a global predicate.
+Layout. The coarse hex cell `cell_part` (COARSE_RES) is the partition
+column of the stored feed (stamp_feed_cells, written
+`repartition("cell_part")` + `partitionBy("cell_part")`, one file per
+hive partition) and of a node log opened `partition_by="cell_part"` and
+compact_node_log()'d. Per batch, both wide scans filter on the coarse
+cells covering the reach (coarse_partition_cells), which the scan turns
+into PartitionFilters. A covering wider than MAX_PRUNE_CELLS prunes
+nothing worth its literal-set evaluation, so both scans then run plain.
+The node log's post-compaction tail is always read in full: a base row
+superseded after compaction has its newer version in the tail
+(read_split), and an extra current tail row is dropped again by the
+state prune.
 
-No per-batch stage shuffles anything proportional to the feed or node
-layer. The last full-width pass — the `changed` old-position lookup (3
-pruned columns of the node log probed by the k touched ids) — is a
-pushed-down In predicate for any batch up to id_pushdown_limit ids; a
-node log written under `bloom_filter_options(["osm_id"])` (SnapTable
-write_options, applied at append AND compaction) turns that predicate
-into row-group point lookups: the parquet reader skips every row group
-whose osm_id bloom filter rejects all k probed ids. Both halves are
-pinned in tests (bloom filter present in the footer; In(osm_id...) in
-PushedFilters). Measured at 4M stops /
-4.3M nodes / 8 cores (BENCH/delta_sync.json): see the delta_sync
-rows — the stored column matters (recomputing cells over the state
-per batch was NET-NEGATIVE), and wide batches fall back to the plain
-full compare (full_recompare_frac): at k=10k (24% of stops affected)
-the delta machinery has no selectivity left and loses to the full run.
+The known-id universe (which feed ids exist, for the foreign-id verdict)
+is NEVER cell-pruned: a node near a re-compared stop may carry the id of
+a stop far outside the affected cells. It is shrunk only to the feed ids
+that the pruned state's nodes carry.
+
+The touched ids' old positions come from an In(osm_id, ...) predicate
+pushed into the node-log scan for batches up to ID_PUSHDOWN_LIMIT ids;
+a log written under bloom_filter_options(["osm_id"]) answers it with
+row-group point lookups. Wider batches use a semi-join.
 
 Pruning only pays behind a LINEAGE BREAK: the delta intermediates are
 coalesce(defaultParallelism) + localCheckpoint'ed before the re-compare
-(see the inline comment in apply_update_batch) — without the break the
-compare's branches each re-execute the pruned pipeline (measured net
-SLOWER than the full re-compare), and without the coalesce the pruned
-scans' one-split-per-hive-partition shape taxes every compare stage
-with near-empty tasks.
+(see the inline comment in apply_update_batch).
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.cells import hex_cover_np, make_hex_cell_udf
+from ..functions.geo import VIN_OVER_HAV_MIN
+from ..functions.mappings import zero_pad_id
 from ..operators.compare import compare_stops
+from ..operators.spatial_join import cover_radius_join
 from ..sources.snaptable import SnapTable
+
+# partition-column resolution for the feed and node-log layout: res 1
+# cells are ~455k km^2 (edge ~420 km), ~1,100 land partitions planet-wide
+# -- coarse enough that partitionBy stays at file-count sanity, fine
+# enough that a clustered delta batch touches a handful of partitions
+COARSE_RES = 1
+# a coarse covering wider than this scans plain: a wide scatter prunes
+# nothing, and the isin literal-set evaluation over every cell cost ~2.2x
+# a flat feed's scan against ~1.3x for the bare partitioned scan
+# (BENCH/BASELINE.md delta section). A minority of the populated
+# partitions (~1,100 planet-wide).
+MAX_PRUNE_CELLS = 256
+# widest batch whose touched ids are pushed into the node-log scan as an
+# In list; a thousands-deep list bloats the plan and filters per row anyway
+ID_PUSHDOWN_LIMIT = 1000
 
 
 def current_nodes(log: DataFrame) -> DataFrame:
@@ -110,144 +101,57 @@ def current_nodes(log: DataFrame) -> DataFrame:
     )
 
 
+def _within_reach(rows: DataFrame, points: DataFrame, radius_m: float) -> DataFrame:
+    """The `rows` (lat, lon) within the compare's haversine reach of any
+    `points` (lat, lon): a left-semi cover_radius_join with the small
+    points side exploded to its cover cells and broadcast."""
+    pts = points.select(F.col("lat").alias("_p_lat"), F.col("lon").alias("_p_lon"))
+    return cover_radius_join(
+        rows, pts, ("lat", "lon"), ("_p_lat", "_p_lon"),
+        radius_m / VIN_OVER_HAV_MIN, how="left_semi",
+    )
+
+
 def affected_stop_ids(
     gtfs: DataFrame, changed: DataFrame, radius_m: float = 400.0
 ) -> DataFrame:
-    """Stops whose compare result CAN change given this batch of node
-    updates: within radius_m of a changed node's old or new position.
-    Both the conflict probe and the id-match join are distance-gated by
-    radius_m, so spatial adjacency bounds all influence. `changed` must
-    carry every (lat, lon) the node occupied before and after the batch
-    (the caller unions old-state rows with the update rows).
-
-    Hex-ring prejoin, changed side exploded (it is the SMALL side — a
-    delta batch), stop side streaming: same plan family as the batch
-    conflict probe."""
-    from ..functions.cells import make_hex_cell_udf, make_hex_ring_adaptive_udf
-    from ..functions.geo import haversine_m_col
-    from ..operators.spatial_join import HEX_RES
-
-    hexc = make_hex_cell_udf(HEX_RES)
-    ring = make_hex_ring_adaptive_udf(radius_m, HEX_RES)
-    ch = (
-        changed.select(F.col("lat").alias("n_lat"), F.col("lon").alias("n_lon"))
-        .withColumn("_c", hexc("n_lat", "n_lon"))
-        .withColumn("hex_cell", F.explode(ring(F.col("_c"), F.col("n_lat"))))
-        .drop("_c")
-    )
-    # a feed carrying a STORED hex_cell (stamped at ingest) skips the
-    # per-batch cell recompute over all stops — the same stored-column
-    # rule as prune_state_to_stop_rings
-    if "hex_cell" in gtfs.columns:
-        g = gtfs.select("gtfs_id", "lat", "lon", "hex_cell")
-    else:
-        g = gtfs.select("gtfs_id", "lat", "lon").withColumn(
-            "hex_cell", hexc("lat", "lon")
-        )
-    return (
-        g.join(F.broadcast(ch), "hex_cell")
-        .filter(
-            haversine_m_col(F.col("lat"), F.col("lon"), F.col("n_lat"), F.col("n_lon"))
-            < radius_m * 1.01
-        )
-        .select("gtfs_id")
-        .distinct()
+    """gtfs_id of every stop whose compare result CAN change given this
+    batch of node updates: within reach of a changed node position.
+    `changed` must carry every (lat, lon) the node occupied before and
+    after the batch (the caller unions old-state rows with the update
+    rows)."""
+    return _within_reach(gtfs.select("gtfs_id", "lat", "lon"), changed, radius_m).select(
+        "gtfs_id"
     )
 
 
 def prune_state_to_stop_rings(
     state: DataFrame, sub: DataFrame, radius_m: float = 400.0
 ) -> DataFrame:
-    """Restrict the merged node state to cells that can influence the
-    re-compared stop subset: every compare branch (id match, conflict
-    probe, adoption) is Vincenty-gated by radius_m, so a node whose hex
-    cell is outside every sub-stop's adaptive ring cannot change any
-    sub stop's row — the SAME ring generator the radius join uses, so
-    the covering contract is shared.
+    """The merged node state restricted to nodes within reach of a
+    re-compared stop in `sub`: every compare branch drops any other node,
+    so the prune cannot change a sub stop's row."""
+    return _within_reach(state, sub, radius_m)
 
-    The node cell must be a STORED column (`hex_cell`, stamped at log
-    append time — apply_update_batch does this) for the prune to pay:
-    the filter is then a broadcast semi-join on a scanned column (plain
-    codegen; with the log parquet partitioned/bucketed by a cell prefix
-    it becomes partition pruning and skips I/O too). Recomputing the
-    cell per batch was measured NET-NEGATIVE at 4M stops/4.3M nodes —
-    the Arrow UDF pass over the full state costs more than the shrunken
-    joins save (22.1 s vs 16.0 s unpruned; BENCH/delta_sync.json) — so
-    a state without the column is returned unpruned rather than paying
-    for a recompute."""
-    from ..functions.cells import make_hex_cell_udf, make_hex_ring_adaptive_udf
-    from ..operators.spatial_join import HEX_RES
 
-    if "hex_cell" not in state.columns:
-        return state
-    hexc = make_hex_cell_udf(HEX_RES)
-    ring = make_hex_ring_adaptive_udf(radius_m, HEX_RES)
-    cells = (
-        sub.select(
-            F.explode(ring(hexc("lat", "lon"), F.col("lat"))).alias("hex_cell")
-        ).distinct()
-    )
-    # rows with a NULL hex_cell (pre-upgrade log files that predate the
-    # stamped column — surfaced deterministically by SnapTable's
-    # mergeSchema read) are UNPRUNABLE, not out-of-ring: a semi-join
-    # would silently drop them and flip their stops' categories (ADVICE
-    # r4). Keep them unconditionally; only non-null rows are pruned.
-    prunable = state.filter(F.col("hex_cell").isNotNull())
-    unprunable = state.filter(F.col("hex_cell").isNull())
-    return prunable.join(F.broadcast(cells), "hex_cell", "left_semi").unionByName(
-        unprunable
+def coarse_partition_cells(sub: DataFrame, radius_m: float = 400.0) -> list[int] | None:
+    """The COARSE_RES hex cells covering the reach of every (lat, lon) in
+    `sub`, or None when that covering exceeds MAX_PRUNE_CELLS (the caller
+    then scans plain). `sub` is O(k * ring) rows (the changed positions
+    or the re-compared stops): they are collected and covered on the
+    driver in NumPy."""
+    pts = np.array(sub.select("lat", "lon").collect(), dtype=np.float64).reshape(-1, 2)
+    return hex_cover_np(
+        pts[:, 0], pts[:, 1], radius_m / VIN_OVER_HAV_MIN, COARSE_RES, MAX_PRUNE_CELLS
     )
 
 
-# partition-column resolution for the node log layout: res 1 cells are
-# ~455k km^2 (edge 174 m * sqrt(7)^8 ~ 420 km), ~1,100 land partitions
-# planet-wide — coarse enough that partitionBy stays at file-count sanity,
-# fine enough that a delta batch's rings touch a handful of partitions
-COARSE_RES = 1
-
-
-def coarse_partition_cells(
-    sub: DataFrame, radius_m: float = 400.0, res: int = COARSE_RES
-) -> list[int]:
-    """Driver-side bounded list of COARSE hex cells covering every
-    (lat, lon) in `sub` out to radius_m (same adaptive-ring covering
-    contract as the probe). A table written `partitionBy` this coarse
-    cell lets the delta re-compare filter on the partition column — the
-    scan itself skips every partition outside the affected rings (real
-    I/O pruning, not just a post-scan filter). Used on BOTH wide scans:
-    sub = the re-compared stops prunes the node-log base, sub = the
-    changed node positions prunes the partitioned FEED. O(k * ring)
-    values — a bounded driver collect, same contract as the bbox agg."""
-    from ..functions.cells import make_hex_cell_udf, make_hex_ring_adaptive_udf
-
-    hexc = make_hex_cell_udf(res)
-    ring = make_hex_ring_adaptive_udf(radius_m, res)
-    rows = (
-        sub.select(
-            F.explode(ring(hexc("lat", "lon"), F.col("lat"))).alias("c")
-        )
-        .distinct()
-        .collect()
-    )
-    return [r["c"] for r in rows]
-
-
-def stamp_feed_cells(gtfs: DataFrame, fine_res: int | None = None) -> DataFrame:
-    """Stamp the static feed once at ingest with its stored fine cell
-    (hex_cell — skips the per-batch cell recompute in affected_stop_ids)
-    and its coarse partition cell (cell_part). Write the result
-    `repartition("cell_part")` + `partitionBy("cell_part")` (compacted:
-    one file per hive partition) and hand the read-back frame to
-    apply_update_batch: the per-batch stop scan then partition-prunes to
-    the changed nodes' coarse rings instead of reading the whole feed
-    (round-5 layout; the feed-side mirror of the node-log layout)."""
-    from ..functions.cells import make_hex_cell_udf
-    from ..operators.spatial_join import HEX_RES
-
-    res = HEX_RES if fine_res is None else fine_res
-    return gtfs.withColumn(
-        "hex_cell", make_hex_cell_udf(res)("lat", "lon")
-    ).withColumn("cell_part", make_hex_cell_udf(COARSE_RES)("lat", "lon"))
+def stamp_feed_cells(gtfs: DataFrame) -> DataFrame:
+    """The static feed with its coarse partition cell (cell_part). Write
+    it `repartition("cell_part")` + `partitionBy("cell_part")` and hand
+    the read-back frame to apply_update_batch: the per-batch stop scan
+    then partition-prunes to the changed nodes' coarse covering."""
+    return gtfs.withColumn("cell_part", make_hex_cell_udf(COARSE_RES)("lat", "lon"))
 
 
 def compact_node_log(
@@ -275,40 +179,30 @@ def compact_node_log(
     return node_log.compact(spark, reducer=latest_rows, checkpoint=checkpoint)
 
 
-def _pruned_feed(
-    gtfs: DataFrame, changed: DataFrame, radius_m: float, max_cells: int
-) -> tuple[DataFrame, bool]:
-    """Feed scan for one delta batch: partition-pruned to the changed
-    nodes' coarse rings when the layout carries cell_part AND the ring
-    set is narrow enough to prune (<= max_cells); plain otherwise (wide
-    scatters prune nothing and the isin literal-set eval is pure cost —
-    see apply_update_batch's knob docs). Returns (feed, pruned?)."""
-    if "cell_part" not in gtfs.columns:
-        return gtfs, False
-    feed_cells = coarse_partition_cells(changed, radius_m)
-    if len(feed_cells) > max_cells:
-        return gtfs, False
-    return gtfs.filter(F.col("cell_part").isin(feed_cells)), True
+def _partition_pruned(
+    df: DataFrame, part: str | None, points: DataFrame, radius_m: float
+) -> DataFrame:
+    """df filtered to the coarse cells covering the reach of `points`
+    when df is laid out by the partition column `part` and the covering
+    is narrow enough to prune; df itself otherwise."""
+    if not part or part not in df.columns:
+        return df
+    cells = coarse_partition_cells(points, radius_m)
+    return df if cells is None else df.filter(F.col(part).isin(cells))
 
 
-def _pruned_node_state(
+def _node_state(
     spark: SparkSession, node_log: SnapTable, sub: DataFrame, radius_m: float
-) -> DataFrame | None:
-    """Merge-on-read node state with the compacted BASE scan partition-
-    pruned to the coarse cells covering sub's rings; the post-compaction
-    tail is read in full (read_split's soundness contract — a superseded
-    base row's newer version is always in the tail, and an extra
-    still-current row outside the rings is dropped again by
-    prune_state_to_stop_rings). None when the log has no partitioned
-    base yet (caller falls back to the full-scan state)."""
+) -> DataFrame:
+    """Merge-on-read node state for the re-compared stops `sub`: a
+    compacted partitioned BASE is partition-pruned to sub's coarse
+    covering and the post-compaction tail is read in full (read_split's
+    soundness contract); a log without such a base is read whole."""
     part = node_log.partition_by
-    if not part:
-        return None
-    base, tail = node_log.read_split(spark)
-    if base is None or part not in base.columns:
-        return None
-    cells = coarse_partition_cells(sub, radius_m)
-    pruned = base.filter(F.col(part).isin(cells))
+    base, tail = node_log.read_split(spark) if part else (None, None)
+    if base is None:
+        return current_nodes(node_log.read(spark))
+    pruned = _partition_pruned(base, part, sub, radius_m)
     if tail is not None:
         pruned = pruned.unionByName(tail, allowMissingColumns=True)
     return current_nodes(pruned)
@@ -324,87 +218,45 @@ def apply_update_batch(
     batch_id: int,
     run_id: str = "sync",
     radius_m: float = 400.0,
-    prune_node_cells: bool = True,
     full_recompare_frac: float | None = 0.1,
     n_feed: int | None = None,
     feed_ids: DataFrame | None = None,
-    id_pushdown_limit: int = 1000,
-    feed_prune_max_cells: int = 256,
     **compare_kw,
 ) -> int:
     """One micro-batch of the incremental sync. `updates` rows use the
     node source schema plus a boolean `deleted` tombstone column.
 
-    Steps: (1) effectively-once append to the node log, (2) compute the
-    affected-stop set from every position the touched node ids EVER held
-    in the log plus the batch's new positions (a superset of old∪new —
-    replay-safe even when a crash landed between the two appends, since
-    it never needs the pre-batch state), (3) re-run the full batch
-    compare for ONLY those stops against the merged state, (4)
-    effectively-once append of the fresh rows (stamped with update_seq)
-    to the result log. The two appends are separate atomic commits with
-    separate ledgers, so a crash between them replays only the missing
-    half. Returns the number of re-compared stops.
+    Steps: (1) effectively-once append to the node log, stamped with
+    update_seq and cell_part, (2) compute the affected stops from every
+    position the touched node ids EVER held in the log plus the batch's
+    new positions (a superset of old∪new — replay-safe even when a crash
+    landed between the two appends), (3) re-run the full batch compare
+    for ONLY those stops against the node state pruned to their reach,
+    (4) effectively-once append of the fresh rows (stamped with
+    update_seq) to the result log. The two appends are separate atomic
+    commits with separate ledgers, so a crash between them replays only
+    the missing half. Returns the number of re-compared stops.
 
-    full_recompare_frac: when a batch's affected-stop set exceeds this
-    fraction of the feed, fall back to a plain full re-compare — the
-    delta machinery (affected scan, pruning, id shrink) has no
-    selectivity left to pay for itself. Measured at 4M stops/8 cores:
-    k=100 updates -> delta vs full and k=10k fallback numbers in
-    BENCH/delta_sync.json. None disables the fallback.
-
-    Per-batch cost knobs for the 100x deployment (round 5):
-    - gtfs carrying a `cell_part` column (stamp_feed_cells + a
-      partitionBy("cell_part") feed store) partition-prunes the stop
-      scan to the changed nodes' coarse rings — O(k * ring) feed I/O
-      per batch instead of O(feed). The prune is regime-switched:
-      batches whose rings cover more than feed_prune_max_cells coarse
-      cells skip the filter and scan the feed plain — a wide scatter
-      prunes nothing but still pays the filter's literal-set
-      evaluation (measured on an idle-core replica: bare partitioned
-      scan ~1.3x a flat feed, +isin over all 534 spread-case cells
-      ~2.2x; BENCH/BASELINE.md delta section), so past the cutoff the
-      filter is pure cost. Size the knob to a minority share of the
-      layout's populated partitions (COARSE_RES=1 has ~1,100 land
-      cells planet-wide; the 4M bench world has 217).
-    - n_feed: the feed's row count (static per deployment); passing it
-      removes the per-batch gtfs.count() the fallback fraction needs.
-    - feed_ids: a cached single-column `gtfs_id` frame of the FULL
-      feed for the known-id shrink; without it the shrink re-derives
-      ids from the feed scan each batch. Never cell-pruned — a nearby
-      node may carry the id of a far-away stop, and foreign-ness is a
-      global predicate over the whole feed (see _probe_pairs).
-    - a node log opened with partition_by="cell_part" and periodically
-      compact_node_log()'d gets its base scan partition-pruned here
-      (prune_node_cells; tail read in full — see read_split).
-    - a node log opened with write_options=bloom_filter_options(
-      ["osm_id"]) gets the old-position lookup's In(osm_id, ...)
-      predicate (pushed for batches up to id_pushdown_limit ids)
-      answered by row-group bloom filters — point lookups instead of a
-      full-log column pass; id_pushdown_limit=0 keeps the semi-join
-      formulation for every batch."""
+    full_recompare_frac: when the affected stops exceed this fraction of
+    the feed, re-compare the whole feed instead: the delta machinery has
+    no selectivity left (BENCH/delta_sync.json). None disables it.
+    n_feed: the feed's row count (static per feed); passing it removes
+    the per-batch gtfs.count(). feed_ids: a cached single-column
+    `gtfs_id` frame of the FULL feed for the known-id shrink; without it
+    the shrink reads the ids from the feed scan each batch. A `gtfs`
+    with a `cell_part` column and a node log opened
+    `partition_by="cell_part"` get their scans partition-pruned (module
+    docstring)."""
     bid = int(batch_id)
     node_done = bid in node_log.processed_chunks(run_id)
     result_done = bid in result_log.processed_chunks(run_id + "_results")
     if node_done and result_done:
         return 0  # fully replayed micro-batch
 
-    from ..functions.cells import make_hex_cell_udf
-    from ..operators.spatial_join import HEX_RES
-
     upd = updates.withColumn("update_seq", F.lit(bid))
-    if "hex_cell" not in upd.columns:
-        # stamp the cells ONCE at ingest (O(batch), not O(state)): the
-        # delta prune then filters the merged state on a stored column,
-        # and cell_part is the node log's partition column when the
-        # table is opened partitioned
-        upd = upd.withColumn(
-            "hex_cell", make_hex_cell_udf(HEX_RES)("lat", "lon")
-        )
     if "cell_part" not in upd.columns:
-        upd = upd.withColumn(
-            "cell_part", make_hex_cell_udf(COARSE_RES)("lat", "lon")
-        )
+        # the node log's partition column when the table is partitioned
+        upd = upd.withColumn("cell_part", make_hex_cell_udf(COARSE_RES)("lat", "lon"))
     if not node_done:
         node_log.append(upd, checkpoint={"run_id": run_id, "chunks": [bid]})
     log_df = node_log.read(spark)
@@ -412,21 +264,12 @@ def apply_update_batch(
 
     # a node that MOVED influences its old neighborhood too: take every
     # position the touched ids ever held (superset of old∪new; extra
-    # stops just re-compare to the same answer). For a normal-sized
-    # batch the touched ids are collected (bounded: O(k), the same
-    # contract as coarse_partition_cells) and pushed into the scan as an
-    # In predicate — with the node log written under
-    # bloom_filter_options(["osm_id"]) the parquet reader then skips
-    # every row group whose bloom filter rejects all k ids (row-group
-    # point lookups instead of a full-log pass; pushdown + bloom both
-    # pinned in tests). Batches wider than id_pushdown_limit keep the
-    # semi-join (a thousands-deep In list bloats the plan and the
-    # filter evaluates per-row anyway).
+    # stops just re-compare to the same answer)
     batch_ids = [
         r["osm_id"]
-        for r in upd.select("osm_id").distinct().limit(id_pushdown_limit + 1).collect()
+        for r in upd.select("osm_id").distinct().limit(ID_PUSHDOWN_LIMIT + 1).collect()
     ]
-    if len(batch_ids) <= id_pushdown_limit:
+    if len(batch_ids) <= ID_PUSHDOWN_LIMIT:
         touched_log = log_df.filter(F.col("osm_id").isin(batch_ids))
     else:
         touched_log = log_df.join(
@@ -437,24 +280,20 @@ def apply_update_batch(
     if result_log.is_empty():
         # bootstrap: the first batch is the initial snapshot — every stop
         # needs a category (stops near NO node are legitimate
-        # UPLOAD_NO_CONFLICT rows and would otherwise never be emitted);
-        # no cell pruning here: the union of ALL stop rings is not a
-        # broadcastable set at feed scale, and the bootstrap is a full
-        # compare anyway
+        # UPLOAD_NO_CONFLICT rows and would otherwise never be emitted)
         sub = gtfs
         known = gtfs
         n_recompared = n_feed if n_feed is not None else gtfs.count()
     else:
-        # LINEAGE BREAK (round 5): every delta-path intermediate below is
-        # O(k * ring) SMALL but sits on an expensive lineage (partition-
-        # pruned scans, Arrow ring UDFs, a distinct, a merge-on-read
-        # aggregation) — and compare_stops consumes its inputs from
-        # several branches (id match, adoption, conflict probe, member
-        # resolution), so without a break each branch re-executes the
-        # whole pruned pipeline. Measured at 4M stops / 4.3M nodes /
-        # 8 cores: the un-checkpointed k=100 delta ran 183 s — SLOWER
-        # than the 70 s full re-compare it exists to avoid — vs ~15 s
-        # checkpointed (BENCH/delta_sync.json). localCheckpoint
+        # LINEAGE BREAK: every delta-path intermediate below is O(k * ring)
+        # SMALL but sits on an expensive lineage (partition-pruned scans,
+        # a merge-on-read aggregation) — and compare_stops consumes its
+        # inputs from several branches (id match, adoption, conflict
+        # probe, member resolution), so without a break each branch
+        # re-executes the whole pruned pipeline. Measured at 4M stops /
+        # 4.3M nodes / 8 cores: the un-checkpointed k=100 delta ran 183 s
+        # — SLOWER than the 70 s full re-compare it exists to avoid — vs
+        # ~15 s checkpointed (BENCH/delta_sync.json). localCheckpoint
         # materializes once on the executors (MEMORY_AND_DISK); replay
         # safety is unaffected because both SnapTable appends stay
         # idempotent per (run_id, batch id), so a lost executor just
@@ -464,25 +303,15 @@ def apply_update_batch(
         # surface one input split per surviving hive partition, so the
         # checkpointed frames would otherwise carry O(ring-cells)
         # near-empty partitions — and every one of compare's ~30 stages
-        # pays per-task scheduling plus a Python-UDF worker round-trip
-        # per partition. Measured at 1M stops / 8 cores: 87-partition
-        # sub -> 22 s compare; coalesce(8) -> 5.3 s, identical rows.
+        # pays per-task scheduling per partition. Measured at 1M stops /
+        # 8 cores: 87-partition sub -> 22 s compare; coalesce(8) -> 5.3 s,
+        # identical rows.
         par = spark.sparkContext.defaultParallelism
         changed = changed.coalesce(par).localCheckpoint()
-        # partitioned-feed layout: only partitions inside the changed
-        # nodes' coarse rings are scanned at all (PartitionFilters) —
-        # the stop side of the prejoin drops from O(feed) to
-        # O(k * ring) I/O. Sound: an affected stop is within radius_m
-        # of some changed position, so its coarse cell is in that
-        # position's covering ring. Wide scatters skip the filter
-        # (regime switch — see docstring).
-        feed, _ = _pruned_feed(gtfs, changed, radius_m, feed_prune_max_cells)
-        touched = affected_stop_ids(feed, changed, radius_m)
-        sub = (
-            feed.join(F.broadcast(touched), "gtfs_id", "left_semi")
-            .coalesce(par)
-            .localCheckpoint()
-        )
+        # an affected stop is within reach of a changed position, so its
+        # coarse cell is in that position's covering
+        feed = _partition_pruned(gtfs, "cell_part", changed, radius_m)
+        sub = _within_reach(feed, changed, radius_m).coalesce(par).localCheckpoint()
         known = gtfs
         n_recompared = sub.count()
         if full_recompare_frac is not None:
@@ -490,23 +319,17 @@ def apply_update_batch(
             if n_recompared > full_recompare_frac * nf:
                 sub = gtfs  # wide batch: the plain full compare is cheaper
                 n_recompared = nf
-        if sub is not gtfs and prune_node_cells:
-            state = _pruned_node_state(spark, node_log, sub, radius_m)
-            if state is None:
-                state = current_nodes(log_df)
+        if sub is not gtfs:
             state = (
-                prune_state_to_stop_rings(state, sub, radius_m)
+                prune_state_to_stop_rings(_node_state(spark, node_log, sub, radius_m), sub, radius_m)
                 .coalesce(par)
                 .localCheckpoint()
             )
             # shrink the foreign-ness id universe to (feed ∩ pruned-node
             # ids): verdict-identical for every node still in state, and
             # it turns the probe's anti-join build side from O(feed)
-            # into O(k * ring) — the feed-side pass here is map-only
-            # (broadcast semi-join) over feed_ids when given (a cached
-            # in-memory column), never a shuffle
-            from ..functions.mappings import zero_pad_id
-
+            # into O(k * ring) — a map-only broadcast semi-join over
+            # feed_ids when given (a cached in-memory column)
             id_digits = compare_kw.get("id_digits", 4)
             raw = F.col("tags").getItem("gtfs_id")
             node_ids = (
@@ -530,8 +353,8 @@ def apply_update_batch(
             agency_names,
             radius_m=radius_m,
             # the delta subset must judge foreign-ness against the FULL
-            # feed's id universe (shrunk to the ids that can reach the
-            # pruned state when prune_node_cells — verdict-identical)
+            # feed's id universe (shrunk to the ids the pruned state's
+            # nodes carry — verdict-identical)
             known_ids=known,
             **compare_kw,
         ).withColumn("update_seq", F.lit(bid))

@@ -7,6 +7,7 @@ the g15 composition run as an ops job:
       -> connected components -> canonical survivor (+n_dups)
       -> xxhash64 shard assign -> curated table, partitioned by shard
 
+    python tools/package.py    # builds dist/gtfs_osm_sync_spark.zip
     spark-submit --py-files dist/gtfs_osm_sync_spark.zip \
         jobs/run_curation.py --images /data/images.parquet --out /tmp/curated \
         [--n-shards 256] [--bright-lo 112] [--bright-hi 143] \

@@ -5,6 +5,7 @@ d14 composition run as an ops job:
       -> df-capped exact-Jaccard verify (>= threshold)
       -> connected components -> (doc_id, component) survivors table
 
+    python tools/package.py    # builds dist/gtfs_osm_sync_spark.zip
     spark-submit --py-files dist/gtfs_osm_sync_spark.zip \
         jobs/run_dedup.py --docs /data/documents.parquet --out /tmp/dup_cc \
         [--df-cap 8] [--threshold 0.5] [--num-hashes 12] [--band-rows 3]

@@ -1,5 +1,6 @@
 """spark-submit entry point for the flagship assign pipeline.
 
+    python tools/package.py    # builds dist/gtfs_osm_sync_spark.zip
     spark-submit --driver-memory 16g \
         --py-files dist/gtfs_osm_sync_spark.zip \
         jobs/run_flagship.py --n-images 1000000 --out /tmp/flagship_table \

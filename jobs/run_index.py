@@ -1,6 +1,7 @@
 """spark-submit entry point for the ANN index lifecycle — build a stored
 IVF (or IVF-PQ) index and optionally serve a query batch against it:
 
+    python tools/package.py    # builds dist/gtfs_osm_sync_spark.zip
     spark-submit --py-files dist/gtfs_osm_sync_spark.zip \
         jobs/run_index.py build --vecs /data/embeddings.parquet \
         --index /tables/ivf [--n-lists 0] [--pq] [--train-frac 0.05]

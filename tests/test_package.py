@@ -1,15 +1,16 @@
-"""The committed dist zip must match the source tree byte-for-byte:
-jobs/run_flagship.py ships it via spark-submit --py-files, so a stale
-zip silently runs pre-fix code. Rebuild with `python tools/package.py`
-whenever gtfs_osm_sync_spark/ changes."""
+"""tools/package.py builds the zip the jobs/*.py entry points ship with
+spark-submit --py-files: it must hold exactly the package's source files
+and be importable on its own."""
 
 from __future__ import annotations
 
+import importlib.util
 import os
+import subprocess
+import sys
 import zipfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-ZIP = os.path.join(REPO, "dist", "gtfs_osm_sync_spark.zip")
 PKG = os.path.join(REPO, "gtfs_osm_sync_spark")
 
 
@@ -26,28 +27,43 @@ def _source_files() -> dict[str, bytes]:
     return out
 
 
-def test_dist_zip_matches_source_tree():
-    assert os.path.exists(ZIP), "dist zip missing — run python tools/package.py"
+def _build(tmp_path) -> str:
+    spec = importlib.util.spec_from_file_location("package", os.path.join(REPO, "tools", "package.py"))
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod.build(str(tmp_path / "gtfs_osm_sync_spark.zip"))
+
+
+def test_dist_zip_matches_source_tree(tmp_path):
+    zpath = _build(tmp_path)
     src = _source_files()
-    with zipfile.ZipFile(ZIP) as z:
-        names = [n for n in z.namelist() if n.endswith(".py")]
-        assert sorted(names) == sorted(src), (
-            "zip file set diverges from source tree — rebuild with tools/package.py"
-        )
-        stale = [n for n in names if z.read(n) != src[n]]
-    assert not stale, f"stale zip members (rebuild with tools/package.py): {stale}"
+    with zipfile.ZipFile(zpath) as z:
+        names = z.namelist()
+        assert sorted(names) == sorted(src)
+        assert all(z.read(n) == src[n] for n in names)
+    # the zip alone imports: run from an empty dir with only the zip on
+    # the path (no checkout, no PYTHONPATH)
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    code = (
+        f"import sys; sys.path.insert(0, {zpath!r}); "
+        "import gtfs_osm_sync_spark.streaming.sync as s, gtfs_osm_sync_spark as g; "
+        "print(g.__file__)"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=tmp_path, env=env, capture_output=True, text=True
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert out.stdout.strip().startswith(zpath)
 
 
-def test_no_compiled_artifacts_tracked():
+def test_no_compiled_artifacts_tracked(tmp_path):
     """No __pycache__/.pyc may be tracked by git or shipped in the zip
     (a compiled artifact can shadow edited source under --py-files)."""
-    import subprocess
-
     tracked = subprocess.run(
         ["git", "ls-files"], cwd=REPO, capture_output=True, text=True
     ).stdout.splitlines()
     bad = [f for f in tracked if "__pycache__" in f or f.endswith(".pyc")]
     assert not bad, f"compiled artifacts tracked in git: {bad}"
-    with zipfile.ZipFile(ZIP) as z:
+    with zipfile.ZipFile(_build(tmp_path)) as z:
         zbad = [n for n in z.namelist() if "__pycache__" in n or n.endswith(".pyc")]
     assert not zbad, f"compiled artifacts in dist zip: {zbad}"

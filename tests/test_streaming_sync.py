@@ -3,10 +3,17 @@ updates must equal a from-scratch batch compare of the final state."""
 
 from __future__ import annotations
 
+import numpy as np
 import pyspark.sql.functions as F
-import pytest
 
 from gtfs_osm_sync_spark import synth
+from gtfs_osm_sync_spark.functions.cells import hex_cell_np
+from gtfs_osm_sync_spark.functions.geo import (
+    EARTH_RADIUS_M,
+    VIN_OVER_HAV_MIN,
+    haversine_m_np,
+    vincenty_m_np,
+)
 from gtfs_osm_sync_spark.operators import compare as C
 from gtfs_osm_sync_spark.sources.snaptable import SnapTable
 from gtfs_osm_sync_spark.streaming import sync as S
@@ -114,27 +121,6 @@ def test_incremental_equals_full_batch(spark, tmp_path):
     assert cats["0000003"][0] == "UPLOAD_NO_CONFLICT"    # never touched
     assert cats["0000004"][0] == "UPLOAD_CONFLICT"       # foreign neighbor b1
     assert cats["0000005"][0] == "UPLOAD_NO_CONFLICT"    # match moved away b2
-
-
-def test_incremental_noprune_equals_full_batch(spark, tmp_path):
-    """prune_node_cells=False (the pre-pruning formulation, kept for
-    state layouts without cell locality) must produce the same merged
-    results as the full batch compare — and therefore as the default
-    pruned path."""
-    stops, batches = _world(spark)
-    nlog = SnapTable(str(tmp_path / "nodes_np"))
-    rlog = SnapTable(str(tmp_path / "results_np"))
-    for bid, b in enumerate(batches):
-        S.apply_update_batch(
-            spark, b, nlog, rlog, stops, [AG], bid,
-            prune_node_cells=False, full_recompare_frac=None,
-            id_digits=synth._CMP_DIGITS,
-        )
-    merged = S.current_results(rlog, spark)
-    full = C.compare_stops(
-        stops, S.current_nodes(nlog.read(spark)), [AG], id_digits=synth._CMP_DIGITS
-    )
-    assert _sorted_rows(merged) == _sorted_rows(full)
 
 
 def test_wide_batch_falls_back_to_full_compare(spark, tmp_path):
@@ -306,95 +292,70 @@ def test_feed_partition_filter_prunes_scan(spark, tmp_path):
     assert len(kept) < stops.count()
 
 
-def test_feed_prune_regime_switch(spark, tmp_path):
-    """Batches whose ring sets cover more than feed_prune_max_cells
-    coarse cells skip the feed filter (a wide scatter prunes nothing
-    and the isin literal-set eval is pure cost); the merged results are
-    identical in both regimes."""
+def test_feed_prune_regime_switch(spark, tmp_path, monkeypatch):
+    """A batch whose coarse covering exceeds MAX_PRUNE_CELLS skips the
+    feed filter (a wide scatter prunes nothing and the isin literal-set
+    eval is pure cost); the merged results are identical in both
+    regimes."""
     stops, batches = _world(spark)
     feed = _stamped_feed(spark, tmp_path, stops, "feed_regime")
     nf = feed.count()
     results = {}
     for regime, max_cells in (("prune", 10_000), ("plain", 0)):
+        monkeypatch.setattr(S, "MAX_PRUNE_CELLS", max_cells)
         nlog = SnapTable(str(tmp_path / f"nodes_{regime}"))
         rlog = SnapTable(str(tmp_path / f"results_{regime}"))
         for bid, b in enumerate(batches):
             S.apply_update_batch(
                 spark, b, nlog, rlog, feed, [AG], bid,
                 full_recompare_frac=None, n_feed=nf,
-                feed_prune_max_cells=max_cells,
                 id_digits=synth._CMP_DIGITS,
             )
         results[regime] = _sorted_rows(S.current_results(rlog, spark))
     assert results["prune"] == results["plain"]
-    # the switch itself: narrow ring set -> filtered feed; wide cutoff
+    # the switch itself: narrow covering -> filtered feed; cutoff
     # exceeded -> the SAME frame back, no isin built at all
     changed = batches[1].select("lat", "lon")
+    monkeypatch.setattr(S, "MAX_PRUNE_CELLS", 10_000)
     cells = S.coarse_partition_cells(changed)
     assert cells
-    f_pruned, did = S._pruned_feed(feed, changed, 400.0, 10_000)
-    assert did and f_pruned is not feed
+    f_pruned = S._partition_pruned(feed, "cell_part", changed, 400.0)
+    assert f_pruned is not feed
     plan = f_pruned._jdf.queryExecution().executedPlan().toString()
     scan = [l for l in plan.splitlines() if "PartitionFilters" in l]
     assert scan and "cell_part" in scan[0].split("PartitionFilters")[1].split("]")[0]
-    f_plain, did = S._pruned_feed(feed, changed, 400.0, len(cells) - 1)
-    assert not did and f_plain is feed
-    # a flat (unpartitioned) feed never prunes regardless of the knob
-    f_flat, did = S._pruned_feed(stops, changed, 400.0, 10_000)
-    assert not did and f_flat is stops
-
-
-def test_prune_state_keeps_null_cell_rows(spark):
-    """hex_cell-NULL state rows (pre-upgrade log files surfaced by the
-    mergeSchema read) are unprunable, not out-of-ring: they must survive
-    prune_state_to_stop_rings unconditionally (ADVICE r4 medium)."""
-    stops = _stops(spark, [("0000001", 10.0, 20.0, "S1")])
-    state = spark.createDataFrame(
-        [("nNear", 10.0005, 20.0, None), ("nFarNull", 55.0, 55.0, None)],
-        "osm_id string, lat double, lon double, hex_cell long",
-    )
-    from gtfs_osm_sync_spark.functions.cells import make_hex_cell_udf
-    from gtfs_osm_sync_spark.operators.spatial_join import HEX_RES
-
-    # nNear gets a real cell; nFarNull keeps NULL (simulates an old file)
-    state = state.withColumn(
-        "hex_cell",
-        F.when(F.col("osm_id") == "nNear",
-               make_hex_cell_udf(HEX_RES)("lat", "lon")),
-    )
-    pruned = S.prune_state_to_stop_rings(state, stops)
-    ids = {r["osm_id"] for r in pruned.collect()}
-    assert ids == {"nNear", "nFarNull"}  # NULL row kept, near row kept
+    monkeypatch.setattr(S, "MAX_PRUNE_CELLS", len(cells) - 1)
+    assert S.coarse_partition_cells(changed) is None
+    assert S._partition_pruned(feed, "cell_part", changed, 400.0) is feed
+    # a flat (unpartitioned) feed never prunes
+    monkeypatch.setattr(S, "MAX_PRUNE_CELLS", 10_000)
+    assert S._partition_pruned(stops, "cell_part", changed, 400.0) is stops
 
 
 def test_mixed_schema_log_rows_not_dropped(spark, tmp_path):
-    """A node log whose early appends predate the hex_cell column must
-    still feed ALL its rows through the pruned delta path: SnapTable's
-    mergeSchema read surfaces hex_cell=NULL deterministically and the
-    prune keeps those rows (the ADVICE r4 failure scenario end-to-end)."""
+    """A node log whose early appends carry a stored hex_cell column
+    (logs written before the cell was dropped from appends) and whose
+    later ones do not: SnapTable's mergeSchema read surfaces hex_cell as
+    NULL on the new rows, and the state prune ignores the column — it
+    keeps every node within reach of a stop and drops the rest, old or
+    new."""
     log = SnapTable(str(tmp_path / "mixed"))
-    old = spark.createDataFrame(
-        [("nOld", "1", "u", "t", 10.0004, 20.0,
-          {"gtfs_id": "1", "operator": AG}, 0, 1, False, 0)],
-        UPDATE_SCHEMA + ", update_seq int",
-    )
-    log.append(old)  # pre-upgrade file: NO hex_cell column
-    new = old.selectExpr(
-        "osm_id", "version", "user", "timestamp", "lat + 60 as lat", "lon",
-        "tags", "file_idx", "elem_idx", "deleted", "1 as update_seq",
-    ).withColumn("osm_id", F.lit("nNew"))
-    from gtfs_osm_sync_spark.functions.cells import make_hex_cell_udf
-    from gtfs_osm_sync_spark.operators.spatial_join import HEX_RES
+    row = ("1", "u", "t", {"gtfs_id": "1", "operator": AG}, 0, 1, False, 0)
 
-    log.append(new.withColumn("hex_cell",
-                              make_hex_cell_udf(HEX_RES)("lat", "lon")))
+    def nodes(rows):
+        return spark.createDataFrame(
+            [(o, *row[:3], lat, lon, *row[3:]) for o, lat, lon in rows],
+            UPDATE_SCHEMA + ", update_seq int",
+        )
+
+    old = nodes([("nOldNear", 10.0004, 20.0), ("nOldFar", 70.0, 20.0)])
+    log.append(old.withColumn("hex_cell", F.lit(123).cast("long")))
+    log.append(nodes([("nNewNear", 9.9996, 20.0), ("nNewFar", 10.0, 21.0)]))
     state = S.current_nodes(log.read(spark))
     assert "hex_cell" in state.columns  # mergeSchema: deterministic
     stops = _stops(spark, [("0000001", 10.0, 20.0, "S1")])
     pruned = S.prune_state_to_stop_rings(state, stops)
-    ids = {r["osm_id"] for r in pruned.collect()}
-    # nOld (NULL cell, pre-upgrade) kept; nNew (real cell, out of ring) pruned
-    assert ids == {"nOld"}
+    assert {r["osm_id"] for r in pruned.collect()} == {"nOldNear", "nNewNear"}
 
 
 def test_stream_wrapper_midstream_restart(spark, tmp_path):
@@ -514,22 +475,116 @@ def test_bloom_filter_written_and_id_pushdown(spark, tmp_path):
     assert scans and all("osm_id" in s.split("PushedFilters")[1] for s in scans)
 
 
-def test_id_pushdown_limit_zero_equals_default(spark, tmp_path):
-    """id_pushdown_limit=0 forces the semi-join formulation of the
+def test_id_pushdown_limit_zero_equals_default(spark, tmp_path, monkeypatch):
+    """ID_PUSHDOWN_LIMIT=0 forces the semi-join formulation of the
     old-position lookup (the wide-batch path); merged results must equal
     the from-scratch batch compare, i.e. the In-pushdown fast path and
     the semi-join are interchangeable."""
+    monkeypatch.setattr(S, "ID_PUSHDOWN_LIMIT", 0)
     stops, batches = _world(spark)
     nlog = SnapTable(str(tmp_path / "nodes_sj"))
     rlog = SnapTable(str(tmp_path / "results_sj"))
     for bid, b in enumerate(batches):
         S.apply_update_batch(
             spark, b, nlog, rlog, stops, [AG], bid,
-            full_recompare_frac=None, id_pushdown_limit=0,
-            id_digits=synth._CMP_DIGITS,
+            full_recompare_frac=None, id_digits=synth._CMP_DIGITS,
         )
     merged = S.current_results(rlog, spark)
     full = C.compare_stops(
         stops, S.current_nodes(nlog.read(spark)), [AG], id_digits=synth._CMP_DIGITS
     )
     assert _sorted_rows(merged) == _sorted_rows(full)
+
+
+def _destinations(lat, lon, dist_m, bearings):
+    """Points dist_m (great-circle, EARTH_RADIUS_M) from (lat, lon)."""
+    d = dist_m / EARTH_RADIUS_M
+    p1, l1, th = np.radians(lat), np.radians(lon), np.radians(bearings)
+    p2 = np.arcsin(np.sin(p1) * np.cos(d) + np.cos(p1) * np.sin(d) * np.cos(th))
+    l2 = l1 + np.arctan2(
+        np.sin(th) * np.sin(d) * np.cos(p1), np.cos(d) - np.sin(p1) * np.sin(p2)
+    )
+    return np.degrees(p2), np.degrees(l2)
+
+
+def _near_sets(a, b, reach):
+    """Indices of `a` rows whose haversine to some `b` row is < reach."""
+    d = haversine_m_np(a[:, None, 0], a[:, None, 1], b[None, :, 0], b[None, :, 1])
+    return set(np.nonzero((d < reach).any(axis=1))[0].tolist())
+
+
+def test_delta_joins_match_brute_force(spark):
+    """affected_stop_ids and prune_state_to_stop_rings keep exactly the
+    rows a NumPy haversine < radius / VIN_OVER_HAV_MIN brute force keeps:
+    seeded clusters at |lat| <= 80 (lon inside +/-170: the cover grid
+    does not wrap at the antimeridian, a documented open limit), plus a
+    stop/node pair at Vincenty 399.999 m (haversine 402.2447 m) that
+    compare keeps and so must survive both joins."""
+    rng = np.random.default_rng(8)
+    reach = 400.0 / VIN_OVER_HAV_MIN
+    centers = np.column_stack([rng.uniform(-80, 80, 40), rng.uniform(-170, 170, 40)])
+
+    def cloud(n, spread_m):
+        c = centers[rng.integers(0, len(centers), n)]
+        lat, lon = _destinations(c[:, 0], c[:, 1], rng.uniform(0, spread_m, n),
+                                 rng.uniform(0, 360, n))
+        return np.column_stack([lat, lon])
+
+    h = 0.0018087344
+    assert 399.998 < float(vincenty_m_np(-h, 20.0, h, 20.0)) < 400.0
+    stops_ll = np.vstack([cloud(600, 1500.0), [[-h, 20.0]]])
+    nodes_ll = np.vstack([cloud(300, 1500.0), [[h, 20.0]]])
+    n_s, n_n = len(stops_ll), len(nodes_ll)
+    stops = _stops(spark, [(f"{i:07d}", float(a), float(o), "S") for i, (a, o) in enumerate(stops_ll)])
+    nodes = spark.createDataFrame(
+        [(f"n{i}", float(a), float(o)) for i, (a, o) in enumerate(nodes_ll)],
+        "osm_id string, lat double, lon double",
+    )
+
+    got = {int(r["gtfs_id"]) for r in S.affected_stop_ids(stops, nodes).collect()}
+    want = _near_sets(stops_ll, nodes_ll, reach)
+    assert got == want and n_s - 1 in got
+    assert 0 < len(want) < n_s  # the clusters give both outcomes
+
+    pruned = {int(r["osm_id"][1:]) for r in S.prune_state_to_stop_rings(nodes, stops).collect()}
+    want = _near_sets(nodes_ll, stops_ll, reach)
+    assert pruned == want and n_n - 1 in pruned
+    assert 0 < len(want) < n_n
+
+
+def test_coarse_covering_holds_circles_and_refuses_poles(spark):
+    """coarse_partition_cells covers the COARSE_RES cell of every point on
+    each input's 400 m (and reach) circle, up to |lat| 89.99; at lat
+    89.999 the ring a covering needs exceeds MAX_PRUNE_CELLS, so it
+    returns None (scan plain) instead of a capped, short covering."""
+    rng = np.random.default_rng(3)
+    lats = np.concatenate([rng.uniform(-89.99, 89.99, 12), [0.0, 60.0, 85.0, 89.9, 89.99, -89.99]])
+    lons = rng.uniform(-150, 150, len(lats))
+    bearings = np.linspace(0, 360, 720, endpoint=False)
+    for lat, lon in zip(lats, lons):
+        pt = spark.createDataFrame([(float(lat), float(lon))], "lat double, lon double")
+        cells = S.coarse_partition_cells(pt)
+        assert cells is not None, lat
+        for dist in (400.0, 400.0 / VIN_OVER_HAV_MIN * 0.99999):
+            clat, clon = _destinations(lat, lon, dist, bearings)
+            need = set(hex_cell_np(clat, clon, S.COARSE_RES).tolist())
+            assert need <= set(cells), (lat, lon, dist)
+    polar = spark.createDataFrame([(89.999, 10.0)], "lat double, lon double")
+    assert S.coarse_partition_cells(polar) is None
+
+
+def test_delta_plans_have_no_python(spark):
+    """The two delta joins are JVM-only: no ArrowEvalPython or
+    BatchEvalPython node in either plan (inputs from local pandas, as
+    tools/dump_plans.py's sync_delta target)."""
+    import pandas as pd
+
+    stops = spark.createDataFrame(
+        pd.DataFrame({"gtfs_id": ["0000001", "0000002"], "lat": [10.0, 11.0], "lon": [20.0, 21.0]})
+    )
+    nodes = spark.createDataFrame(
+        pd.DataFrame({"osm_id": ["n1", "n2"], "lat": [10.001, 40.0], "lon": [20.0, 21.0]})
+    )
+    for df in (S.affected_stop_ids(stops, nodes), S.prune_state_to_stop_rings(nodes, stops)):
+        plan = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+        assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan

@@ -19,10 +19,10 @@ layout (same scans, same counts):
                shrink over a cached feed_ids column; node state scan
                partition-pruned to the sub rings (compacted-base shape)
   delta_r4   — ROUND-4 formulation: same node-side pruning, but the
-               feed is a flat parquet with a stored hex_cell column —
-               every batch pays a full-feed scan for the affected-stop
-               prejoin, a second for sub.count + gtfs.count, and a
-               third (single-column) for the known-id shrink
+               feed is a flat parquet — every batch pays a full-feed
+               scan for the affected-stop join, a second for sub.count +
+               gtfs.count, and a third (single-column) for the known-id
+               shrink
   delta_noprune — ablation: subset compare reading the FULL node state
                (the scan stays O(|node layer|)) off the r4 feed
 
@@ -65,7 +65,7 @@ stamped = stamp_feed_cells(stops)
 # pruning, not file count).
 (stamped.repartition("cell_part").write.mode("overwrite")
  .partitionBy("cell_part").parquet({stage_dir!r} + "/stops_part"))
-# round-4 feed layout: flat parquet, stored fine cell only
+# round-4 feed layout: flat parquet
 stamped.drop("cell_part").write.mode("overwrite").parquet(
     {stage_dir!r} + "/stops_flat")
 nodes.write.mode("overwrite").parquet({stage_dir!r} + "/nodes")
@@ -79,7 +79,7 @@ from gtfs_osm_sync_spark.session import get_spark
 from gtfs_osm_sync_spark import synth
 from gtfs_osm_sync_spark.operators.compare import compare_stops
 from gtfs_osm_sync_spark.streaming.sync import (
-    _pruned_feed, affected_stop_ids, coarse_partition_cells,
+    _partition_pruned, affected_stop_ids, coarse_partition_cells,
     prune_state_to_stop_rings)
 from gtfs_osm_sync_spark.functions.mappings import zero_pad_id
 import pyspark.sql.functions as F
@@ -91,9 +91,7 @@ spark = get_spark(cpus=cpus, shuffle_partitions=cpus * 4,
                               "spark.sql.join.preferSortMergeJoin": "false"}})
 stage = {stage_dir!r}
 from gtfs_osm_sync_spark.functions.cells import make_hex_cell_udf
-from gtfs_osm_sync_spark.operators.spatial_join import HEX_RES
 from gtfs_osm_sync_spark.streaming.sync import COARSE_RES
-hexc = make_hex_cell_udf(HEX_RES)
 coarse = make_hex_cell_udf(COARSE_RES)
 
 stops_part = spark.read.parquet(stage + "/stops_part")
@@ -152,14 +150,13 @@ else:
                      .withColumn("lat", F.col("lat") + F.lit(0.0009)))
         moved = moved.localCheckpoint()
         kept = nodes.join(moved.select("osm_id"), "osm_id", "left_anti")
-        # the node LOG LAYOUT apply_update_batch prescribes: hex_cell
+        # the node LOG LAYOUT apply_update_batch prescribes: cell_part
         # stamped at append, parquet partitioned by the coarse cell and
         # COMPACTED to one file per partition — the compacted-base shape
         # read_split hands back (tail empty here; a real tail is
         # O(batch) and adds one small union)
         state_path = stage + f"/state_{{label}}"
         (kept.unionByName(moved)
-         .withColumn("hex_cell", hexc("lat", "lon"))
          .withColumn("cell_part", coarse("lat", "lon"))
          .repartition("cell_part")
          .write.mode("overwrite").partitionBy("cell_part").parquet(state_path))
@@ -172,9 +169,7 @@ else:
         k_actual = moved.count()
 
         def pruned_state(sub, path):
-            vals = coarse_partition_cells(sub)
-            st = (spark.read.parquet(path)
-                  .filter(F.col("cell_part").isin(vals)))
+            st = _partition_pruned(spark.read.parquet(path), "cell_part", sub, 400.0)
             return prune_state_to_stop_rings(st, sub)
 
         def shrink_known(ids_base, st):
@@ -194,7 +189,7 @@ else:
         # exactly where apply_update_batch does (round-5 lineage break):
         # the O(k*ring) intermediates materialize ONCE, in O(cpus)
         # partitions, instead of re-executing their pruned-scan +
-        # ring-UDF lineage from every compare branch across O(ring-cell)
+        # join lineage from every compare branch across O(ring-cell)
         # near-empty partitions — without the break the k=100 delta
         # measured 183 s vs a 70 s full re-compare (the 2026-08-17
         # 20:54 inversion), and without the coalesce the 87-partition
@@ -202,10 +197,10 @@ else:
         def delta_r5(changed=changed0, path=state_path):
             # apply_update_batch with a cell_part feed + n_feed + feed_ids:
             # the feed scan goes through the SAME regime switch the
-            # engine uses (_pruned_feed, default cutoff 256 cells) —
+            # engine uses (_partition_pruned, MAX_PRUNE_CELLS) —
             # clustered batches measure the partition-pruned scan,
             # worldwide scatters the plain partitioned scan (no isin)
-            feed, _ = _pruned_feed(stops_part, changed, 400.0, 256)
+            feed = _partition_pruned(stops_part, "cell_part", changed, 400.0)
             touched = affected_stop_ids(feed, changed)
             sub = feed.join(F.broadcast(touched), "gtfs_id",
                             "left_semi").coalesce(cpus).localCheckpoint()
@@ -214,8 +209,8 @@ else:
             return run_compare(sub, st, shrink_known(feed_ids, st))
 
         def delta_r4(changed=changed0, path=state_path):
-            # round-4 formulation: stored hex_cell but FLAT feed — the
-            # prejoin, the counts, and the known shrink each scan O(feed)
+            # round-4 formulation: FLAT feed — the affected-stop join,
+            # the counts, and the known shrink each scan O(feed)
             touched = affected_stop_ids(stops_flat, changed)
             sub = stops_flat.join(F.broadcast(touched), "gtfs_id",
                                   "left_semi").coalesce(cpus).localCheckpoint()
@@ -227,8 +222,8 @@ else:
             touched = affected_stop_ids(stops_flat, changed)
             sub = stops_flat.join(F.broadcast(touched), "gtfs_id",
                                   "left_semi").coalesce(cpus).localCheckpoint()
-            # prune_node_cells=False reads and materializes the FULL
-            # merged state (apply_update_batch's None-state branch)
+            # ablation: read and materialize the FULL merged state (no
+            # node-side prune)
             st = spark.read.parquet(path).localCheckpoint()
             return run_compare(sub, st, stops_flat)
 
@@ -240,7 +235,8 @@ else:
             "recompared_stops": row[1],
             # ring coverage: coarse cells the batch touches, vs the
             # n_state_partitions the layout has — the pruning ratio
-            "n_ring_cells": len(coarse_partition_cells(changed0)),
+            # (None: wider than MAX_PRUNE_CELLS, both scans run plain)
+            "n_ring_cells": len(coarse_partition_cells(changed0) or []) or None,
             "delta_r5_sec": timed(delta_r5, trials=2),
             "delta_r4_sec": timed(delta_r4, trials=2),
             "delta_noprune_sec": timed(delta_noprune, trials=2),

@@ -615,12 +615,13 @@ def _delta_sync_section() -> str:
 
 k nodes move ~100 m; the delta re-compare touches only stops within the
 400 m ring of a moved node's old/new position. Feed and node log both
-use the layout apply_update_batch prescribes — hex_cell stamped per row
-at append, parquet partitioned by the COARSE_RES
-({npart}-partition) cell and COMPACTED to one
+use the layout apply_update_batch prescribes — parquet partitioned by
+the COARSE_RES ({npart}-partition) cell and COMPACTED to one
 file per partition — so the delta scan partition-prunes both sides to
-the affected rings (coarse_partition_cells), then semi-joins the stored
-fine cell (prune_state_to_stop_rings), with the foreign-id universe
+the affected coarse covering (coarse_partition_cells), then keeps the
+nodes within reach of a re-compared stop (prune_state_to_stop_rings;
+runs before the cover-grid delta joins semi-joined a stored fine
+hex_cell instead), with the foreign-id universe
 shrunk to (feed ∩ pruned-node ids). `r4-feed` is the same node-side
 pruning over a FLAT feed (the round-4 formulation: every batch pays
 full-feed scans for the prejoin, the counts, and the known-id shrink);
@@ -641,8 +642,8 @@ adversarial) covers {k1.get('n_ring_cells', '?')} ring cells against
 paying its own literal-set evaluation (same-JVM idle-core replica: bare
 partitioned scan ~1.3x flat, +isin(all cells) ~2.2x flat; measured
 in-bench ~1.6x before the switch, 22.46 s vs 14.13 s) —
-apply_update_batch therefore AUTO-SWITCHES past feed_prune_max_cells
-(default 256 cells) to a plain scan of the partitioned layout, measured
+apply_update_batch therefore AUTO-SWITCHES past MAX_PRUNE_CELLS
+(256 cells) to a plain scan of the partitioned layout, measured
 at parity with the flat feed ({dsec(k1)} s vs {k1.get('delta_r4_sec')} s r4-flat) and
 {round(d['full_sec'] / dsec(k1), 1)}x under the full re-compare. At
 k=10k — {round(100 * d['k10000']['recompared_stops'] / d['n_stops'])}% of the feed
@@ -658,7 +659,7 @@ operational disciplines are: cluster batches spatially where possible
 (OSM edits come that way), compact the layout, and let the fallback
 bound the wide tail. The spread-case isin tax is engine policy, not an
 operator caveat: apply_update_batch skips the feed filter when the
-ring set exceeds feed_prune_max_cells (default 256) — regime switch
+coarse covering exceeds MAX_PRUNE_CELLS (256) — regime switch
 pinned in test_feed_prune_regime_switch, measured above at flat-feed
 parity.
 

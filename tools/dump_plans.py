@@ -9,7 +9,10 @@ e.g.   python tools/dump_plans.py cover_join after assign_images compare_stops \
 A name is a driver query (driver_queries.QUERIES) or one of PIPELINES:
 assign_images, compare_stops and tiles_for_bbox (a bbox fetch from a
 written two-level pyramid), run on a small synthetic world (2,000
-images / stops). Queries read $SPARK_GRAFT_SF_DIR (default sf0.1) on a
+images / stops), and sync_delta: the incremental sync's two delta joins
+(streaming.sync.affected_stop_ids and prune_state_to_stop_rings) on
+local pandas input, written as sync_delta_affected_<suffix>.txt and
+sync_delta_prune_<suffix>.txt. Queries read $SPARK_GRAFT_SF_DIR (default sf0.1) on a
 small local session — plan SHAPE does not depend on input scale here
 (broadcast sides are explicit hints, not size-estimated).
 """
@@ -18,6 +21,8 @@ from __future__ import annotations
 
 import os
 import sys
+
+import numpy as np
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."))
 
@@ -59,10 +64,30 @@ def _tiles_for_bbox(spark, sf_dir):
     return tiles_for_bbox(spark, path, 9.9, -148.1, 10.1, -147.9, res=8)
 
 
+def _sync_delta(spark, sf_dir):
+    from gtfs_osm_sync_spark.streaming import sync as S
+
+    from gtfs_osm_sync_spark.functions.cells import hex_cell_np
+
+    stops = synth.gen_compare_stops_pdf(np.arange(N_SYNTH))[["gtfs_id", "lat", "lon"]]
+    nodes = synth.gen_compare_nodes_pdf(np.arange(N_SYNTH))[["osm_id", "lat", "lon"]]
+    # the stored res-9 hex_cell older feeds and node logs carry: the
+    # current joins ignore it, older hex-ring joins keyed on it
+    for pdf in (stops, nodes):
+        pdf["hex_cell"] = hex_cell_np(pdf["lat"], pdf["lon"], 9)
+    stops, nodes = spark.createDataFrame(stops), spark.createDataFrame(nodes)
+    changed = nodes.limit(50).select("lat", "lon")
+    return {
+        "sync_delta_affected": S.affected_stop_ids(stops, changed),
+        "sync_delta_prune": S.prune_state_to_stop_rings(nodes, stops.limit(200)),
+    }
+
+
 PIPELINES = {
     "assign_images": _assign_images,
     "compare_stops": _compare_stops,
     "tiles_for_bbox": _tiles_for_bbox,
+    "sync_delta": _sync_delta,
 }
 
 
@@ -81,14 +106,15 @@ def main() -> None:
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark(cpus=4, app_name="dump_plans")
     for name in names:
-        df = (PIPELINES.get(name) or dq.QUERIES[name])(spark, sf_dir)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
-        path = os.path.join(out_dir, f"{name}_{suffix}.txt")
-        with open(path, "w") as fh:
-            fh.write(plan)
-        print(f"wrote {path} ({len(plan)} bytes)")
+        out = (PIPELINES.get(name) or dq.QUERIES[name])(spark, sf_dir)
+        for plan_name, df in (out if isinstance(out, dict) else {name: out}).items():
+            plan = df._sc._jvm.PythonSQLUtils.explainString(
+                df._jdf.queryExecution(), "formatted"
+            )
+            path = os.path.join(out_dir, f"{plan_name}_{suffix}.txt")
+            with open(path, "w") as fh:
+                fh.write(plan)
+            print(f"wrote {path} ({len(plan)} bytes)")
 
 
 if __name__ == "__main__":

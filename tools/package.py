@@ -1,4 +1,10 @@
-"""Build dist/gtfs_osm_sync_spark.zip for spark-submit --py-files."""
+"""Build the package zip for spark-submit --py-files.
+
+Usage: python tools/package.py   (writes dist/gtfs_osm_sync_spark.zip)
+
+The zip is a build product, not committed: build it before submitting
+any jobs/*.py entry point.
+"""
 
 from __future__ import annotations
 
@@ -8,10 +14,9 @@ import zipfile
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def main() -> None:
-    dist = os.path.join(REPO, "dist")
-    os.makedirs(dist, exist_ok=True)
-    out = os.path.join(dist, "gtfs_osm_sync_spark.zip")
+def build(out: str) -> str:
+    """Write every gtfs_osm_sync_spark/**/*.py (no __pycache__) to `out`."""
+    os.makedirs(os.path.dirname(os.path.abspath(out)), exist_ok=True)
     pkg = os.path.join(REPO, "gtfs_osm_sync_spark")
     with zipfile.ZipFile(out, "w", zipfile.ZIP_DEFLATED) as z:
         for root, _dirs, files in os.walk(pkg):
@@ -22,7 +27,11 @@ def main() -> None:
                     continue
                 full = os.path.join(root, f)
                 z.write(full, os.path.relpath(full, REPO))
-    print(out)
+    return out
+
+
+def main() -> None:
+    print(build(os.path.join(REPO, "dist", "gtfs_osm_sync_spark.zip")))
 
 
 if __name__ == "__main__":
