@@ -110,7 +110,7 @@ def run_bench(sf_dir: str, cpus: int, queries: list[str] | None = None) -> dict:
     knn_sec = per_query.get("q10_knn", float("nan"))
 
     # BASELINE.json headline: the images pipeline (synthesize -> geotag ->
-    # hex-ring radius join -> kNN + 4-way category) in images/sec at an
+    # cover-grid radius join -> kNN + 4-way category) in images/sec at an
     # sf-scaled row count
     from pyspark.sql import functions as F
     from gtfs_osm_sync_spark import synth
@@ -183,7 +183,7 @@ def run_bench(sf_dir: str, cpus: int, queries: list[str] | None = None) -> dict:
             "rows_per_sec": round(left_rows / knn_sec, 1) if knn_sec else None,
         },
         "flagship_images": {
-            "pipeline": "synth+geotag+hex-ring radius join+kNN+category",
+            "pipeline": "synth+geotag+cover-grid radius join+kNN+category",
             "n_images": n_img,
             "wall_sec": round(t_img, 3),
             "images_per_sec": round(n_img / t_img, 1),

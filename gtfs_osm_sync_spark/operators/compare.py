@@ -53,6 +53,9 @@ one (functions.geo.VIN_OVER_HAV_MIN/MAX), so exact Vincenty runs only on
 its survivors, and for conflicts only on the thin shells around each
 threshold. No O(N*M) scan anywhere — the reference's nested
 parallelStream loop (CompareData.java:1016-1069) becomes hash joins.
+compare_stops and redundant_node_modifies read the same stages (_stage:
+one id match, one unmatched-stop set, one foreign-node set) and persist
+nothing.
 """
 
 from __future__ import annotations
@@ -167,55 +170,108 @@ def _gated_nodes(
     )
 
 
+def _stage(
+    gtfs: DataFrame,
+    nodes: DataFrame,
+    agency_names: list[str],
+    id_digits: int,
+    radius_m: float,
+    network_key: str,
+    broadcast_stops: bool,
+    alias_regexes: list[str] | None,
+    known_ids: DataFrame | None,
+):
+    """The stages both compare outputs read, built once
+    (CompareData.java:1016-1075). Returns (hint, idm, unmatched, foreign):
+
+    - hint: the join hint of every build side.
+    - idm: the id-match pairs, a hash equi-join of the tag-mapped stops
+      and the gated nodes on the padded id, kept where Vincenty
+      dist_m < radius_m (several nodes may match one stop).
+    - unmatched: the tag-mapped stops with no id match.
+    - foreign: the gated nodes whose gtfs_id is absent, 'missing' or
+      held by no stop of `known_ids` (default: the stops) — the
+      UPLOAD_CONFLICT gate (CompareData.java:1216-1222) and the only
+      nodes that can be adopted or source a node-side modify.
+    """
+    g = gtfs_tag_map(gtfs, network_key)
+    # shuffle path: HINT every build side to shuffled-hash — Catalyst's
+    # static size estimates under filter/explode chains otherwise pick
+    # BroadcastHashJoin and try to broadcast a multi-GiB side at 10^6+
+    # stops (observed: 10 GiB broadcast attempt at 4M stops)
+    hint = "broadcast" if broadcast_stops else "shuffle_hash"
+    n = _gated_nodes(nodes, agency_names, id_digits, network_key, alias_regexes)
+    # the stop side is the SMALL side at any scale (a transit feed is
+    # 10^3-10^6 stops; the node layer is unbounded): broadcast it so the
+    # id match is a map-side hash join over the node scan, never an SMJ.
+    # vincenty < radius implies haversine < radius / VIN_OVER_HAV_MIN, so
+    # the haversine prefilter drops no true match and far pairs (e.g. a
+    # stale id 2.5 km away) skip the Python round-trip.
+    idm = (
+        g.hint(hint).join(n, g["gtfs_id"] == n["osm_gtfs_id"])
+        .filter(
+            haversine_m_col(F.col("lat"), F.col("lon"), F.col("o_lat"), F.col("o_lon"))
+            < radius_m / VIN_OVER_HAV_MIN
+        )
+        .withColumn(
+            "dist_m", vincenty_m_udf(F.col("o_lat"), F.col("o_lon"), F.col("lat"), F.col("lon"))
+        )
+        .filter(F.col("dist_m") < radius_m)
+    )
+    unmatched = g.join(idm.select("gtfs_id").distinct().hint(hint), "gtfs_id", "left_anti")
+    # in a synced region most nodes carry valid ids: probing every gated
+    # node instead of the foreign ones quadruples the streaming side
+    # (measured: compare phase 134.9 s -> 196.3 s at 4M stops/2 cores)
+    known = (known_ids if known_ids is not None else g).select(
+        F.col("gtfs_id").alias("osm_gtfs_id")
+    ).distinct()
+    foreign = n.join(known.hint(hint), "osm_gtfs_id", "left_anti")
+    return hint, idm, unmatched, foreign
+
+
+def _adoptable():
+    """The same-location adoption rule on a probe pair
+    (CompareData.java:1224-1262): the node lies within ERROR_TO_ZERO of
+    the stop and its public_transport equals the stop's expected OSM
+    type. The reference NPEs on a pt-less node; here both must be
+    non-null."""
+    node_pt = F.col("osm_tags").getItem("public_transport")
+    return (
+        (F.col("dist_m") <= ERROR_TO_ZERO_M)
+        & node_pt.isNotNull()
+        & (node_pt == F.col("public_transport"))
+    )
+
+
 def _probe_pairs(
-    g: DataFrame,
-    n: DataFrame,
+    foreign: DataFrame,
     unmatched: DataFrame,
     radius_m: float,
     hint: str,
-    known_ids: DataFrame | None = None,
     max_pre_m: float | None = None,
 ):
-    """Radius join between the UNMATCHED stops and the FOREIGN nodes
-    (gtfs_id absent / 'missing' / known to NO stop in the feed — the
-    UPLOAD_CONFLICT gate, CompareData.java:1216-1222, and the only nodes
-    that can source a node-side modify): cover-cell-exploded stop side
-    (bounded — a transit feed) as the hinted build side, streaming node
-    side, bbox + haversine in codegen, exact Vincenty on survivors.
-    Returns pairs with Vincenty dist_m < radius_m.
+    """Radius join between the unmatched stops and the foreign nodes:
+    cover-cell-exploded stop side (bounded — a transit feed) as the
+    hinted build side, streaming node side, bbox + haversine in codegen,
+    exact Vincenty on survivors. Returns pairs with Vincenty
+    dist_m < radius_m.
 
-    The anti-join prefilter matters at scale: in a synced region most
-    nodes carry valid ids, so probing ALL gated nodes quadruples the
-    streaming side (measured: compare phase 134.9 s -> 196.3 s at 4M
-    stops/2 cores) to serve only the order-ambiguous adopt-across-ids
-    corner — see compare_stops' adoption note.
-
-    known_ids: the id UNIVERSE that defines foreign-ness. Defaults to the
-    stop frame g; pass the FULL feed's ids when g is a subset (the
-    incremental-sync delta path re-compares only affected stops, but a
-    node carrying some other stop's valid id is still not foreign).
-
-    The stop side entering the join is SLIMMED to (gtfs_id, lat, lon[,
-    public_transport]): the full stop row (g_tags map, raw strings) used
-    to ride the cell explosion into the hash-join BUILD side, which at 2M
-    stops was a multi-GB build that thrashed execution memory. Branches
-    that need the full stop row (adoption) re-attach it by gtfs_id to the
-    tiny <= 0.5 m subset.
+    The stop side entering the join is slim (gtfs_id, lat, lon[,
+    public_transport]): the full stop row (g_tags map, raw strings)
+    riding the cell explosion into the build side is a multi-GB build
+    that thrashes execution memory at 2M stops. Branches that need the
+    full stop row re-attach it by gtfs_id.
 
     max_pre_m: a consumer that only needs pairs below some Vincenty
     threshold T passes T / VIN_OVER_HAV_MIN, so the join keeps, and the
     Python kernel sees, just that band."""
-    gids = (known_ids if known_ids is not None else g).select(
-        F.col("gtfs_id").alias("osm_gtfs_id")
-    ).distinct()
-    fn = n.join(gids.hint(hint), "osm_gtfs_id", "left_anti")
     slim_cols = ["gtfs_id", "lat", "lon"] + (
         ["public_transport"] if "public_transport" in unmatched.columns else []
     )
     reach_m = max_pre_m if max_pre_m is not None else radius_m / VIN_OVER_HAV_MIN
     return (
         cover_radius_join(
-            fn, unmatched.select(*slim_cols), ("o_lat", "o_lon"), ("lat", "lon"),
+            foreign, unmatched.select(*slim_cols), ("o_lat", "o_lon"), ("lat", "lon"),
             reach_m, hint=hint,
         )
         .withColumn(
@@ -226,22 +282,17 @@ def _probe_pairs(
 
 
 def _conflict_stop_ids(
-    g: DataFrame,
-    n: DataFrame,
+    foreign: DataFrame,
     unmatched: DataFrame,
     radius_m: float,
     hint: str,
-    known_ids: DataFrame | None = None,
 ) -> DataFrame:
-    """Distinct gtfs_ids of unmatched stops with at least one FOREIGN
+    """Distinct gtfs_ids of unmatched stops with at least one foreign
     node at Vincenty distance in (ERROR_TO_ZERO_M, radius_m) — the
     UPLOAD_CONFLICT evidence — computed as EXISTENCE, not as a pair
-    materialization.
-
-    Why: the conflict branch only ever consumed
-    `pairs.select(gtfs_id).distinct()`, yet the dense-city worst case
-    yields ~10^9 candidate pairs and ~10^8 true ones, all of which
-    would cross the Python Vincenty kernel. Here:
+    materialization: the dense-city worst case yields ~10^9 candidate
+    pairs and ~10^8 true ones, none of which need to cross the Python
+    Vincenty kernel.
 
     1. a LEFT SEMI radius join keeps the stops with a node whose
        haversine lies in the CERTAIN band (ERROR_TO_ZERO/VIN_OVER_HAV_MIN,
@@ -259,10 +310,7 @@ def _conflict_stop_ids(
     The node side ships only coordinates (existence needs nothing
     else) and is the shuffle-hash build side of both joins; both share
     one reach, hence one cover cell and one node exchange."""
-    gids = (known_ids if known_ids is not None else g).select(
-        F.col("gtfs_id").alias("osm_gtfs_id")
-    ).distinct()
-    fn = n.join(gids.hint(hint), "osm_gtfs_id", "left_anti").select("o_lat", "o_lon")
+    fn = foreign.select("o_lat", "o_lon")
     u = unmatched.select("gtfs_id", "lat", "lon")
     hi_shell = radius_m / VIN_OVER_HAV_MIN  # hav at or above => vin >= radius
 
@@ -305,7 +353,8 @@ def compare_stops(
 
     known_ids: optional full-feed stop frame (or any frame with a
     gtfs_id column) defining the foreign-node id universe when `gtfs` is
-    a SUBSET of the feed (incremental-sync delta re-compare); defaults
+    a SUBSET of the feed (incremental-sync delta re-compare: a node
+    carrying some other stop's valid id is still not foreign); defaults
     to `gtfs` itself.
 
     broadcast_stops: a transit FEED (10^3-10^6 stops) broadcasts — every
@@ -321,35 +370,9 @@ def compare_stops(
     final_lat, final_lon) — merged_tags per the reference's
     finalStops default-value rules.
     """
-    g = gtfs_tag_map(gtfs, network_key)
-    # shuffle path: HINT every build side to shuffled-hash — Catalyst's
-    # static size estimates under filter/explode chains otherwise pick
-    # BroadcastHashJoin and try to broadcast a multi-GiB side at 10^6+
-    # stops (observed: 10 GiB broadcast attempt at 4M stops)
-    hint = "broadcast" if broadcast_stops else "shuffle_hash"
-    b = lambda df: df.hint(hint)  # noqa: E731
-    n = _gated_nodes(nodes, agency_names, id_digits, network_key, alias_regexes)
-
-    # ---- id matches: hash equi-join on the padded id, exact Vincenty gate
-    # the stop side is the SMALL side at any scale (a transit feed is
-    # 10^3-10^6 stops; the node layer is unbounded): broadcast it so the
-    # id match is a map-side hash join over the node scan, never an SMJ
-    # haversine prefilter before the Vincenty Python boundary: vincenty <
-    # radius implies haversine < radius / VIN_OVER_HAV_MIN, so no true
-    # match is dropped; far pairs (e.g. a stale id 2.5 km away) skip the
-    # Python round-trip entirely.
-    idm = (
-        b(g).join(n, g["gtfs_id"] == n["osm_gtfs_id"])
-        .withColumn(
-            "_hpre",
-            haversine_m_col(F.col("lat"), F.col("lon"), F.col("o_lat"), F.col("o_lon")),
-        )
-        .filter(F.col("_hpre") < radius_m / VIN_OVER_HAV_MIN)
-        .drop("_hpre")
-        .withColumn(
-            "dist_m", vincenty_m_udf(F.col("o_lat"), F.col("o_lon"), F.col("lat"), F.col("lon"))
-        )
-        .filter(F.col("dist_m") < radius_m)
+    hint, idm, unmatched, foreign = _stage(
+        gtfs, nodes, agency_names, id_digits, radius_m, network_key,
+        broadcast_stops, alias_regexes, known_ids,
     )
     first_wins = W.partitionBy("gtfs_id").orderBy("doc_order")
     best = (
@@ -366,63 +389,39 @@ def compare_stops(
         ).otherwise(F.lit("MODIFY")),
     )
 
-    # r7: the matched-id set is a NARROW persisted frame (distinct ids of
-    # the Vincenty-confirmed join — identical to best's id set, since the
-    # first-wins window only picks among rows of one id). Every unmatched/
-    # rest/probe consumer previously re-ran the id-match join + Vincenty
-    # UDF subtree (Spark reuses exchanges, not operator subtrees between
-    # them); now the full idm tree runs once for the output branch and the
-    # other branches anti-join against ~bytes-per-stop of persisted ids.
-    # The persist is an intra-invocation intermediate (recomputed on every
-    # call; the ContextCleaner reclaims it when the frame is dropped).
-    matched_ids = idm.select("gtfs_id").distinct().persist()
-    unmatched = g.join(b(matched_ids), "gtfs_id", "left_anti")
-
-    # ---- radius probe over the unmatched stops (r7): the conflict
-    # branch is now existence-only (_conflict_stop_ids — no pair
-    # materialization, Python Vincenty only on ambiguity shells), so the
-    # exact pair probe survives ONLY for the adoption branch, band-capped
-    # to the <= 0.5 m Vincenty neighborhood it consumes.
-    has_pt = "public_transport" in gtfs.columns
-    if has_pt:
-        pairs = _probe_pairs(
-            g, n, unmatched, radius_m, hint, known_ids,
-            max_pre_m=ERROR_TO_ZERO_M / VIN_OVER_HAV_MIN,
-        )
-
-    # same-location adoption (CompareData.java:1224-1262): node within
-    # ERROR_TO_ZERO whose public_transport equals the stop's expected OSM
-    # type -> the stop adopts the node (MODIFY, enters noUpload). The
-    # reference NPEs on a pt-less node here; we require both sides
-    # non-null. First node in document order wins (parallelStream racy in
-    # the reference; pinned deterministic here). PLAN SPECIALIZATION: a
-    # feed with no public_transport column cannot adopt (the equality is
-    # NULL for every row), so the whole branch — its window, union, and
-    # second probe consumer — is dropped at build time; the conflict
-    # probe then reads the pairs subtree exactly once (measured: 69.9 ->
-    # 59.5 s best-of-3 on the 4M-stop compare phase at 8 cores).
-    if has_pt:
-        # pairs carry only the slim stop columns (see _probe_pairs
-        # note); the full stop row is re-attached here, to the tiny
-        # <= 0.5 m winner set only, by an equi-join on gtfs_id with the
-        # adoption rows as the build/broadcast side.
+    # same-location adoption (CompareData.java:1224-1262): the stop adopts
+    # the node (MODIFY, enters noUpload). First node in document order
+    # wins (parallelStream racy in the reference; pinned deterministic
+    # here). PLAN SPECIALIZATION: a feed with no public_transport column
+    # cannot adopt (the equality is NULL for every row), so the whole
+    # branch — probe, window, union and the `rest` anti-join — is dropped
+    # at build time (measured: 69.9 -> 59.5 s best-of-3 on the 4M-stop
+    # compare phase at 8 cores).
+    rest = unmatched
+    if "public_transport" in gtfs.columns:
+        # the probe is band-capped to the <= 0.5 m Vincenty neighborhood
+        # adoption consumes; its pairs carry only the slim stop columns,
+        # so the full stop row is re-attached to the tiny winner set by
+        # an equi-join on gtfs_id with the adoption rows as build side
         adopted_slim = (
-            pairs.filter(
-                (F.col("dist_m") <= ERROR_TO_ZERO_M)
-                & F.col("osm_tags").getItem("public_transport").isNotNull()
-                & (
-                    F.col("osm_tags").getItem("public_transport")
-                    == F.col("public_transport")
-                )
+            _probe_pairs(
+                foreign, unmatched, radius_m, hint,
+                max_pre_m=ERROR_TO_ZERO_M / VIN_OVER_HAV_MIN,
             )
+            .filter(_adoptable())
             .withColumn("_rn", F.row_number().over(first_wins))
             .filter(F.col("_rn") == 1)
             .drop("_rn", "lat", "lon", "public_transport")
         )
-        adopted = unmatched.join(b(adopted_slim), "gtfs_id").withColumn(
+        adopted = unmatched.join(adopted_slim.hint(hint), "gtfs_id").withColumn(
             "category", F.lit("MODIFY")
         )
         best = best.unionByName(adopted.select(*best.columns))
+        # adopted stops entered noUpload, so only the REST of the
+        # unmatched stops can conflict (CompareData.java:1060)
+        rest = unmatched.join(
+            adopted_slim.select("gtfs_id").hint(hint), "gtfs_id", "left_anti"
+        )
 
     # merged tags: MODIFY -> osm values win, gtfs_id restored; NOTHING_NEW
     # -> gtfs values win, osm-only keys added. map_zip_with merges by key.
@@ -448,23 +447,13 @@ def compare_stops(
         "final_lon", F.when(F.col("category") == "MODIFY", F.col("o_lon")).otherwise(F.col("lon"))
     )
 
-    # ---- conflict branch: adopted stops entered noUpload, so only the
-    # REST of the unmatched stops can conflict (CompareData.java:1060).
-    if has_pt:
-        rest = unmatched.join(
-            b(adopted_slim.select("gtfs_id")), "gtfs_id", "left_anti"
-        )
-    else:
-        rest = unmatched
-    # r7: ONE left outer join against the flagged conflict-id set replaces
-    # the previous semi+anti pair — the rest frame is scanned/shuffled
-    # once instead of twice and the union has one branch fewer (guide
-    # §2.4). The id set itself comes from the existence-only fast path
-    # (_conflict_stop_ids; distinct, so the outer join cannot duplicate
-    # rows); the per-row when() reproduces both branches' columns exactly.
-    conflict_flag = b(
-        _conflict_stop_ids(g, n, unmatched, radius_m, hint, known_ids)
+    # conflict branch: ONE left outer join against the distinct flagged
+    # id set (so it cannot duplicate rows) scans the rest frame once; the
+    # per-row when() gives each category its columns
+    conflict_flag = (
+        _conflict_stop_ids(foreign, unmatched, radius_m, hint)
         .withColumn("_cfl", F.lit(1))
+        .hint(hint)
     )
     is_cfl = F.col("_cfl").isNotNull()
     fixme_tags = F.map_zip_with(
@@ -542,63 +531,24 @@ def redundant_node_modifies(
     this mirrors compare_stops' `rest` exclusion (pinned in
     test_redundant_modifies_skip_adopted_stop).
     """
-    g = gtfs_tag_map(gtfs, network_key)
-    # shuffle path: HINT every build side to shuffled-hash — Catalyst's
-    # static size estimates under filter/explode chains otherwise pick
-    # BroadcastHashJoin and try to broadcast a multi-GiB side at 10^6+
-    # stops (observed: 10 GiB broadcast attempt at 4M stops)
-    hint = "broadcast" if broadcast_stops else "shuffle_hash"
-    b = lambda df: df.hint(hint)  # noqa: E731
-    n = _gated_nodes(nodes, agency_names, id_digits, network_key, alias_regexes)
-
-    matched_ids = (
-        b(g.select("gtfs_id", "lat", "lon"))
-        .join(n.select("osm_gtfs_id", "o_lat", "o_lon"), g["gtfs_id"] == n["osm_gtfs_id"])
-        # same haversine-before-Vincenty prefilter as compare_stops'
-        # id-match branch
-        .withColumn(
-            "_hpre",
-            haversine_m_col(F.col("lat"), F.col("lon"), F.col("o_lat"), F.col("o_lon")),
-        )
-        .filter(F.col("_hpre") < radius_m / VIN_OVER_HAV_MIN)
-        .drop("_hpre")
-        .withColumn(
-            "dist_m", vincenty_m_udf(F.col("o_lat"), F.col("o_lon"), F.col("lat"), F.col("lon"))
-        )
-        .filter(F.col("dist_m") < radius_m)
-        .select("gtfs_id")
-        .distinct()
+    hint, _, unmatched, foreign = _stage(
+        gtfs, nodes, agency_names, id_digits, radius_m, network_key,
+        broadcast_stops, alias_regexes, known_ids,
     )
-    unmatched = g.join(b(matched_ids), "gtfs_id", "left_anti")
-    pairs = _probe_pairs(g, n, unmatched, radius_m, hint, known_ids)
-
-    stop_pt = (
-        F.col("public_transport")
-        if "public_transport" in gtfs.columns
-        else F.lit(None).cast("string")
-    )
+    pairs = _probe_pairs(foreign, unmatched, radius_m, hint)
     cand = pairs.filter(
         (F.col("dist_m") > ERROR_TO_ZERO_M)
         & F.col("osm_gtfs_id").isNull()
         & ~F.col("o_has_fixme")
     )
     if "public_transport" in gtfs.columns:
-        # nodes consumed by the adoption branch are excluded (the
-        # reference's !modify.contains guard), and so are the adopted
-        # STOPS themselves: an adopted stop enters noUpload
-        # (CompareData.java:1230) before later nodes scan it, so an
-        # id-less node whose only nearby unmatched stop was adopted must
-        # NOT gain a FIXME — this pins the same sequential reading as
-        # compare_stops' `rest` exclusion. Impossible without a
-        # public_transport column, so both subtrees drop at build time.
-        adoptable = pairs.filter(
-            (F.col("dist_m") <= ERROR_TO_ZERO_M)
-            & F.col("osm_tags").getItem("public_transport").isNotNull()
-            & (F.col("osm_tags").getItem("public_transport") == stop_pt)
-        )
+        # adopted nodes and adopted stops are both excluded (see the
+        # docstring); impossible without a public_transport column, so
+        # both subtrees drop at build time
+        adoptable = pairs.filter(_adoptable())
         cand = cand.join(
-            b(adoptable.select("osm_id").distinct()), "osm_id", "left_anti"
-        ).join(b(adoptable.select("gtfs_id").distinct()), "gtfs_id", "left_anti")
+            adoptable.select("osm_id").distinct().hint(hint), "osm_id", "left_anti"
+        ).join(adoptable.select("gtfs_id").distinct().hint(hint), "gtfs_id", "left_anti")
     # one modify per node no matter how many stops flag it
     per_node = (
         cand.withColumn(
@@ -638,8 +588,42 @@ def redundant_node_modifies(
     )
 
 
-# export removals: WriteFile.exportStops, io/WriteFile.java:267-272
-_EXPORT_DROP = ("name", "source", "highway", "gtfs_id")
+# export removals (WriteFile.exportStops, io/WriteFile.java:267-272) plus
+# the 'none' and empty keys, which are never exported
+_EXPORT_DROP = ("name", "source", "highway", "gtfs_id", "url", "transport:zone", "none", "")
+
+
+def _export(
+    df: DataFrame,
+    gtfs_fields: list[str],
+    network_key: str,
+    tags,
+    stop_name,
+    stop_lat,
+    stop_lon,
+) -> DataFrame:
+    """The K1 export row (io/WriteFile.java:214-296): stop_id, one column
+    per CSV field (stop_name/stop_lat/stop_lon as given, any other field
+    from the agency's gtfs_<field> tag) and OSM_TAGs, the `tags` map
+    minus the consumed and suppressed keys as a k=v|k=v string. Tag
+    order is canonicalized (sorted): the reference emits
+    java.util.Hashtable iteration order, which is not a contract."""
+    drop = set(_EXPORT_DROP) | {network_key} | {f"gtfs_{f}" for f in gtfs_fields}
+    kept = F.map_filter(tags, lambda k, v: ~k.isin(*sorted(drop)))
+    osm_tags_str = F.array_join(
+        F.transform(
+            F.array_sort(F.map_entries(kept)),
+            lambda e: F.concat(e["key"], F.lit("="), e["value"]),
+        ),
+        "|",
+    )
+    special = {"stop_name": stop_name, "stop_lat": stop_lat, "stop_lon": stop_lon}
+    cols = [
+        special.get(f, F.element_at(F.col("g_tags"), F.lit(f"gtfs_{f}"))).alias(f)
+        for f in gtfs_fields
+        if f != "stop_id"
+    ]
+    return df.select(F.col("gtfs_id").alias("stop_id"), *cols, osm_tags_str.alias("OSM_TAGs"))
 
 
 def export_gtfs_value_with_osm_tags(
@@ -648,43 +632,16 @@ def export_gtfs_value_with_osm_tags(
     network_key: str = "operator",
 ) -> DataFrame:
     """K1 'GTFS value + OSM tags' export (io/WriteFile.java:214-296 with
-    gui/ReportViewer.java:3217-3228 semantics: agency gtfs values for the
-    CSV fields, merged tags minus consumed/suppressed keys as a k=v|k=v
-    column). Tag order canonicalized (sorted) — the reference emits
-    java.util.Hashtable iteration order, which is not a contract.
-    """
-    consumed = [f"gtfs_{f}" for f in gtfs_fields] + ["url", "transport:zone"]
-    drop = set(_EXPORT_DROP) | {network_key} | set(consumed)
-    # agency value wins for keys the agency stop carries (addTags is
-    # non-overwriting): g_tags keys keep their gtfs value
+    gui/ReportViewer.java:3217-3228 semantics): the agency's raw values
+    for the CSV fields, and the merged tags with the agency value winning
+    on the keys the agency stop carries (addTags is non-overwriting)."""
     agency_wins = F.map_zip_with(
         F.col("g_tags"), F.col("merged_tags"), lambda k, gv, mv: F.coalesce(gv, mv)
     )
-    kept = F.map_filter(
-        agency_wins,
-        lambda k, v: ~k.isin(*sorted(drop)) & (k != "none") & (k != ""),
+    return _export(
+        compared, gtfs_fields, network_key, agency_wins,
+        F.col("name_raw"), F.col("lat_raw"), F.col("lon_raw"),
     )
-    osm_tags_str = F.array_join(
-        F.transform(
-            F.array_sort(F.map_entries(kept)),
-            lambda e: F.concat(e["key"], F.lit("="), e["value"]),
-        ),
-        "|",
-    )
-    cols = [F.col("gtfs_id").alias("stop_id")]
-    for f_ in gtfs_fields:
-        if f_ == "stop_id":
-            continue
-        elif f_ == "stop_name":
-            cols.append(F.col("name_raw").alias("stop_name"))
-        elif f_ == "stop_lat":
-            cols.append(F.col("lat_raw").alias("stop_lat"))
-        elif f_ == "stop_lon":
-            cols.append(F.col("lon_raw").alias("stop_lon"))
-        else:
-            cols.append(F.element_at(F.col("g_tags"), F.lit(f"gtfs_{f_}")).alias(f_))
-    cols.append(osm_tags_str.alias("OSM_TAGs"))
-    return compared.select(*cols)
 
 
 def member_gtfs_ids(
@@ -752,42 +709,12 @@ def export_osm_value_with_osm_tags(
     """K1 'OSM value' exports (gui/ReportViewer.java:3230-3243 +
     io/WriteFile.java:214-296): the CSV name/lat/lon columns carry the
     FINAL default values (MODIFY stops take the matched node's location
-    and name; others keep gtfs), tags from merged_tags minus the same
-    consumed/suppressed keys. conflicts_only keeps stops whose default
-    changed (osmDefaultOnlyChangedFinalStops, ReportViewer.java:419-439:
-    MODIFY category)."""
-    consumed = [f"gtfs_{f}" for f in gtfs_fields] + ["url", "transport:zone"]
-    drop = set(_EXPORT_DROP) | {network_key} | set(consumed)
-    src = compared
-    if conflicts_only:
-        src = src.filter(F.col("category") == "MODIFY")
-    kept = F.map_filter(
-        F.col("merged_tags"),
-        lambda k, v: ~k.isin(*sorted(drop)) & (k != "none") & (k != ""),
+    and name; others keep gtfs), tags from merged_tags. conflicts_only
+    keeps stops whose default changed (osmDefaultOnlyChangedFinalStops,
+    ReportViewer.java:419-439: MODIFY category)."""
+    src = compared.filter(F.col("category") == "MODIFY") if conflicts_only else compared
+    return _export(
+        src, gtfs_fields, network_key, F.col("merged_tags"),
+        F.coalesce(F.element_at(F.col("merged_tags"), F.lit("name")), F.col("name_raw")),
+        F.col("final_lat").cast("string"), F.col("final_lon").cast("string"),
     )
-    osm_tags_str = F.array_join(
-        F.transform(
-            F.array_sort(F.map_entries(kept)),
-            lambda e: F.concat(e["key"], F.lit("="), e["value"]),
-        ),
-        "|",
-    )
-    cols = [F.col("gtfs_id").alias("stop_id")]
-    for f_ in gtfs_fields:
-        if f_ == "stop_id":
-            continue
-        elif f_ == "stop_name":
-            cols.append(
-                F.coalesce(
-                    F.element_at(F.col("merged_tags"), F.lit("name")),
-                    F.col("name_raw"),
-                ).alias("stop_name")
-            )
-        elif f_ == "stop_lat":
-            cols.append(F.col("final_lat").cast("string").alias("stop_lat"))
-        elif f_ == "stop_lon":
-            cols.append(F.col("final_lon").cast("string").alias("stop_lon"))
-        else:
-            cols.append(F.element_at(F.col("g_tags"), F.lit(f"gtfs_{f_}")).alias(f_))
-    cols.append(osm_tags_str.alias("OSM_TAGs"))
-    return src.select(*cols)

@@ -13,6 +13,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Half the host's physical memory, capped at 24g: the local-mode
+    JVM heap holds the driver and every executor task, and a larger
+    heap lets one process take most of a small host."""
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // (2 << 20)
+    return f"{min(half_mb, 24 * 1024)}m"
+
+
 def get_spark(
     cpus: int | None = None,
     app_name: str = "gtfs_osm_sync_spark",
@@ -22,11 +30,14 @@ def get_spark(
     """Build (or fetch) a SparkSession.
 
     cpus: local[N] parallelism (default: $SPARK_GRAFT_CPUS or all cores).
+    The driver heap is $SPARK_GRAFT_DRIVER_MEM, else half the host's
+    physical memory capped at 24g.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     if shuffle_partitions is None:
         shuffle_partitions = max(cpus, 8)
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_memory())
 
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -43,7 +54,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "20000")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

@@ -24,7 +24,8 @@ def world(spark):
         agency_names=[synth.COMPARE_AGENCY],
         id_digits=synth._CMP_DIGITS,
     ).cache()
-    return cmp
+    yield cmp
+    cmp.unpersist()
 
 
 def _brute_force_categories():
@@ -462,3 +463,87 @@ def test_conflict_at_vincenty_shell_boundary(spark):
     )
     r = C.compare_stops(stops, nodes, [synth.COMPARE_AGENCY], id_digits=7).collect()[0]
     assert r["category"] == "UPLOAD_CONFLICT"
+
+
+def test_compare_leaves_no_cached_frame(spark):
+    """compare_stops and redundant_node_modifies persist nothing: after
+    both have run, Spark's CacheManager holds no Dataset (a persisted
+    intermediate would stay there for the session's lifetime, one per
+    call, e.g. one per streaming-sync micro-batch)."""
+    stops, nodes = synth.generate_compare_world(spark, 300, partitions=2)
+    kw = dict(agency_names=[synth.COMPARE_AGENCY], id_digits=synth._CMP_DIGITS)
+    spark.catalog.clearCache()
+    C.compare_stops(stops, nodes, **kw).collect()
+    C.redundant_node_modifies(stops, nodes, **kw).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_compare_plan_hash_joins_no_cache_scan(spark):
+    """The broadcast compare plans hash joins only: no SortMergeJoin (the
+    stop side is small at any scale), no BroadcastNestedLoopJoin or
+    CartesianProduct, and no scan of a cached intermediate."""
+    stops, nodes = synth.generate_compare_world(spark, 500, partitions=2)
+    cmp = C.compare_stops(
+        stops, nodes, [synth.COMPARE_AGENCY], id_digits=synth._CMP_DIGITS
+    )
+    plan = cmp._jdf.queryExecution().executedPlan().toString()
+    for node in ("SortMergeJoin", "BroadcastNestedLoopJoin", "CartesianProduct",
+                 "InMemoryTableScan"):
+        assert node not in plan
+    assert "BroadcastHashJoin" in plan
+
+
+_EXPORT_SCHEMA = (
+    "gtfs_id string, category string, name_raw string, lat_raw string,"
+    " lon_raw string, final_lat double, final_lon double,"
+    " g_tags map<string,string>, merged_tags map<string,string>"
+)
+
+
+def test_exports_on_hand_built_compare_output(spark):
+    """Both K1 exports on a hand-built compare output: the consumed and
+    suppressed keys (name, source, highway, gtfs_id, the network key,
+    gtfs_<field>, url, transport:zone, 'none', '') are dropped, the rest
+    is a sorted k=v|k=v string; the GTFS-value export lets the agency
+    value win on shared keys and prints the raw CSV values, the OSM-value
+    export prints the merged tags and the final name/location."""
+    g_a = {"gtfs_id": "0001", "operator": "Agency", "name": "Stop A",
+           "gtfs_stop_code": "A1", "gtfs_wheelchair_boarding": "1"}
+    m_a = {**g_a, "name": "Old A", "gtfs_wheelchair_boarding": "2",
+           "shelter": "yes", "highway": "bus_stop", "source": "survey",
+           "url": "http://x", "transport:zone": "3", "network": "N",
+           "none": "x", "bench": "no"}
+    g_b = {"gtfs_id": "0002", "operator": "Agency", "name": "Stop B",
+           "gtfs_stop_code": "B2"}
+    m_b = {**g_b, "": "e"}
+    compared = spark.createDataFrame(
+        [
+            ("0001", "MODIFY", "Stop A", "10.0", "20.0", 10.001, 20.002, g_a, m_a),
+            ("0002", "UPLOAD_NO_CONFLICT", "Stop B", "30.0", "40.0", 30.0, 40.0, g_b, m_b),
+        ],
+        _EXPORT_SCHEMA,
+    )
+    fields = ["stop_id", "stop_code", "stop_name", "stop_lat", "stop_lon"]
+    rows = lambda df: sorted(tuple(r) for r in df.collect())  # noqa: E731
+
+    gtfs = C.export_gtfs_value_with_osm_tags(compared, fields)
+    assert gtfs.columns == ["stop_id", "stop_code", "stop_name", "stop_lat", "stop_lon", "OSM_TAGs"]
+    assert rows(gtfs) == [
+        ("0001", "A1", "Stop A", "10.0", "20.0",
+         "bench=no|gtfs_wheelchair_boarding=1|network=N|shelter=yes"),
+        ("0002", "B2", "Stop B", "30.0", "40.0", ""),
+    ]
+    osm = C.export_osm_value_with_osm_tags(compared, fields)
+    assert rows(osm) == [
+        ("0001", "A1", "Old A", "10.001", "20.002",
+         "bench=no|gtfs_wheelchair_boarding=2|network=N|shelter=yes"),
+        ("0002", "B2", "Stop B", "30.0", "40.0", ""),
+    ]
+    assert rows(C.export_osm_value_with_osm_tags(compared, fields, conflicts_only=True)) == [
+        rows(osm)[0]
+    ]
+    # the network key is the one suppressed, whatever its name
+    by_network = C.export_gtfs_value_with_osm_tags(compared, fields, network_key="network")
+    assert rows(by_network)[0][-1] == (
+        "bench=no|gtfs_wheelchair_boarding=1|operator=Agency|shelter=yes"
+    )

@@ -7,9 +7,9 @@ e.g.   python tools/dump_plans.py cover_join after assign_images compare_stops \
            q20_platform_pairing g02_vincenty_knn
 
 A name is a driver query (driver_queries.QUERIES) or one of PIPELINES:
-assign_images, compare_stops and tiles_for_bbox (a bbox fetch from a
-written two-level pyramid), run on a small synthetic world (2,000
-images / stops), and sync_delta: the incremental sync's two delta joins
+assign_images, compare_stops, redundant_node_modifies and tiles_for_bbox
+(a bbox fetch from a written two-level pyramid), run on a small
+synthetic world (2,000 images / stops), and sync_delta: the incremental sync's two delta joins
 (streaming.sync.affected_stop_ids and prune_state_to_stop_rings) on
 local pandas input, written as sync_delta_affected_<suffix>.txt and
 sync_delta_prune_<suffix>.txt. Queries read $SPARK_GRAFT_SF_DIR (default sf0.1) on a
@@ -40,13 +40,16 @@ def _assign_images(spark, sf_dir):
     return assign_images(geo, synth.generate_features(spark, N_SYNTH, N_SYNTH // 50))
 
 
-def _compare_stops(spark, sf_dir):
-    from gtfs_osm_sync_spark.operators.compare import compare_stops
+def _compare(fn_name):
+    def run(spark, sf_dir):
+        from gtfs_osm_sync_spark.operators import compare
 
-    stops, nodes = synth.generate_compare_world(spark, N_SYNTH, partitions=4)
-    return compare_stops(
-        stops, nodes, [synth.COMPARE_AGENCY], id_digits=synth._CMP_DIGITS
-    )
+        stops, nodes = synth.generate_compare_world(spark, N_SYNTH, partitions=4)
+        return getattr(compare, fn_name)(
+            stops, nodes, [synth.COMPARE_AGENCY], id_digits=synth._CMP_DIGITS
+        )
+
+    return run
 
 
 def _tiles_for_bbox(spark, sf_dir):
@@ -85,7 +88,8 @@ def _sync_delta(spark, sf_dir):
 
 PIPELINES = {
     "assign_images": _assign_images,
-    "compare_stops": _compare_stops,
+    "compare_stops": _compare("compare_stops"),
+    "redundant_node_modifies": _compare("redundant_node_modifies"),
     "tiles_for_bbox": _tiles_for_bbox,
     "sync_delta": _sync_delta,
 }
