@@ -21,18 +21,16 @@ Three index families, three jobs:
    bit-identical to Uber H3 — the h3 library is unavailable in this
    environment and the engine never assumes H3's exact bit layout.
 
-3. ``grid_cell`` — a plain floor(lat/h), floor(lon/w) integer grid that is
-   expressible in ANSI SQL, used by the DuckDB-oracle-checked queries so
-   the oracle can reproduce candidate generation exactly, and by the PIP
-   join, whose polygons explode their bbox to its exact grid cells
-   (``grid_bbox_cells_col``).
-
-Radius-join candidates come from a fourth, JVM-only grid at the end of
-this module (``cover_cell_col`` / ``cover_cells_col``): a cell per point
-on one side, the cells covering its radius on the other, so every pair
-within the radius shares a cell (a covering, not exact, set — the
-precise distance predicate runs after the equi-join). The one join
-built on it is operators.spatial_join.cover_radius_join.
+3. ``grid_cell`` — a plain floor(lat/g)*2^21 + floor(lon/g) integer grid,
+   the one cell system for candidate generation, with one covering rule:
+   a shape maps to the exact cells its bbox touches
+   (``grid_bbox_cells_col``). The PIP join explodes each polygon's bbox;
+   every radius join (operators.spatial_join.cover_radius_join) explodes
+   one side's reach bbox (``cover_cells_col``) and keys the other side
+   by its own cell (``cover_cell_col``), so every pair within the radius
+   shares a cell — a covering set, the exact distance predicate runs
+   after the equi-join. The grid is expressible in ANSI SQL
+   (``grid_cell_sql``), so DuckDB-oracle-checked queries reproduce it.
 
 Reference analog: GO_Sync has *no* spatial index (O(N*M) nested loop,
 task/CompareData.java:1016-1069); this module is the headline
@@ -369,8 +367,16 @@ def make_hex_parent_udf():
 
 
 def hex_rings_needed_np(radius_m: float, res: int, abs_lat_deg: np.ndarray) -> np.ndarray:
-    """Vectorized per-row covering ring count (same bound as
-    hex_rings_needed)."""
+    """Per-row smallest k such that the filled k-ring is a *covering*
+    for `radius_m` ground meters at latitudes up to abs_lat_deg.
+
+    Geometry: hex centers at hex-distance d are >= 1.5*d*edge apart in the
+    plane (the lattice minimum, attained along the staggered direction),
+    and any point lies within one circumradius (= edge) of its cell
+    center, so two points at plane distance Dp sit in cells with
+    hexdist <= (Dp + 2*edge) / (1.5*edge). Ground-to-plane: longitude
+    distances stretch by 1/cos(lat) on the equirectangular plane.
+    """
     edge = hex_edge_m(res)
     coslat = np.maximum(np.cos(np.radians(np.abs(abs_lat_deg))), 1e-6)
     plane_r = radius_m / coslat
@@ -403,29 +409,16 @@ def hex_cover_np(lat_deg, lon_deg, radius_m: float, res: int, max_cells: int) ->
     return None if len(cells) > max_cells else cells.tolist()
 
 
-def hex_rings_needed(radius_m: float, res: int, max_abs_lat_deg: float = 0.0) -> int:
-    """Smallest k such that the filled k-ring is a *covering* for
-    `radius_m` ground meters.
-
-    Geometry: hex centers at hex-distance d are >= 1.5*d*edge apart in the
-    plane (the lattice minimum, attained along the staggered direction),
-    and any point lies within one circumradius (= edge) of its cell
-    center, so two points at plane distance Dp sit in cells with
-    hexdist <= (Dp + 2*edge) / (1.5*edge). Ground-to-plane: longitude
-    distances stretch by 1/cos(lat) on the equirectangular plane.
-    """
-    edge = hex_edge_m(res)
-    coslat = max(math.cos(math.radians(max_abs_lat_deg)), 1e-6)
-    plane_r = radius_m / coslat
-    return max(int(math.ceil((plane_r + 2.0 * edge) / (1.5 * edge))), 1)
-
-
 # ---------------------------------------------------------------------------
-# SQL-expressible lat/lon grid (for DuckDB-oracle queries)
+# Floor grid: the one candidate-cell system (radius joins, the PIP join,
+# the DuckDB-oracle queries)
 # ---------------------------------------------------------------------------
 
-
-_GRID_STRIDE = 400000  # lat-index packing stride (|lon index| < 200000 for cell_deg > 0.0009)
+# lat-index packing stride: |lon index| <= 180 / cell_deg < 2^20 for any
+# cell at least cover_grid_deg(COVER_MIN_RADIUS_M) = 0.00066 deg wide
+_GRID_STRIDE = 1 << 21
+COVER_MIN_RADIUS_M = 70.0
+_PAD = 1.0 + 1e-7  # float margin on the reach bbox half-widths
 
 
 def grid_index_col(deg, cell_deg: float) -> "F.Column":
@@ -456,46 +449,17 @@ def grid_bbox_cells_col(min_lat, min_lon, max_lat, max_lon, cell_deg: float) -> 
 
 
 def grid_cell_sql(lat: str, lon: str, cell_deg: float) -> str:
-    return f"(CAST(floor(({lat}) / {cell_deg!r}) AS BIGINT) * 400000 + CAST(floor(({lon}) / {cell_deg!r}) AS BIGINT))"
-
-
-# ---------------------------------------------------------------------------
-# JVM-only radius-covering grid (r7): candidate generation for radius
-# joins without the Python hex-ring boundary
-# ---------------------------------------------------------------------------
-#
-# A hex k-ring is geometry-faithful but pays two scale costs in a
-# radius-join prejoin: an Arrow round-trip per exploded side, and a ring
-# of 37-91 cells per row at res 9 for a 400 m radius. A plain
-# floor grid whose cell height equals the radius needs only 3 lat-rows,
-# and an ADAPTIVE number of lon-columns derived from the row's latitude
-# (3 below |lat| 47, 5 at 60, growing toward the poles where meridians
-# converge) — all computable as codegen'd Column arithmetic. Covering
-# argument (for the set {pairs: haversine < radius_m}):
-#   - d >= R*|dlat| so |dlat| < deg(r/R) < GLAT (GLAT has a 5% margin)
-#     => lat row indices differ by at most 1;
-#   - d >= 2R*asin(sqrt(cos(lat1)cos(lat2))*|sin(dlon/2)|) and
-#     |lat_other| <= |lat_row| + GLAT give
-#     |dlon| <= 2*deg(asin(sin(r/2R)/cos(|lat|+GLAT))) = B
-#     => lon col indices differ by at most floor(B/GLAT)+1 = k.
-#   When the asin argument reaches 1 (polar rows) B degenerates to 360
-#   and the row covers the whole lon range — correct, never wrong, and
-#   only hit within ~GLAT of a pole.
-# The exact distance predicate downstream remains the only filter that
-# decides membership; the grid only proposes candidates.
-# Known limit (shared with the hex grid it replaces and the synthetic /
-# fixture data ranges): longitude does not wrap at the antimeridian —
-# a pair straddling +/-180 deg is not co-bucketed.
-
-_COVER_STRIDE = 1 << 21  # lon-index packing stride (|lonidx| < 2^20 for any radius >= 70 m)
-COVER_MIN_RADIUS_M = 70.0
+    return (
+        f"(CAST(floor(({lat}) / {cell_deg!r}) AS BIGINT) * {_GRID_STRIDE}"
+        f" + CAST(floor(({lon}) / {cell_deg!r}) AS BIGINT))"
+    )
 
 
 def cover_grid_deg(radius_m: float) -> float:
-    """Cell size (degrees of latitude) for cover_cell_col/cover_cells_col.
+    """Cell size (degrees) of the grid a radius join keys on.
 
     radius_m must be >= 70 m: below that the lon index range would
-    overflow the _COVER_STRIDE packing and lat/lon cells could collide
+    overflow the _GRID_STRIDE packing and lat/lon cells could collide
     silently. Every engine radius (400 m compare/assign, 20 km driver
     queries) is far above the floor; the guard makes a future misuse
     fail loudly instead of corrupting the candidate set."""
@@ -508,40 +472,30 @@ def cover_grid_deg(radius_m: float) -> float:
 
 
 def cover_cell_col(lat, lon, radius_m: float) -> "F.Column":
-    """Exact covering-grid cell of a point (the probe/stream side)."""
-    g = cover_grid_deg(radius_m)
-    return (
-        F.floor(lat / F.lit(g)) * F.lit(_COVER_STRIDE) + F.floor(lon / F.lit(g))
-    ).cast("long")
+    """A point's own cell on the radius_m grid (the probe/stream side)."""
+    return grid_cell_col(lat, lon, cover_grid_deg(radius_m))
 
 
 def cover_cells_col(lat, lon, radius_m: float) -> "F.Column":
-    """Array of every covering-grid cell whose points can lie within
-    radius_m (haversine) of this point (the exploded/build side)."""
+    """Array of the radius_m-grid cells of every point within radius_m
+    (haversine) of this point (the exploded/build side): the exact cells
+    of its reach bbox.
+
+    Covering: a partner at d < r has |dlat| <= deg(r/R) (d >= R|dlat|),
+    so both latitudes lie within |lat| + deg(r/R), and d >=
+    2R*asin(sqrt(cos1*cos2)*|sin(dlon/2)|) bounds |dlon| by
+    B = 2*deg(asin(sin(r/2R) / cos(|lat| + deg(r/R)))). The partner thus
+    lies in the bbox, whose cells grid_bbox_cells_col lists exactly. An
+    asin argument at or above 1 (within ~deg(r/R) of a pole) makes B the
+    whole longitude range. Longitude does not wrap at +/-180: a pair
+    straddling the antimeridian is not co-bucketed."""
     g = cover_grid_deg(radius_m)
-    base = cover_cell_col(lat, lon, radius_m)
-    # B = conservative |dlon| bound in degrees for a partner point; the
-    # asin argument is clamped: >= 1 (near-polar) degenerates to the
-    # whole lon range.
-    sin_half = math.sin(radius_m / (2.0 * EARTH_RADIUS_M))
-    arg = F.lit(sin_half) / F.cos(
-        F.radians(F.least(F.abs(lat) + F.lit(g), F.lit(89.9999)))
+    reach_deg = math.degrees(radius_m / EARTH_RADIUS_M)
+    arg = F.lit(math.sin(radius_m / (2.0 * EARTH_RADIUS_M))) / F.cos(
+        F.radians(F.least(F.abs(lat) + F.lit(reach_deg), F.lit(89.9999)))
     )
-    b_deg = F.when(
-        arg < 1.0, F.degrees(F.asin(arg)) * F.lit(2.0)
-    ).otherwise(F.lit(360.0))
-    k = F.least(
-        (F.floor(b_deg / F.lit(g)) + F.lit(1)),
-        F.lit(int(180.0 / g) + 1),
-    ).cast("int")
-    row = F.sequence(-k, k)
-    return F.flatten(
-        F.transform(
-            row,
-            lambda o: F.array(
-                base - F.lit(_COVER_STRIDE) + o.cast("long"),
-                base + o.cast("long"),
-                base + F.lit(_COVER_STRIDE) + o.cast("long"),
-            ),
-        )
+    b = F.when(arg < 1.0, F.degrees(F.asin(arg)) * F.lit(2.0 * _PAD)).otherwise(F.lit(360.0))
+    h = F.lit(reach_deg * _PAD)
+    return grid_bbox_cells_col(
+        lat - h, F.greatest(lon - b, F.lit(-180.0)), lat + h, F.least(lon + b, F.lit(180.0)), g
     )

@@ -186,22 +186,3 @@ def vincenty_m_udf(
         lon2.to_numpy(np.float64),
     )
     return pd.Series(out)
-
-
-def bounding_box(df, lat="lat", lon="lon", delta_deg: float = 0.004):
-    """Padded bounding box aggregation (CompareData.java:202-261, DELTA=0.004).
-
-    Returns (min_lat, max_lat, min_lon, max_lon) floats via one agg.
-    """
-    row = df.agg(
-        F.min(lat).alias("min_lat"),
-        F.max(lat).alias("max_lat"),
-        F.min(lon).alias("min_lon"),
-        F.max(lon).alias("max_lon"),
-    ).collect()[0]
-    return (
-        row["min_lat"] - delta_deg,
-        row["max_lat"] + delta_deg,
-        row["min_lon"] - delta_deg,
-        row["max_lon"] + delta_deg,
-    )

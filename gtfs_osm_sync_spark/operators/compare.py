@@ -62,6 +62,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql import Window as W
 
 from ..functions.geo import (
@@ -71,11 +72,18 @@ from ..functions.geo import (
     vincenty_m_udf,
 )
 from ..functions.mappings import zero_pad_id
-from .spatial_join import cover_radius_join
+from .spatial_join import DEFAULT_RADIUS_M, ERROR_TO_ZERO_M, cover_radius_join
 
-RANGE_M = 400.0  # CompareData.java:129
-ERROR_TO_ZERO_M = 0.5  # CompareData.java:127
 FIXME_REDUNDANT = "This bus stop could be redundant"  # CompareData.java:1155
+
+# Vincenty for the id match, whose output keeps dist_m: Catalyst pushes a
+# filter on a deterministic UDF's alias below the defining projection with
+# the UDF inlined, so Vincenty would run twice per pair. A nondeterministic
+# projection holds every filter above it; nothing downstream filters the
+# id-match pairs. A separate UDF object: asNondeterministic() mutates its
+# receiver, and the probes' filters must still cross vincenty_m_udf.
+_vincenty_once = F.pandas_udf(vincenty_m_udf.func, T.DoubleType()).asNondeterministic()
+
 
 def operator_gate(op_col, agency_names: list[str], alias_regexes: list[str] | None = None):
     """OperatorInfo.isTheSameOperator as a Column predicate
@@ -214,7 +222,7 @@ def _stage(
             < radius_m / VIN_OVER_HAV_MIN
         )
         .withColumn(
-            "dist_m", vincenty_m_udf(F.col("o_lat"), F.col("o_lon"), F.col("lat"), F.col("lon"))
+            "dist_m", _vincenty_once(F.col("o_lat"), F.col("o_lon"), F.col("lat"), F.col("lon"))
         )
         .filter(F.col("dist_m") < radius_m)
     )
@@ -343,7 +351,7 @@ def compare_stops(
     nodes: DataFrame,
     agency_names: list[str],
     id_digits: int = 4,
-    radius_m: float = RANGE_M,
+    radius_m: float = DEFAULT_RADIUS_M,
     network_key: str = "operator",
     broadcast_stops: bool = True,
     alias_regexes: list[str] | None = None,
@@ -506,7 +514,7 @@ def redundant_node_modifies(
     nodes: DataFrame,
     agency_names: list[str],
     id_digits: int = 4,
-    radius_m: float = RANGE_M,
+    radius_m: float = DEFAULT_RADIUS_M,
     network_key: str = "operator",
     broadcast_stops: bool = True,
     alias_regexes: list[str] | None = None,

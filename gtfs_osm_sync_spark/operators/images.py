@@ -103,6 +103,7 @@ MOSAIC_SCHEMA = T.StructType(
         T.StructField("grid", T.IntegerType()),
         T.StructField("tile_w", T.IntegerType()),
         T.StructField("tile_h", T.IntegerType()),
+        T.StructField("px_sum", T.LongType()),
         T.StructField("mosaic_png", T.BinaryType()),
     ]
 )
@@ -114,7 +115,9 @@ def assemble_mosaic_pdf(
     """One cell's mosaic: deterministic order, bounded canvas.
 
     If the caller pre-limited the group (mosaic_by_cell), `_n_total`
-    carries the true cell population; otherwise it's len(pdf)."""
+    carries the true cell population; otherwise it's len(pdf). px_sum
+    (sum of canvas bytes) is the codec-independent content fingerprint
+    the pyramid's base level carries."""
     pdf = pdf.sort_values("image_id")
     n_total = int(pdf["_n_total"].iloc[0]) if "_n_total" in pdf.columns and len(pdf) else len(pdf)
     pdf = pdf.head(max_images_per_cell)
@@ -138,6 +141,7 @@ def assemble_mosaic_pdf(
                 grid,
                 canvas.shape[1],
                 canvas.shape[0],
+                int(canvas.astype(np.int64).sum()),
                 png_encode(canvas),
             )
         ],
@@ -447,14 +451,8 @@ def mosaic_pyramid(
     on mosaic_by_cell.
     """
     from ..functions.cells import make_hex_parent_udf
-    from ..functions.codecs import png_decode as _dec
 
     base = mosaic_by_cell(images_geo, cell_px, max_images_per_cell)
-
-    @F.pandas_udf(T.LongType())
-    def px_sum_udf(png: pd.Series) -> pd.Series:
-        return pd.Series([int(_dec(b).astype(np.int64).sum()) for b in png])
-
     cur = base.select(
         "hex_cell",
         F.col("n_images").alias("n_children"),
@@ -462,7 +460,7 @@ def mosaic_pyramid(
         "grid",
         "tile_w",
         "tile_h",
-        px_sum_udf("mosaic_png").alias("px_sum"),
+        "px_sum",
         "mosaic_png",
     )
 

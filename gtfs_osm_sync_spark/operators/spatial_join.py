@@ -8,21 +8,22 @@ engine (radius_join/knn_join here, assign_images, compare's conflict and
 adoption probes, the driver's spatial queries) goes through ONE builder,
 cover_radius_join:
 
-  build side --cover_cells_col--> explode to the covering-grid cells
-  probe side --cover_cell_col-->  its own cell (floor arithmetic)
+  build side --cover_cells_col--> explode to the grid cells of its reach bbox
+  probe side --cover_cell_col-->  its own grid cell (floor arithmetic)
   hash equi-join on (extra keys, cell)   (broadcast / shuffle-hash)
   conservative bbox test  (no trig)
   haversine with cos(lat) hoisted to one evaluation per row
   keep: haversine < reach_m, or inside a (lo, hi) band
 
 Scale notes:
-- Candidate generation multiplies ONE side by its 9-15 cover cells (a
-  hundred or more only near the poles); it is all JVM Column
-  arithmetic, so the join stage codegens with no Python boundary.
+- Candidate generation multiplies ONE side by the 4-12 floor-grid cells
+  its reach bbox touches at |lat| <= 40 (more toward the poles, where
+  the bbox widens in longitude); it is all JVM Column arithmetic, so the
+  join stage codegens with no Python boundary.
 - When the exploded side does not fit a broadcast, both sides shuffle on
   the cell; dense urban cells are the skew risk, handled by AQE skew
   splitting and, in radius_join, by explicit salting (n_salt).
-- The cover grid is a covering, not an exact set: the haversine keep
+- The cover cells are a covering, not an exact set: the haversine keep
   predicate is the precise filter (same contract as the reference's
   RANGE check), and Vincenty consumers ask for the proven haversine
   superset of their Vincenty keep set (VIN_OVER_HAV_MIN).

@@ -65,7 +65,7 @@ from ..functions.cells import hex_cover_np, make_hex_cell_udf
 from ..functions.geo import VIN_OVER_HAV_MIN
 from ..functions.mappings import zero_pad_id
 from ..operators.compare import compare_stops
-from ..operators.spatial_join import cover_radius_join
+from ..operators.spatial_join import DEFAULT_RADIUS_M, cover_radius_join
 from ..sources.snaptable import SnapTable
 
 # partition-column resolution for the feed and node-log layout: res 1
@@ -113,7 +113,7 @@ def _within_reach(rows: DataFrame, points: DataFrame, radius_m: float) -> DataFr
 
 
 def affected_stop_ids(
-    gtfs: DataFrame, changed: DataFrame, radius_m: float = 400.0
+    gtfs: DataFrame, changed: DataFrame, radius_m: float = DEFAULT_RADIUS_M
 ) -> DataFrame:
     """gtfs_id of every stop whose compare result CAN change given this
     batch of node updates: within reach of a changed node position.
@@ -126,7 +126,7 @@ def affected_stop_ids(
 
 
 def prune_state_to_stop_rings(
-    state: DataFrame, sub: DataFrame, radius_m: float = 400.0
+    state: DataFrame, sub: DataFrame, radius_m: float = DEFAULT_RADIUS_M
 ) -> DataFrame:
     """The merged node state restricted to nodes within reach of a
     re-compared stop in `sub`: every compare branch drops any other node,
@@ -134,7 +134,9 @@ def prune_state_to_stop_rings(
     return _within_reach(state, sub, radius_m)
 
 
-def coarse_partition_cells(sub: DataFrame, radius_m: float = 400.0) -> list[int] | None:
+def coarse_partition_cells(
+    sub: DataFrame, radius_m: float = DEFAULT_RADIUS_M
+) -> list[int] | None:
     """The COARSE_RES hex cells covering the reach of every (lat, lon) in
     `sub`, or None when that covering exceeds MAX_PRUNE_CELLS (the caller
     then scans plain). `sub` is O(k * ring) rows (the changed positions
@@ -217,7 +219,7 @@ def apply_update_batch(
     agency_names: list[str],
     batch_id: int,
     run_id: str = "sync",
-    radius_m: float = 400.0,
+    radius_m: float = DEFAULT_RADIUS_M,
     full_recompare_frac: float | None = 0.1,
     n_feed: int | None = None,
     feed_ids: DataFrame | None = None,

@@ -82,15 +82,6 @@ def phash_latlon_np(
     return clat + f1 * spread, clon + f2 * spread
 
 
-def make_phash_latlon_udf():
-    @F.pandas_udf("lat double, lon double")
-    def phash_latlon(phash: pd.Series) -> pd.DataFrame:
-        lat, lon = phash_latlon_np(phash.to_numpy(np.int64))
-        return pd.DataFrame({"lat": lat, "lon": lon})
-
-    return phash_latlon
-
-
 # ---------------------------------------------------------------------------
 # images table
 # ---------------------------------------------------------------------------

@@ -72,7 +72,7 @@ def test_hex_ring_covers_radius():
     lat0 = rng.uniform(-55, 55, 300)
     lon0 = rng.uniform(-170, 170, 300)
     R = 400.0
-    k = cells.hex_rings_needed(R, 9, 56.0)
+    k = int(cells.hex_rings_needed_np(R, 9, np.array([56.0]))[0])
     # displace by up to R meters in a random direction
     ang = rng.uniform(0, 2 * math.pi, 300)
     dlat = np.cos(ang) * R / 111_320.0
@@ -155,14 +155,9 @@ def test_vin_over_hav_bracket_contains_curvature_radii():
     assert geo.VIN_OVER_HAV_MAX - ratios.max() < 1e-5
 
 
-def _partners_within(rng, n, radius_m):
-    """n random (point, partner) pairs with haversine(point, partner) <
-    radius_m, |lat| <= 89 on both ends and no antimeridian crossing."""
-    lat = rng.uniform(-89.0, 89.0, 4 * n)
-    lon = rng.uniform(-179.0, 179.0, 4 * n)
-    d = radius_m * np.sqrt(rng.uniform(0.0, 1.0, 4 * n)) * 0.999999
-    brg = rng.uniform(0.0, 2.0 * np.pi, 4 * n)
-    # spherical destination point (the haversine metric's geodesic)
+def _destination(lat, lon, d, brg):
+    """Spherical destination point (the haversine metric's geodesic) at
+    distance d meters and initial bearing brg radians; lon unwrapped."""
     phi1, lam1, delta = np.radians(lat), np.radians(lon), d / geo.EARTH_RADIUS_M
     phi2 = np.arcsin(
         np.sin(phi1) * np.cos(delta) + np.cos(phi1) * np.sin(delta) * np.cos(brg)
@@ -171,7 +166,16 @@ def _partners_within(rng, n, radius_m):
         np.sin(brg) * np.sin(delta) * np.cos(phi1),
         np.cos(delta) - np.sin(phi1) * np.sin(phi2),
     )
-    plat, plon = np.degrees(phi2), np.degrees(lam2)
+    return np.degrees(phi2), np.degrees(lam2)
+
+
+def _partners_within(rng, n, radius_m):
+    """n random (point, partner) pairs with haversine(point, partner) <
+    radius_m, |lat| <= 89 on both ends and no antimeridian crossing."""
+    lat = rng.uniform(-89.0, 89.0, 4 * n)
+    lon = rng.uniform(-179.0, 179.0, 4 * n)
+    d = radius_m * np.sqrt(rng.uniform(0.0, 1.0, 4 * n)) * 0.999999
+    plat, plon = _destination(lat, lon, d, rng.uniform(0.0, 2.0 * np.pi, 4 * n))
     ok = (
         (np.abs(plat) <= 89.0)
         & (np.abs(plon) < 180.0)
@@ -182,17 +186,38 @@ def _partners_within(rng, n, radius_m):
     return lat[idx], lon[idx], plat[idx], plon[idx]
 
 
+def _partners_at_edge(radius_m):
+    """Partners due N, S, E and W at 0.9999999 r from points at lat 0,
+    45, 80 and 89.5 (and their mirror south) and lon 0 and +/-179.99,
+    where the reach bbox's latitude and longitude half-widths are
+    tightest. The cover does not wrap at the antimeridian, so partners
+    whose longitude crosses +/-180 are left out."""
+    lat, lon, brg = (
+        a.ravel()
+        for a in np.meshgrid(
+            [0.0, 45.0, 80.0, 89.5, -45.0, -80.0, -89.5],
+            [0.0, 179.99, -179.99],
+            np.radians([0.0, 90.0, 180.0, 270.0]),
+        )
+    )
+    plat, plon = _destination(lat, lon, np.full(len(lat), 0.9999999 * radius_m), brg)
+    ok = np.abs(plon) <= 180.0
+    assert (geo.haversine_m_np(lat, lon, plat, plon)[ok] < radius_m).all()
+    return lat[ok], lon[ok], plat[ok], plon[ok]
+
+
 def test_cover_cells_contain_every_partner_cell(spark):
     """The one candidate primitive: for random (point, partner within r)
     pairs, the partner's cover_cell_col lies in the point's
     cover_cells_col, at every radius the engine joins with (compare's
-    70 m floor, 400 m, the 402.25 m Vincenty shell, 20 km, 30 km)."""
+    70 m floor, 400 m, the 402.25 m Vincenty shell, 20 km, 30 km), plus
+    the deterministic partners at the edge of the reach."""
     radii = [70.0, 400.0, 402.25, 20_000.0, 30_000.0]
     rng = np.random.default_rng(20261016)
     rows = []
     for i, r in enumerate(radii):
-        lat, lon, plat, plon = _partners_within(rng, 400, r)
-        rows += [(i, *map(float, t)) for t in zip(lat, lon, plat, plon)]
+        for lat, lon, plat, plon in (_partners_within(rng, 400, r), _partners_at_edge(r)):
+            rows += [(i, *map(float, t)) for t in zip(lat, lon, plat, plon)]
     df = spark.createDataFrame(rows, "ri int, lat double, lon double, plat double, plon double")
     covered = F.coalesce(
         *[
@@ -210,3 +235,40 @@ def test_cover_cells_contain_every_partner_cell(spark):
     assert not missed, f"{len(missed)} partners outside the cover, e.g. {missed[:3]}"
     with pytest.raises(ValueError):
         cells.cover_grid_deg(69.9)
+
+
+def test_grid_stride_and_tight_cover(spark):
+    """The floor grid's packing stride keeps the finest grid the engine
+    keys on (cover_grid_deg(70 m), |lon index| up to 272k) injective: a
+    row's cells at lon -180..180 all sort below the next row's. A 400 m
+    cover is the reach bbox's exact cells, at most 3 rows x 4 columns
+    below |lat| 40."""
+    g = cells.cover_grid_deg(70.0)
+    pts = spark.createDataFrame(
+        [(row, (row + 0.5) * g, lon) for row in (10, 11) for lon in (-180.0, 0.0, 179.9999)],
+        "row int, lat double, lon double",
+    )
+    got = (
+        pts.select("row", cells.grid_cell_col(F.col("lat"), F.col("lon"), g).alias("c"))
+        .groupBy("row")
+        .agg(F.min("c").alias("lo"), F.max("c").alias("hi"), F.countDistinct("c").alias("n"))
+        .orderBy("row")
+        .collect()
+    )
+    assert [r["n"] for r in got] == [3, 3]
+    assert got[0]["hi"] < got[1]["lo"]
+    # the oracle-side SQL formula packs with the same stride
+    sql_eq = pts.select(
+        (F.expr(cells.grid_cell_sql("lat", "lon", g))
+         == cells.grid_cell_col(F.col("lat"), F.col("lon"), g)).alias("eq")
+    )
+    assert all(r["eq"] for r in sql_eq.collect())
+
+    lat, lon = (a.ravel() for a in np.meshgrid(np.linspace(-40.0, 40.0, 161), [-120.0, 0.3, 77.7]))
+    n_cells = (
+        spark.createDataFrame([(float(a), float(b)) for a, b in zip(lat, lon)], "lat double, lon double")
+        .select(F.size(cells.cover_cells_col(F.col("lat"), F.col("lon"), 400.0)).alias("n"))
+        .agg(F.max("n").alias("max"), F.min("n").alias("min"))
+        .first()
+    )
+    assert n_cells["min"] >= 4 and n_cells["max"] <= 12, n_cells
