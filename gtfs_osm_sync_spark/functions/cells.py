@@ -15,8 +15,7 @@ Three index families, three jobs:
    on an equirectangular plane, with H3-compatible resolution sizing
    (edge_m(res) = res-0 edge / sqrt(7)^res, so res 9 ~ 174.4 m edge,
    matching H3 res 9). Stored as a data column and used for tiling (the
-   aperture-7 mosaic pyramid) and the streaming sync's partitioning;
-   hex k-rings are exact and cheap in axial coords. NOTE: this is an
+   aperture-7 mosaic pyramid). NOTE: this is an
    H3-*style* index (same cell sizing, same ring semantics), not
    bit-identical to Uber H3 — the h3 library is unavailable in this
    environment and the engine never assumes H3's exact bit layout.
@@ -29,7 +28,10 @@ Three index families, three jobs:
    one side's reach bbox (``cover_cells_col``) and keys the other side
    by its own cell (``cover_cell_col``), so every pair within the radius
    shares a cell — a covering set, the exact distance predicate runs
-   after the equi-join. The grid is expressible in ANSI SQL
+   after the equi-join. The streaming sync partitions its feed and node
+   log by a coarse grid cell and prunes both scans to the coarse cells
+   of the changed nodes' reach (``reach_cells_col``, the same rule at a
+   coarser cell). The grid is expressible in ANSI SQL
    (``grid_cell_sql``), so DuckDB-oracle-checked queries reproduce it.
 
 Reference analog: GO_Sync has *no* spatial index (O(N*M) nested loop,
@@ -241,7 +243,7 @@ def s2_cell_center_latlon(cell_id, level: int = 15):
 
 
 # ---------------------------------------------------------------------------
-# Hex index (H3-style sizing, axial coordinates, exact k-rings)
+# Hex index (H3-style sizing, axial coordinates)
 # ---------------------------------------------------------------------------
 
 _HEX_RES0_EDGE_M = 1107712.591  # H3 res-0 mean edge; edge(res) = this / sqrt(7)^res
@@ -366,49 +368,6 @@ def make_hex_parent_udf():
     return hex_parent
 
 
-def hex_rings_needed_np(radius_m: float, res: int, abs_lat_deg: np.ndarray) -> np.ndarray:
-    """Per-row smallest k such that the filled k-ring is a *covering*
-    for `radius_m` ground meters at latitudes up to abs_lat_deg.
-
-    Geometry: hex centers at hex-distance d are >= 1.5*d*edge apart in the
-    plane (the lattice minimum, attained along the staggered direction),
-    and any point lies within one circumradius (= edge) of its cell
-    center, so two points at plane distance Dp sit in cells with
-    hexdist <= (Dp + 2*edge) / (1.5*edge). Ground-to-plane: longitude
-    distances stretch by 1/cos(lat) on the equirectangular plane.
-    """
-    edge = hex_edge_m(res)
-    coslat = np.maximum(np.cos(np.radians(np.abs(abs_lat_deg))), 1e-6)
-    plane_r = radius_m / coslat
-    return np.maximum(np.ceil((plane_r + 2.0 * edge) / (1.5 * edge)).astype(np.int64), 1)
-
-
-def hex_cover_np(lat_deg, lon_deg, radius_m: float, res: int, max_cells: int) -> list[int] | None:
-    """Sorted res-`res` hex cells covering every point within radius_m
-    (haversine) of any input point, or None when more than max_cells
-    cells would be needed. Each input cell's filled k-ring takes k from
-    hex_rings_needed_np at the highest |lat| the radius reaches, with no
-    cap: near a pole k grows until the covering exceeds max_cells, so a
-    polar input gets None (scan everything), never a short covering."""
-    lat = np.asarray(lat_deg, dtype=np.float64)
-    lon = np.asarray(lon_deg, dtype=np.float64)
-    if not len(lat):
-        return []
-    ks = hex_rings_needed_np(radius_m, res, np.abs(lat) + math.degrees(radius_m / EARTH_RADIUS_M))
-    kmax = int(ks.max())
-    if 3 * kmax * (kmax + 1) + 1 > max_cells:
-        return None
-    # one ring per distinct input cell, at that cell's largest k
-    base, inv = np.unique(hex_cell_np(lat, lon, res), return_inverse=True)
-    kb = np.zeros(len(base), dtype=np.int64)
-    np.maximum.at(kb, inv.ravel(), ks)
-    _res, q, r = hex_cell_unpack(base)
-    dq, dr = (a.ravel() for a in np.meshgrid(np.arange(-kmax, kmax + 1), np.arange(-kmax, kmax + 1)))
-    keep = np.maximum(np.maximum(np.abs(dq), np.abs(dr)), np.abs(dq + dr))[None, :] <= kb[:, None]
-    cells = np.unique(hex_cell_pack(res, (q[:, None] + dq)[keep], (r[:, None] + dr)[keep]))
-    return None if len(cells) > max_cells else cells.tolist()
-
-
 # ---------------------------------------------------------------------------
 # Floor grid: the one candidate-cell system (radius joins, the PIP join,
 # the DuckDB-oracle queries)
@@ -478,8 +437,13 @@ def cover_cell_col(lat, lon, radius_m: float) -> "F.Column":
 
 def cover_cells_col(lat, lon, radius_m: float) -> "F.Column":
     """Array of the radius_m-grid cells of every point within radius_m
-    (haversine) of this point (the exploded/build side): the exact cells
-    of its reach bbox.
+    (haversine) of this point (the exploded/build side)."""
+    return reach_cells_col(lat, lon, radius_m, cover_grid_deg(radius_m))
+
+
+def reach_cells_col(lat, lon, radius_m: float, cell_deg: float) -> "F.Column":
+    """Array of the cell_deg-grid cells of every point within radius_m
+    (haversine) of this point: the exact cells of its reach bbox.
 
     Covering: a partner at d < r has |dlat| <= deg(r/R) (d >= R|dlat|),
     so both latitudes lie within |lat| + deg(r/R), and d >=
@@ -489,7 +453,6 @@ def cover_cells_col(lat, lon, radius_m: float) -> "F.Column":
     asin argument at or above 1 (within ~deg(r/R) of a pole) makes B the
     whole longitude range. Longitude does not wrap at +/-180: a pair
     straddling the antimeridian is not co-bucketed."""
-    g = cover_grid_deg(radius_m)
     reach_deg = math.degrees(radius_m / EARTH_RADIUS_M)
     arg = F.lit(math.sin(radius_m / (2.0 * EARTH_RADIUS_M))) / F.cos(
         F.radians(F.least(F.abs(lat) + F.lit(reach_deg), F.lit(89.9999)))
@@ -497,5 +460,6 @@ def cover_cells_col(lat, lon, radius_m: float) -> "F.Column":
     b = F.when(arg < 1.0, F.degrees(F.asin(arg)) * F.lit(2.0 * _PAD)).otherwise(F.lit(360.0))
     h = F.lit(reach_deg * _PAD)
     return grid_bbox_cells_col(
-        lat - h, F.greatest(lon - b, F.lit(-180.0)), lat + h, F.least(lon + b, F.lit(180.0)), g
+        lat - h, F.greatest(lon - b, F.lit(-180.0)), lat + h, F.least(lon + b, F.lit(180.0)),
+        cell_deg,
     )

@@ -652,29 +652,6 @@ def export_gtfs_value_with_osm_tags(
     )
 
 
-def member_gtfs_ids(
-    members: DataFrame, compared: DataFrame, nodes: DataFrame
-) -> DataFrame:
-    """J8: resolve each relation member's gtfs_id — first from the
-    compare output's osm_id -> gtfs_id map (osmIdToGtfsId,
-    CompareData.java:774-776), else from the referenced node's own
-    gtfs_id tag (CompareData.java:777-785). Two left equi-joins on ref.
-    """
-    matched = compared.filter(F.col("osm_id").isNotNull()).select(
-        F.col("osm_id").alias("ref"), F.col("gtfs_id").alias("_matched_gid")
-    )
-    node_ids = nodes.select(
-        F.col("osm_id").alias("ref"),
-        F.col("tags").getItem("gtfs_id").alias("_node_gid"),
-    )
-    return (
-        members.join(matched, "ref", "left")
-        .join(node_ids, "ref", "left")
-        .withColumn("member_gtfs_id", F.coalesce("_matched_gid", "_node_gid"))
-        .drop("_matched_gid", "_node_gid")
-    )
-
-
 def relation_change_status(
     pairs: DataFrame,
     route_members: DataFrame,

@@ -1,7 +1,7 @@
-"""Report sinks (SURVEY §2.1 K1-K4): CSV exports and OsmChange XML.
+"""Report sinks (SURVEY §2.1 K1, K3, K4): CSV exports and OsmChange XML.
 
-K1/K2 are plain df.write.csv with the reference's column/format rules
-(io/WriteFile.java:214-313); the 'k=v|k=v' tag column comes from
+K1 is a plain df.write.csv with the reference's column/format rules
+(io/WriteFile.java:214-296); the 'k=v|k=v' tag column comes from
 tags_to_kv_string. Ordering is pinned to stop_id (lexical) — the
 reference's String.hashCode selection sort (WriteFile.java:122-135) is a
 Java artifact, documented deviation (SURVEY §4).
@@ -52,18 +52,6 @@ def export_stops_csv(
     out.select(*cols).orderBy("stop_id").coalesce(1).write.mode("overwrite").option(
         "header", True
     ).csv(path)
-
-
-def export_stop_list_csv(df: DataFrame, path: str) -> None:
-    """K2: stop_id,stop_name,stop_lat,stop_lon (WriteFile.java:296-313)."""
-    df.select(
-        F.col("gtfs_id").alias("stop_id"),
-        F.col("name").alias("stop_name"),
-        F.col("lat").alias("stop_lat"),
-        F.col("lon").alias("stop_lon"),
-    ).orderBy("stop_id").coalesce(1).write.mode("overwrite").option("header", True).csv(
-        path
-    )
 
 
 MAX_CHANGE_ELEMENTS = 1_000_000  # driver-memory guard for the in-memory doc

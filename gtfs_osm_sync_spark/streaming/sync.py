@@ -27,18 +27,22 @@ spatial_join.cover_radius_join left-semi joins at that reach, the small
 side exploded to its cover cells and broadcast: JVM arithmetic on
 lat/lon, no Python and no stored cell column.
 
-Layout. The coarse hex cell `cell_part` (COARSE_RES) is the partition
-column of the stored feed (stamp_feed_cells, written
-`repartition("cell_part")` + `partitionBy("cell_part")`, one file per
-hive partition) and of a node log opened `partition_by="cell_part"` and
-compact_node_log()'d. Per batch, both wide scans filter on the coarse
-cells covering the reach (coarse_partition_cells), which the scan turns
-into PartitionFilters. A covering wider than MAX_PRUNE_CELLS prunes
-nothing worth its literal-set evaluation, so both scans then run plain.
-The node log's post-compaction tail is always read in full: a base row
-superseded after compaction has its newer version in the tail
-(read_split), and an extra current tail row is dropped again by the
-state prune.
+Layout. The coarse floor-grid cell `cell_part` (COARSE_DEG, a JVM
+expression) is the partition column of the stored feed
+(stamp_feed_cells, written `repartition("cell_part")` +
+`partitionBy("cell_part")`, one file per hive partition) and of a node
+log opened `partition_by="cell_part"` and compact_node_log()'d. Per
+batch, the changed positions' reach bboxes are exploded once to their
+coarse cells at TWICE the reach (coarse_partition_cells, the floor
+grid's one covering rule): an affected stop is within one reach of a
+changed position and every node the compare keeps is within one reach
+of an affected stop, so by the triangle inequality both scans can filter
+on that one cell list, which the scan turns into PartitionFilters. A
+covering wider than MAX_PRUNE_CELLS prunes nothing worth its
+literal-set evaluation, so both scans then run plain. The node log's
+post-compaction tail is always read in full: a base row superseded
+after compaction has its newer version in the tail (read_split), and an
+extra current tail row is dropped again by the state prune.
 
 The known-id universe (which feed ids exist, for the foreign-id verdict)
 is NEVER cell-pruned: a node near a re-compared stop may carry the id of
@@ -57,48 +61,59 @@ coalesce(defaultParallelism) + localCheckpoint'ed before the re-compare
 
 from __future__ import annotations
 
-import numpy as np
+import math
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.cells import hex_cover_np, make_hex_cell_udf
-from ..functions.geo import VIN_OVER_HAV_MIN
+from ..functions.cells import grid_cell_col, hex_edge_m, reach_cells_col
+from ..functions.geo import EARTH_RADIUS_M, VIN_OVER_HAV_MIN
 from ..functions.mappings import zero_pad_id
 from ..operators.compare import compare_stops
 from ..operators.spatial_join import DEFAULT_RADIUS_M, cover_radius_join
 from ..sources.snaptable import SnapTable
 
-# partition-column resolution for the feed and node-log layout: res 1
-# cells are ~455k km^2 (edge ~420 km), ~1,100 land partitions planet-wide
-# -- coarse enough that partitionBy stays at file-count sanity, fine
-# enough that a clustered delta batch touches a handful of partitions
+# partition-column resolution for the feed and node-log layout: the
+# floor cell with the plane area of a res-1 hex (~455k km^2, edge ~420 km),
+# ~6.07 deg, 1,800 cells planet-wide -- coarse enough that partitionBy
+# stays at file-count sanity, fine enough that a clustered delta batch
+# touches a handful of partitions
 COARSE_RES = 1
+COARSE_DEG = math.degrees(
+    math.sqrt(1.5 * math.sqrt(3.0)) * hex_edge_m(COARSE_RES) / EARTH_RADIUS_M
+)
 # a coarse covering wider than this scans plain: a wide scatter prunes
 # nothing, and the isin literal-set evaluation over every cell cost ~2.2x
 # a flat feed's scan against ~1.3x for the bare partitioned scan
-# (BENCH/BASELINE.md delta section). A minority of the populated
-# partitions (~1,100 planet-wide).
+# (BENCH/BASELINE.md delta section). A minority of the 1,800 cells.
 MAX_PRUNE_CELLS = 256
 # widest batch whose touched ids are pushed into the node-log scan as an
 # In list; a thousands-deep list bloats the plan and filters per row anyway
 ID_PUSHDOWN_LIMIT = 1000
 
 
+def _latest(log: DataFrame, key: str, *order: str) -> DataFrame:
+    """The row with the greatest (order...) per key, every column kept.
+    Single partial-aggregating max_by per key — one shuffle, map-side
+    combined, no window."""
+    rest = [c for c in log.columns if c != key]
+    return (
+        log.groupBy(key)
+        .agg(F.max_by(F.struct(*rest), F.struct(*order)).alias("_r"))
+        .select(key, "_r.*")
+    )
+
+
+def _latest_nodes(log: DataFrame) -> DataFrame:
+    """The live latest row per osm_id: the highest update_seq wins (ties
+    broken by elem_idx — later in the batch wins, mirroring last-writer
+    file order); tombstones (deleted=true) drop out."""
+    return _latest(log, "osm_id", "update_seq", "elem_idx").filter(~F.col("deleted"))
+
+
 def current_nodes(log: DataFrame) -> DataFrame:
-    """Merge-on-read node state from the append-only update log: the row
-    with the highest update_seq per osm_id wins (ties broken by elem_idx
-    — later in the batch wins, mirroring last-writer file order);
-    tombstones (deleted=true) drop out. Single partial-aggregating
-    max_by per key — one shuffle, map-side combined, no window."""
-    latest = log.groupBy("osm_id").agg(
-        F.max_by(
-            F.struct(*[c for c in log.columns if c != "osm_id"]),
-            F.struct(F.col("update_seq"), F.col("elem_idx")),
-        ).alias("_r")
-    )
-    return latest.select("osm_id", "_r.*").filter(~F.col("deleted")).drop(
-        "deleted", "update_seq"
-    )
+    """Merge-on-read node state from the append-only update log."""
+    return _latest_nodes(log).drop("deleted", "update_seq")
 
 
 def _within_reach(rows: DataFrame, points: DataFrame, radius_m: float) -> DataFrame:
@@ -135,25 +150,28 @@ def prune_state_to_stop_rings(
 
 
 def coarse_partition_cells(
-    sub: DataFrame, radius_m: float = DEFAULT_RADIUS_M
+    points: DataFrame, radius_m: float = DEFAULT_RADIUS_M
 ) -> list[int] | None:
-    """The COARSE_RES hex cells covering the reach of every (lat, lon) in
-    `sub`, or None when that covering exceeds MAX_PRUNE_CELLS (the caller
-    then scans plain). `sub` is O(k * ring) rows (the changed positions
-    or the re-compared stops): they are collected and covered on the
-    driver in NumPy."""
-    pts = np.array(sub.select("lat", "lon").collect(), dtype=np.float64).reshape(-1, 2)
-    return hex_cover_np(
-        pts[:, 0], pts[:, 1], radius_m / VIN_OVER_HAV_MIN, COARSE_RES, MAX_PRUNE_CELLS
+    """The sorted COARSE_DEG cells of every point within the compare's
+    reach of radius_m from any (lat, lon) in `points`, or None when that
+    covering exceeds MAX_PRUNE_CELLS (the caller then scans plain).
+    `points` is O(k) rows (the changed positions): each row's reach bbox
+    is exploded to its cells in the JVM, and the cell arrays are
+    collected (no shuffle) and deduplicated on the driver."""
+    cover = reach_cells_col(
+        F.col("lat"), F.col("lon"), radius_m / VIN_OVER_HAV_MIN, COARSE_DEG
     )
+    cells = sorted({c for r in points.select(cover.alias("c")).collect() for c in r.c})
+    return None if len(cells) > MAX_PRUNE_CELLS else cells
 
 
 def stamp_feed_cells(gtfs: DataFrame) -> DataFrame:
-    """The static feed with its coarse partition cell (cell_part). Write
-    it `repartition("cell_part")` + `partitionBy("cell_part")` and hand
-    the read-back frame to apply_update_batch: the per-batch stop scan
-    then partition-prunes to the changed nodes' coarse covering."""
-    return gtfs.withColumn("cell_part", make_hex_cell_udf(COARSE_RES)("lat", "lon"))
+    """The frame with its coarse partition cell (cell_part). Write the
+    static feed `repartition("cell_part")` + `partitionBy("cell_part")`
+    and hand the read-back frame to apply_update_batch: the per-batch
+    stop scan then partition-prunes to the changed nodes' coarse
+    covering."""
+    return gtfs.withColumn("cell_part", grid_cell_col(F.col("lat"), F.col("lon"), COARSE_DEG))
 
 
 def compact_node_log(
@@ -169,42 +187,30 @@ def compact_node_log(
     full. Rows keep their original update_seq so merge-on-read ordering
     against newer tail appends is unchanged."""
 
-    def latest_rows(df: DataFrame) -> DataFrame:
-        keep = [c for c in df.columns if c != "osm_id"]
-        folded = df.groupBy("osm_id").agg(
-            F.max_by(
-                F.struct(*keep), F.struct(F.col("update_seq"), F.col("elem_idx"))
-            ).alias("_r")
-        )
-        return folded.select("osm_id", "_r.*").filter(~F.col("deleted"))
-
-    return node_log.compact(spark, reducer=latest_rows, checkpoint=checkpoint)
+    return node_log.compact(spark, reducer=_latest_nodes, checkpoint=checkpoint)
 
 
-def _partition_pruned(
-    df: DataFrame, part: str | None, points: DataFrame, radius_m: float
-) -> DataFrame:
-    """df filtered to the coarse cells covering the reach of `points`
-    when df is laid out by the partition column `part` and the covering
-    is narrow enough to prune; df itself otherwise."""
-    if not part or part not in df.columns:
+def _partition_pruned(df: DataFrame, part: str | None, cells: list[int] | None) -> DataFrame:
+    """df filtered to the coarse `cells` when df is laid out by the
+    partition column `part` and a covering narrow enough to prune was
+    given; df itself otherwise."""
+    if not part or part not in df.columns or cells is None:
         return df
-    cells = coarse_partition_cells(points, radius_m)
-    return df if cells is None else df.filter(F.col(part).isin(cells))
+    return df.filter(F.col(part).isin(cells))
 
 
 def _node_state(
-    spark: SparkSession, node_log: SnapTable, sub: DataFrame, radius_m: float
+    spark: SparkSession, node_log: SnapTable, cells: list[int] | None
 ) -> DataFrame:
-    """Merge-on-read node state for the re-compared stops `sub`: a
-    compacted partitioned BASE is partition-pruned to sub's coarse
-    covering and the post-compaction tail is read in full (read_split's
-    soundness contract); a log without such a base is read whole."""
+    """Merge-on-read node state: a compacted partitioned BASE is
+    partition-pruned to the coarse `cells` and the post-compaction tail
+    is read in full (read_split's soundness contract); a log without
+    such a base is read whole."""
     part = node_log.partition_by
     base, tail = node_log.read_split(spark) if part else (None, None)
     if base is None:
         return current_nodes(node_log.read(spark))
-    pruned = _partition_pruned(base, part, sub, radius_m)
+    pruned = _partition_pruned(base, part, cells)
     if tail is not None:
         pruned = pruned.unionByName(tail, allowMissingColumns=True)
     return current_nodes(pruned)
@@ -258,7 +264,7 @@ def apply_update_batch(
     upd = updates.withColumn("update_seq", F.lit(bid))
     if "cell_part" not in upd.columns:
         # the node log's partition column when the table is partitioned
-        upd = upd.withColumn("cell_part", make_hex_cell_udf(COARSE_RES)("lat", "lon"))
+        upd = stamp_feed_cells(upd)
     if not node_done:
         node_log.append(upd, checkpoint={"run_id": run_id, "chunks": [bid]})
     log_df = node_log.read(spark)
@@ -310,9 +316,14 @@ def apply_update_batch(
         # identical rows.
         par = spark.sparkContext.defaultParallelism
         changed = changed.coalesce(par).localCheckpoint()
-        # an affected stop is within reach of a changed position, so its
-        # coarse cell is in that position's covering
-        feed = _partition_pruned(gtfs, "cell_part", changed, radius_m)
+        # one covering for both scans, at twice the reach (module
+        # docstring); collected only when a scan is partitioned
+        cells = (
+            coarse_partition_cells(changed, 2 * radius_m)
+            if "cell_part" in gtfs.columns or node_log.partition_by
+            else None
+        )
+        feed = _partition_pruned(gtfs, "cell_part", cells)
         sub = _within_reach(feed, changed, radius_m).coalesce(par).localCheckpoint()
         known = gtfs
         n_recompared = sub.count()
@@ -323,7 +334,7 @@ def apply_update_batch(
                 n_recompared = nf
         if sub is not gtfs:
             state = (
-                prune_state_to_stop_rings(_node_state(spark, node_log, sub, radius_m), sub, radius_m)
+                prune_state_to_stop_rings(_node_state(spark, node_log, cells), sub, radius_m)
                 .coalesce(par)
                 .localCheckpoint()
             )
@@ -368,14 +379,7 @@ def apply_update_batch(
 
 def current_results(result_log: SnapTable, spark: SparkSession) -> DataFrame:
     """Merge-on-read categorized view: latest update_seq per stop wins."""
-    log = result_log.read(spark)
-    latest = log.groupBy("gtfs_id").agg(
-        F.max_by(
-            F.struct(*[c for c in log.columns if c != "gtfs_id"]),
-            F.col("update_seq"),
-        ).alias("_r")
-    )
-    return latest.select("gtfs_id", "_r.*").drop("update_seq")
+    return _latest(result_log.read(spark), "gtfs_id", "update_seq").drop("update_seq")
 
 
 def stream_node_sync(

@@ -1,7 +1,5 @@
 """Cell-index and geodesic kernel properties."""
 
-import math
-
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -63,30 +61,6 @@ def test_hex_center_distance_bounded():
     x2 = np.radians(hlon) * cells.EARTH_RADIUS_M
     y2 = np.radians(hlat) * cells.EARTH_RADIUS_M
     assert np.hypot(x1 - x2, y1 - y2).max() <= cells.hex_edge_m(9) + 1e-6
-
-
-def test_hex_ring_covers_radius():
-    """Covering contract: every point within R of a cell's points lies in
-    the filled k-ring of that cell (k from hex_rings_needed)."""
-    rng = np.random.default_rng(6)
-    lat0 = rng.uniform(-55, 55, 300)
-    lon0 = rng.uniform(-170, 170, 300)
-    R = 400.0
-    k = int(cells.hex_rings_needed_np(R, 9, np.array([56.0]))[0])
-    # displace by up to R meters in a random direction
-    ang = rng.uniform(0, 2 * math.pi, 300)
-    dlat = np.cos(ang) * R / 111_320.0
-    dlon = np.sin(ang) * R / (111_320.0 * np.cos(np.radians(lat0)))
-    c0 = cells.hex_cell_np(lat0, lon0, 9)
-    c1 = cells.hex_cell_np(lat0 + dlat, lon0 + dlon, 9)
-    # build k-ring sets around c1 (the feature side) and require c0 inside
-    res, q1, r1 = cells.hex_cell_unpack(c1)
-    _, q0, r0 = cells.hex_cell_unpack(c0)
-    dq = np.abs(q0 - q1)
-    dr = np.abs(r0 - r1)
-    ds = np.abs((q0 + r0) - (q1 + r1))
-    hexdist = np.maximum(np.maximum(dq, dr), ds)
-    assert hexdist.max() <= k
 
 
 def test_vincenty_against_known_values():

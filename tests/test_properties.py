@@ -45,28 +45,6 @@ def test_s2_cell_contains_its_point(lat, lon):
     assert d < 300.0  # within level-15 cell extent
 
 
-@settings(max_examples=150, deadline=None)
-@given(
-    st.floats(min_value=-60, max_value=60, allow_nan=False),
-    lon_st,
-    st.floats(min_value=0, max_value=2 * np.pi, allow_nan=False),
-    st.floats(min_value=0, max_value=400.0, allow_nan=False),
-)
-def test_hex_ring_covering_property(lat, lon, ang, dist_m):
-    """Any point within R ground-meters of (lat, lon) lies within the
-    adaptive ring bound of the origin's cell."""
-    dlat = np.cos(ang) * dist_m / 111_320.0
-    dlon = np.sin(ang) * dist_m / (111_320.0 * max(np.cos(np.radians(lat)), 1e-6))
-    lat2, lon2 = lat + dlat, lon + dlon
-    c1 = cells.hex_cell_np(np.array([lat]), np.array([lon]), 9)
-    c2 = cells.hex_cell_np(np.array([lat2]), np.array([lon2]), 9)
-    k = cells.hex_rings_needed_np(400.0, 9, np.array([max(abs(lat), abs(lat2))]))[0]
-    _, q1, r1 = cells.hex_cell_unpack(c1)
-    _, q2, r2 = cells.hex_cell_unpack(c2)
-    hexdist = max(abs(q1[0] - q2[0]), abs(r1[0] - r2[0]), abs((q1[0] + r1[0]) - (q2[0] + r2[0])))
-    assert hexdist <= k
-
-
 @settings(max_examples=100, deadline=None)
 @given(
     st.lists(

@@ -7,7 +7,7 @@ import numpy as np
 import pyspark.sql.functions as F
 
 from gtfs_osm_sync_spark import synth
-from gtfs_osm_sync_spark.functions.cells import hex_cell_np
+from gtfs_osm_sync_spark.functions import cells
 from gtfs_osm_sync_spark.functions.geo import (
     EARTH_RADIUS_M,
     VIN_OVER_HAV_MIN,
@@ -317,19 +317,18 @@ def test_feed_prune_regime_switch(spark, tmp_path, monkeypatch):
     # exceeded -> the SAME frame back, no isin built at all
     changed = batches[1].select("lat", "lon")
     monkeypatch.setattr(S, "MAX_PRUNE_CELLS", 10_000)
-    cells = S.coarse_partition_cells(changed)
-    assert cells
-    f_pruned = S._partition_pruned(feed, "cell_part", changed, 400.0)
+    cover = S.coarse_partition_cells(changed, 800.0)
+    assert cover
+    f_pruned = S._partition_pruned(feed, "cell_part", cover)
     assert f_pruned is not feed
     plan = f_pruned._jdf.queryExecution().executedPlan().toString()
     scan = [l for l in plan.splitlines() if "PartitionFilters" in l]
     assert scan and "cell_part" in scan[0].split("PartitionFilters")[1].split("]")[0]
-    monkeypatch.setattr(S, "MAX_PRUNE_CELLS", len(cells) - 1)
-    assert S.coarse_partition_cells(changed) is None
-    assert S._partition_pruned(feed, "cell_part", changed, 400.0) is feed
+    monkeypatch.setattr(S, "MAX_PRUNE_CELLS", len(cover) - 1)
+    assert S.coarse_partition_cells(changed, 800.0) is None
+    assert S._partition_pruned(feed, "cell_part", None) is feed
     # a flat (unpartitioned) feed never prunes
-    monkeypatch.setattr(S, "MAX_PRUNE_CELLS", 10_000)
-    assert S._partition_pruned(stops, "cell_part", changed, 400.0) is stops
+    assert S._partition_pruned(stops, "cell_part", cover) is stops
 
 
 def test_mixed_schema_log_rows_not_dropped(spark, tmp_path):
@@ -552,31 +551,40 @@ def test_delta_joins_match_brute_force(spark):
     assert 0 < len(want) < n_n
 
 
-def test_coarse_covering_holds_circles_and_refuses_poles(spark):
-    """coarse_partition_cells covers the COARSE_RES cell of every point on
-    each input's 400 m (and reach) circle, up to |lat| 89.99; at lat
-    89.999 the ring a covering needs exceeds MAX_PRUNE_CELLS, so it
-    returns None (scan plain) instead of a capped, short covering."""
+def test_coarse_covering_holds_circles_up_to_poles(spark):
+    """coarse_partition_cells at 1x and 2x the 400 m radius holds the
+    COARSE_DEG floor cell (computed in NumPy) of every point on each
+    input's circles out to that multiple of the reach, up to |lat|
+    89.999. Near a pole the reach bbox spans every longitude, so the
+    covering is the polar row's 60 cells: finite, never a short set.
+    Inputs stay within +/-150 deg of longitude: the grid does not wrap
+    at +/-180 (cells.reach_cells_col)."""
     rng = np.random.default_rng(3)
-    lats = np.concatenate([rng.uniform(-89.99, 89.99, 12), [0.0, 60.0, 85.0, 89.9, 89.99, -89.99]])
+    lats = np.concatenate(
+        [rng.uniform(-89.99, 89.99, 12), [0.0, 60.0, 85.0, 89.9, 89.99, -89.99, 89.999, -89.999]]
+    )
     lons = rng.uniform(-150, 150, len(lats))
     bearings = np.linspace(0, 360, 720, endpoint=False)
+    reach = 400.0 / VIN_OVER_HAV_MIN
+    g = S.COARSE_DEG
     for lat, lon in zip(lats, lons):
         pt = spark.createDataFrame([(float(lat), float(lon))], "lat double, lon double")
-        cells = S.coarse_partition_cells(pt)
-        assert cells is not None, lat
-        for dist in (400.0, 400.0 / VIN_OVER_HAV_MIN * 0.99999):
-            clat, clon = _destinations(lat, lon, dist, bearings)
-            need = set(hex_cell_np(clat, clon, S.COARSE_RES).tolist())
-            assert need <= set(cells), (lat, lon, dist)
+        for mult in (1, 2):
+            got = S.coarse_partition_cells(pt, mult * 400.0)
+            assert got is not None, (lat, mult)
+            for dist in (400.0 * mult, reach * mult * 0.99999):
+                clat, clon = _destinations(lat, lon, dist, bearings)
+                clon = (clon + 180.0) % 360.0 - 180.0
+                need = np.floor(clat / g) * cells._GRID_STRIDE + np.floor(clon / g)
+                assert set(need.astype(np.int64).tolist()) <= set(got), (lat, lon, dist)
     polar = spark.createDataFrame([(89.999, 10.0)], "lat double, lon double")
-    assert S.coarse_partition_cells(polar) is None
+    assert len(S.coarse_partition_cells(polar, 800.0)) == 60
 
 
 def test_delta_plans_have_no_python(spark):
-    """The two delta joins are JVM-only: no ArrowEvalPython or
-    BatchEvalPython node in either plan (inputs from local pandas, as
-    tools/dump_plans.py's sync_delta target)."""
+    """The two delta joins and the partition-cell stamp are JVM-only: no
+    ArrowEvalPython or BatchEvalPython node in any plan (inputs from
+    local pandas, as tools/dump_plans.py's sync_delta target)."""
     import pandas as pd
 
     stops = spark.createDataFrame(
@@ -585,6 +593,10 @@ def test_delta_plans_have_no_python(spark):
     nodes = spark.createDataFrame(
         pd.DataFrame({"osm_id": ["n1", "n2"], "lat": [10.001, 40.0], "lon": [20.0, 21.0]})
     )
-    for df in (S.affected_stop_ids(stops, nodes), S.prune_state_to_stop_rings(nodes, stops)):
+    for df in (
+        S.affected_stop_ids(stops, nodes),
+        S.prune_state_to_stop_rings(nodes, stops),
+        S.stamp_feed_cells(stops),
+    ):
         plan = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
         assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan

@@ -80,7 +80,7 @@ from gtfs_osm_sync_spark import synth
 from gtfs_osm_sync_spark.operators.compare import compare_stops
 from gtfs_osm_sync_spark.streaming.sync import (
     _partition_pruned, affected_stop_ids, coarse_partition_cells,
-    prune_state_to_stop_rings)
+    prune_state_to_stop_rings, stamp_feed_cells)
 from gtfs_osm_sync_spark.functions.mappings import zero_pad_id
 import pyspark.sql.functions as F
 
@@ -90,9 +90,6 @@ spark = get_spark(cpus=cpus, shuffle_partitions=cpus * 4,
                   extra_conf={{"spark.local.dir": f"/dev/shm/bds_{{cpus}}",
                               "spark.sql.join.preferSortMergeJoin": "false"}})
 stage = {stage_dir!r}
-from gtfs_osm_sync_spark.functions.cells import make_hex_cell_udf
-from gtfs_osm_sync_spark.streaming.sync import COARSE_RES
-coarse = make_hex_cell_udf(COARSE_RES)
 
 stops_part = spark.read.parquet(stage + "/stops_part")
 stops_flat = spark.read.parquet(stage + "/stops_flat")
@@ -133,11 +130,11 @@ else:
             # contributor, one city): the k moved nodes all live in the
             # lowest-id coarse cell holding >= k nodes, so their rings
             # cover O(1) partitions instead of O(k)
-            withcp = nodes.withColumn("cp", coarse("lat", "lon"))
-            cell = (withcp.groupBy("cp").count()
-                    .filter(F.col("count") >= k).orderBy("cp")
+            withcp = stamp_feed_cells(nodes)
+            cell = (withcp.groupBy("cell_part").count()
+                    .filter(F.col("count") >= k).orderBy("cell_part")
                     .limit(1).collect()[0][0])
-            moved = (withcp.filter(F.col("cp") == cell).drop("cp")
+            moved = (withcp.filter(F.col("cell_part") == cell).drop("cell_part")
                      .orderBy("osm_id").limit(k)
                      .withColumn("lat", F.col("lat") + F.lit(0.0009)))
         else:
@@ -156,8 +153,7 @@ else:
         # read_split hands back (tail empty here; a real tail is
         # O(batch) and adds one small union)
         state_path = stage + f"/state_{{label}}"
-        (kept.unionByName(moved)
-         .withColumn("cell_part", coarse("lat", "lon"))
+        (stamp_feed_cells(kept.unionByName(moved))
          .repartition("cell_part")
          .write.mode("overwrite").partitionBy("cell_part").parquet(state_path))
         out.setdefault("n_state_partitions", spark.read.parquet(state_path)
@@ -168,8 +164,8 @@ else:
                     .localCheckpoint())
         k_actual = moved.count()
 
-        def pruned_state(sub, path):
-            st = _partition_pruned(spark.read.parquet(path), "cell_part", sub, 400.0)
+        def pruned_state(sub, path, cells):
+            st = _partition_pruned(spark.read.parquet(path), "cell_part", cells)
             return prune_state_to_stop_rings(st, sub)
 
         def shrink_known(ids_base, st):
@@ -200,12 +196,14 @@ else:
             # engine uses (_partition_pruned, MAX_PRUNE_CELLS) —
             # clustered batches measure the partition-pruned scan,
             # worldwide scatters the plain partitioned scan (no isin)
-            feed = _partition_pruned(stops_part, "cell_part", changed, 400.0)
+            # one covering at twice the reach for both scans
+            cells = coarse_partition_cells(changed, 800.0)
+            feed = _partition_pruned(stops_part, "cell_part", cells)
             touched = affected_stop_ids(feed, changed)
             sub = feed.join(F.broadcast(touched), "gtfs_id",
                             "left_semi").coalesce(cpus).localCheckpoint()
             n_sub = sub.count()          # fallback numerator (vs n_feed)
-            st = pruned_state(sub, path).coalesce(cpus).localCheckpoint()
+            st = pruned_state(sub, path, cells).coalesce(cpus).localCheckpoint()
             return run_compare(sub, st, shrink_known(feed_ids, st))
 
         def delta_r4(changed=changed0, path=state_path):
@@ -215,7 +213,8 @@ else:
             sub = stops_flat.join(F.broadcast(touched), "gtfs_id",
                                   "left_semi").coalesce(cpus).localCheckpoint()
             n_sub, nf = sub.count(), stops_flat.count()
-            st = pruned_state(sub, path).coalesce(cpus).localCheckpoint()
+            cells = coarse_partition_cells(changed, 800.0)
+            st = pruned_state(sub, path, cells).coalesce(cpus).localCheckpoint()
             return run_compare(sub, st, shrink_known(stops_flat, st))
 
         def delta_noprune(changed=changed0, path=state_path):
@@ -236,7 +235,7 @@ else:
             # ring coverage: coarse cells the batch touches, vs the
             # n_state_partitions the layout has — the pruning ratio
             # (None: wider than MAX_PRUNE_CELLS, both scans run plain)
-            "n_ring_cells": len(coarse_partition_cells(changed0) or []) or None,
+            "n_ring_cells": len(coarse_partition_cells(changed0, 800.0) or []) or None,
             "delta_r5_sec": timed(delta_r5, trials=2),
             "delta_r4_sec": timed(delta_r4, trials=2),
             "delta_noprune_sec": timed(delta_noprune, trials=2),

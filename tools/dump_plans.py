@@ -10,9 +10,10 @@ A name is a driver query (driver_queries.QUERIES) or one of PIPELINES:
 assign_images, compare_stops, redundant_node_modifies and tiles_for_bbox
 (a bbox fetch from a written two-level pyramid), run on a small
 synthetic world (2,000 images / stops), and sync_delta: the incremental sync's two delta joins
-(streaming.sync.affected_stop_ids and prune_state_to_stop_rings) on
-local pandas input, written as sync_delta_affected_<suffix>.txt and
-sync_delta_prune_<suffix>.txt. Queries read $SPARK_GRAFT_SF_DIR (default sf0.1) on a
+(streaming.sync.affected_stop_ids and prune_state_to_stop_rings) and its
+partition-cell stamp (stamp_feed_cells) on local pandas input, written as
+sync_delta_affected_<suffix>.txt, sync_delta_prune_<suffix>.txt and
+sync_delta_stamp_<suffix>.txt. Queries read $SPARK_GRAFT_SF_DIR (default sf0.1) on a
 small local session — plan SHAPE does not depend on input scale here
 (broadcast sides are explicit hints, not size-estimated).
 """
@@ -70,19 +71,14 @@ def _tiles_for_bbox(spark, sf_dir):
 def _sync_delta(spark, sf_dir):
     from gtfs_osm_sync_spark.streaming import sync as S
 
-    from gtfs_osm_sync_spark.functions.cells import hex_cell_np
-
     stops = synth.gen_compare_stops_pdf(np.arange(N_SYNTH))[["gtfs_id", "lat", "lon"]]
     nodes = synth.gen_compare_nodes_pdf(np.arange(N_SYNTH))[["osm_id", "lat", "lon"]]
-    # the stored res-9 hex_cell older feeds and node logs carry: the
-    # current joins ignore it, older hex-ring joins keyed on it
-    for pdf in (stops, nodes):
-        pdf["hex_cell"] = hex_cell_np(pdf["lat"], pdf["lon"], 9)
     stops, nodes = spark.createDataFrame(stops), spark.createDataFrame(nodes)
     changed = nodes.limit(50).select("lat", "lon")
     return {
         "sync_delta_affected": S.affected_stop_ids(stops, changed),
         "sync_delta_prune": S.prune_state_to_stop_rings(nodes, stops.limit(200)),
+        "sync_delta_stamp": S.stamp_feed_cells(stops),
     }
 
 
