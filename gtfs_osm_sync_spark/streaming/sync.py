@@ -62,11 +62,12 @@ coalesce(defaultParallelism) + localCheckpoint'ed before the re-compare
 from __future__ import annotations
 
 import math
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.cells import grid_cell_col, hex_edge_m, reach_cells_col
+from ..functions.cells import _GRID_STRIDE, grid_cell_col, hex_edge_m, reach_cells_col
 from ..functions.geo import EARTH_RADIUS_M, VIN_OVER_HAV_MIN
 from ..functions.mappings import zero_pad_id
 from ..operators.compare import compare_stops
@@ -82,10 +83,14 @@ COARSE_RES = 1
 COARSE_DEG = math.degrees(
     math.sqrt(1.5 * math.sqrt(3.0)) * hex_edge_m(COARSE_RES) / EARTH_RADIUS_M
 )
+# bound on |cell_part| of a COARSE_DEG floor cell (row * stride + col)
+_MAX_PART = (math.ceil(90.0 / COARSE_DEG) + 1) * _GRID_STRIDE
 # a coarse covering wider than this scans plain: a wide scatter prunes
-# nothing, and the isin literal-set evaluation over every cell cost ~2.2x
-# a flat feed's scan against ~1.3x for the bare partitioned scan
-# (BENCH/BASELINE.md delta section). A minority of the 1,800 cells.
+# nothing and still pays the partition filter. On the floor layout
+# (tools/bench_delta_sync.py world, 1M stops in 129 partitions, 4-core
+# host, pruned vs plain in one JVM) a delta batch covering 2 cells ran
+# in 0.73x the plain batch's time, 36 cells in 0.92x, and 128 cells
+# (every partition) in 1.07x. A minority of the 1,800 cells.
 MAX_PRUNE_CELLS = 256
 # widest batch whose touched ids are pushed into the node-log scan as an
 # In list; a thousands-deep list bloats the plan and filters per row anyway
@@ -152,14 +157,15 @@ def prune_state_to_stop_rings(
 def coarse_partition_cells(
     points: DataFrame, radius_m: float = DEFAULT_RADIUS_M
 ) -> list[int] | None:
-    """The sorted COARSE_DEG cells of every point within the compare's
-    reach of radius_m from any (lat, lon) in `points`, or None when that
-    covering exceeds MAX_PRUNE_CELLS (the caller then scans plain).
-    `points` is O(k) rows (the changed positions): each row's reach bbox
-    is exploded to its cells in the JVM, and the cell arrays are
-    collected (no shuffle) and deduplicated on the driver."""
+    """The sorted COARSE_DEG cells of every point within TWICE the
+    compare's reach of radius_m from any (lat, lon) in `points` (the
+    batch covering of the module docstring), or None when that covering
+    exceeds MAX_PRUNE_CELLS (the caller then scans plain). `points` is
+    O(k) rows (the changed positions): each row's reach bbox is exploded
+    to its cells in the JVM, and the cell arrays are collected (no
+    shuffle) and deduplicated on the driver."""
     cover = reach_cells_col(
-        F.col("lat"), F.col("lon"), radius_m / VIN_OVER_HAV_MIN, COARSE_DEG
+        F.col("lat"), F.col("lon"), 2 * radius_m / VIN_OVER_HAV_MIN, COARSE_DEG
     )
     cells = sorted({c for r in points.select(cover.alias("c")).collect() for c in r.c})
     return None if len(cells) > MAX_PRUNE_CELLS else cells
@@ -193,27 +199,21 @@ def compact_node_log(
 def _partition_pruned(df: DataFrame, part: str | None, cells: list[int] | None) -> DataFrame:
     """df filtered to the coarse `cells` when df is laid out by the
     partition column `part` and a covering narrow enough to prune was
-    given; df itself otherwise."""
+    given; df itself otherwise. Raises on a layout whose partition
+    values are not COARSE_DEG floor cells (one stamped with the earlier
+    hex cells, ids >= 2^58): the covering would match none of its
+    partitions and silently drop every row."""
     if not part or part not in df.columns or cells is None:
         return df
+    pat = re.compile(rf"/{re.escape(part)}=(-?\d+)/")
+    for f in df.inputFiles():
+        m = pat.search(f)
+        if m and abs(int(m.group(1))) > _MAX_PART:
+            raise ValueError(
+                f"{f}: {part} is not a floor-grid cell; re-stamp the layout "
+                "with stamp_feed_cells"
+            )
     return df.filter(F.col(part).isin(cells))
-
-
-def _node_state(
-    spark: SparkSession, node_log: SnapTable, cells: list[int] | None
-) -> DataFrame:
-    """Merge-on-read node state: a compacted partitioned BASE is
-    partition-pruned to the coarse `cells` and the post-compaction tail
-    is read in full (read_split's soundness contract); a log without
-    such a base is read whole."""
-    part = node_log.partition_by
-    base, tail = node_log.read_split(spark) if part else (None, None)
-    if base is None:
-        return current_nodes(node_log.read(spark))
-    pruned = _partition_pruned(base, part, cells)
-    if tail is not None:
-        pruned = pruned.unionByName(tail, allowMissingColumns=True)
-    return current_nodes(pruned)
 
 
 def apply_update_batch(
@@ -316,11 +316,14 @@ def apply_update_batch(
         # identical rows.
         par = spark.sparkContext.defaultParallelism
         changed = changed.coalesce(par).localCheckpoint()
-        # one covering for both scans, at twice the reach (module
-        # docstring); collected only when a scan is partitioned
+        # one covering for both scans (module docstring), collected only
+        # when a scan can use it: a partitioned feed or a compacted
+        # partitioned node-log base
+        part = node_log.partition_by
+        base, tail = node_log.read_split(spark) if part else (None, None)
         cells = (
-            coarse_partition_cells(changed, 2 * radius_m)
-            if "cell_part" in gtfs.columns or node_log.partition_by
+            coarse_partition_cells(changed, radius_m)
+            if "cell_part" in gtfs.columns or base is not None
             else None
         )
         feed = _partition_pruned(gtfs, "cell_part", cells)
@@ -333,8 +336,16 @@ def apply_update_batch(
                 sub = gtfs  # wide batch: the plain full compare is cheaper
                 n_recompared = nf
         if sub is not gtfs:
+            # a compacted base is pruned to the cells and the tail read in
+            # full (read_split's soundness contract); a log without such a
+            # base is read whole
+            nodes = log_df
+            if base is not None:
+                nodes = _partition_pruned(base, part, cells)
+                if tail is not None:
+                    nodes = nodes.unionByName(tail, allowMissingColumns=True)
             state = (
-                prune_state_to_stop_rings(_node_state(spark, node_log, cells), sub, radius_m)
+                prune_state_to_stop_rings(current_nodes(nodes), sub, radius_m)
                 .coalesce(par)
                 .localCheckpoint()
             )

@@ -317,7 +317,7 @@ def test_feed_prune_regime_switch(spark, tmp_path, monkeypatch):
     # exceeded -> the SAME frame back, no isin built at all
     changed = batches[1].select("lat", "lon")
     monkeypatch.setattr(S, "MAX_PRUNE_CELLS", 10_000)
-    cover = S.coarse_partition_cells(changed, 800.0)
+    cover = S.coarse_partition_cells(changed)
     assert cover
     f_pruned = S._partition_pruned(feed, "cell_part", cover)
     assert f_pruned is not feed
@@ -325,10 +325,38 @@ def test_feed_prune_regime_switch(spark, tmp_path, monkeypatch):
     scan = [l for l in plan.splitlines() if "PartitionFilters" in l]
     assert scan and "cell_part" in scan[0].split("PartitionFilters")[1].split("]")[0]
     monkeypatch.setattr(S, "MAX_PRUNE_CELLS", len(cover) - 1)
-    assert S.coarse_partition_cells(changed, 800.0) is None
+    assert S.coarse_partition_cells(changed) is None
     assert S._partition_pruned(feed, "cell_part", None) is feed
     # a flat (unpartitioned) feed never prunes
     assert S._partition_pruned(stops, "cell_part", cover) is stops
+
+
+def test_pre_floor_grid_layout_raises(spark, tmp_path):
+    """A feed or compacted node-log base stamped before the floor grid
+    (hex res-1 ids, >= 2^58, in cell_part) matches no covering cell:
+    the delta batch raises instead of pruning every row away. The same
+    tables stamped by stamp_feed_cells prune."""
+    import pytest
+
+    stops, batches = _world(spark)
+    hex_part = cells.make_hex_cell_udf(S.COARSE_RES)(F.col("lat"), F.col("lon"))
+    path = str(tmp_path / "feed_hex")
+    stops.withColumn("cell_part", hex_part).write.partitionBy("cell_part").parquet(path)
+    feed = spark.read.parquet(path)
+    nlog = SnapTable(str(tmp_path / "nodes"))
+    rlog = SnapTable(str(tmp_path / "results"))
+    kw = dict(full_recompare_frac=None, id_digits=synth._CMP_DIGITS)
+    S.apply_update_batch(spark, batches[0], nlog, rlog, feed, [AG], 0, **kw)
+    with pytest.raises(ValueError, match="re-stamp"):
+        S.apply_update_batch(spark, batches[1], nlog, rlog, feed, [AG], 1, **kw)
+    hlog = SnapTable(str(tmp_path / "nodes_hex"), partition_by="cell_part")
+    hlog.append(batches[0].withColumn("update_seq", F.lit(0)).withColumn("cell_part", hex_part))
+    S.compact_node_log(spark, hlog)
+    base = hlog.read_split(spark)[0]
+    with pytest.raises(ValueError, match="re-stamp"):
+        S._partition_pruned(base, "cell_part", [0])
+    floor = _stamped_feed(spark, tmp_path, stops)
+    assert S._partition_pruned(floor, "cell_part", [0]).count() == 0
 
 
 def test_mixed_schema_log_rows_not_dropped(spark, tmp_path):
@@ -552,13 +580,13 @@ def test_delta_joins_match_brute_force(spark):
 
 
 def test_coarse_covering_holds_circles_up_to_poles(spark):
-    """coarse_partition_cells at 1x and 2x the 400 m radius holds the
-    COARSE_DEG floor cell (computed in NumPy) of every point on each
-    input's circles out to that multiple of the reach, up to |lat|
-    89.999. Near a pole the reach bbox spans every longitude, so the
-    covering is the polar row's 60 cells: finite, never a short set.
-    Inputs stay within +/-150 deg of longitude: the grid does not wrap
-    at +/-180 (cells.reach_cells_col)."""
+    """coarse_partition_cells for the 400 m radius holds the COARSE_DEG
+    floor cell (computed in NumPy) of every point on each input's
+    circles at 1x and 2x the reach, up to |lat| 89.999. Near a pole the
+    reach bbox spans every longitude, so the covering is the polar row's
+    60 cells: finite, never a short set. Inputs stay within +/-150 deg
+    of longitude: the grid does not wrap at +/-180
+    (cells.reach_cells_col)."""
     rng = np.random.default_rng(3)
     lats = np.concatenate(
         [rng.uniform(-89.99, 89.99, 12), [0.0, 60.0, 85.0, 89.9, 89.99, -89.99, 89.999, -89.999]]
@@ -569,16 +597,16 @@ def test_coarse_covering_holds_circles_up_to_poles(spark):
     g = S.COARSE_DEG
     for lat, lon in zip(lats, lons):
         pt = spark.createDataFrame([(float(lat), float(lon))], "lat double, lon double")
+        got = S.coarse_partition_cells(pt, 400.0)
+        assert got is not None, lat
         for mult in (1, 2):
-            got = S.coarse_partition_cells(pt, mult * 400.0)
-            assert got is not None, (lat, mult)
             for dist in (400.0 * mult, reach * mult * 0.99999):
                 clat, clon = _destinations(lat, lon, dist, bearings)
                 clon = (clon + 180.0) % 360.0 - 180.0
                 need = np.floor(clat / g) * cells._GRID_STRIDE + np.floor(clon / g)
                 assert set(need.astype(np.int64).tolist()) <= set(got), (lat, lon, dist)
     polar = spark.createDataFrame([(89.999, 10.0)], "lat double, lon double")
-    assert len(S.coarse_partition_cells(polar, 800.0)) == 60
+    assert len(S.coarse_partition_cells(polar, 400.0)) == 60
 
 
 def test_delta_plans_have_no_python(spark):

@@ -195,9 +195,9 @@ else:
             # the feed scan goes through the SAME regime switch the
             # engine uses (_partition_pruned, MAX_PRUNE_CELLS) —
             # clustered batches measure the partition-pruned scan,
-            # worldwide scatters the plain partitioned scan (no isin)
-            # one covering at twice the reach for both scans
-            cells = coarse_partition_cells(changed, 800.0)
+            # worldwide scatters the plain partitioned scan (no isin);
+            # one covering (twice the reach) for both scans
+            cells = coarse_partition_cells(changed)
             feed = _partition_pruned(stops_part, "cell_part", cells)
             touched = affected_stop_ids(feed, changed)
             sub = feed.join(F.broadcast(touched), "gtfs_id",
@@ -213,7 +213,7 @@ else:
             sub = stops_flat.join(F.broadcast(touched), "gtfs_id",
                                   "left_semi").coalesce(cpus).localCheckpoint()
             n_sub, nf = sub.count(), stops_flat.count()
-            cells = coarse_partition_cells(changed, 800.0)
+            cells = coarse_partition_cells(changed)
             st = pruned_state(sub, path, cells).coalesce(cpus).localCheckpoint()
             return run_compare(sub, st, shrink_known(stops_flat, st))
 
@@ -235,7 +235,7 @@ else:
             # ring coverage: coarse cells the batch touches, vs the
             # n_state_partitions the layout has — the pruning ratio
             # (None: wider than MAX_PRUNE_CELLS, both scans run plain)
-            "n_ring_cells": len(coarse_partition_cells(changed0, 800.0) or []) or None,
+            "n_ring_cells": len(coarse_partition_cells(changed0) or []) or None,
             "delta_r5_sec": timed(delta_r5, trials=2),
             "delta_r4_sec": timed(delta_r4, trials=2),
             "delta_noprune_sec": timed(delta_noprune, trials=2),
