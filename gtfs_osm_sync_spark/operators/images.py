@@ -518,8 +518,17 @@ def tiles_for_bbox(
     and no whole-level fallback. COVERING semantics: every tile
     intersecting the bbox is returned, plus a bounded margin of adjacent
     tiles from the rectangle (clients clip; exactness is the renderer's
-    job, pruning is the scan's)."""
+    job, pruning is the scan's). Raises ValueError on an inverted bbox
+    (min above max): the axial cover would span the whole band between
+    the two longitudes instead of wrapping across +/-180."""
     from ..functions.cells import hex_bbox_cover_col
+
+    if min_lat > max_lat or min_lon > max_lon:
+        raise ValueError(
+            f"inverted bbox ({min_lat}, {min_lon}, {max_lat}, {max_lon}): min must not "
+            "exceed max; split a request across the antimeridian into two bboxes, "
+            "one on each side of +/-180"
+        )
 
     return (
         spark.read.parquet(path)

@@ -221,7 +221,6 @@ def pq_topk_stored(
     nprobe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    prune_max_lists: int = 256,
     exclude_self: bool = True,
 ) -> DataFrame:
     """ADC top-k against a pq_store index: the query batch's probed
@@ -253,9 +252,7 @@ def pq_topk_stored(
     prows = probes.collect()  # bounded: n_queries x nprobe (ONE eval)
     probed = sorted({int(r["list_id"]) for r in prows})
     qvecs = {int(r["q_id"]): [float(x) for x in r["q_vec"]] for r in prows}
-    corpus = store.read(spark)
-    if probed and len(probed) <= prune_max_lists:
-        corpus = corpus.filter(F.col("list_id").isin(probed))
+    corpus = store.read(spark).filter(F.col("list_id").isin(probed))
 
     books = (
         codebooks if isinstance(codebooks, dict)

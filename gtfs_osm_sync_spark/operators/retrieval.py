@@ -295,7 +295,6 @@ def bm25_topk_indexed(
     k: int = 10,
     n_buckets: int = N_TERM_BUCKETS,
     parts: int = 32,
-    prune_max_buckets: int = 48,
 ) -> DataFrame:
     """BM25 search against a build_term_index store with STORAGE-level
     bucket pruning: the query vocabulary's term buckets (a bounded
@@ -304,18 +303,13 @@ def bm25_topk_indexed(
     the probed buckets' files are READ (PartitionFilters — pinned in
     tests/test_retrieval.py). Row-identical to bm25_topk over the same
     corpus: a bucket holds every posting of its terms, so tf/df/dl all
-    come out exact.
-
-    Regime-switched like ivf_topk_stored: a query set touching more
-    than `prune_max_buckets` distinct buckets scans the index plain
-    (the filter would prune little and its literal-set evaluation is
-    pure cost)."""
+    come out exact. The bucket filter is evaluated once per bucket
+    directory, never per row, so it applies at any query width (the
+    ivf_topk_stored convention)."""
     qterms = _query_terms_df(spark, queries)
     vocab = sorted({t for _, q in queries for t in q.split()})
     buckets = sorted(set(_term_buckets(vocab, n_buckets).values()))
-    postings = index.read(spark)
-    if buckets and len(buckets) <= prune_max_buckets:
-        postings = postings.filter(F.col("bucket").isin(buckets))
+    postings = index.read(spark).filter(F.col("bucket").isin(buckets))
     # restrict to the query vocabulary before the df agg: the pruned
     # buckets still hold unrelated terms that share the hash bucket
     postings = postings.filter(F.col("term").isin(vocab))

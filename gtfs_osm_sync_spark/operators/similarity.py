@@ -383,7 +383,6 @@ def ivf_topk_stored(
     nprobe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    prune_max_lists: int = 256,
     exclude_self: bool = True,
 ) -> DataFrame:
     """IVF search against an ivf_store index with STORAGE-level list
@@ -395,20 +394,17 @@ def ivf_topk_stored(
     row-identical to ivf_topk over the same assigned corpus: the
     filter keeps exactly the lists the probe equi-join would keep.
 
-    Regime-switched like streaming/sync._pruned_feed: a batch probing
-    more than `prune_max_lists` distinct lists scans the index plain —
-    past that point the filter prunes little and its literal-set
-    evaluation is pure cost (size the knob to a minority share of
-    n_lists). The driver collect evaluates the probe subplan once;
-    its result is re-derived in the re-rank join (n_queries x nprobe
-    rows — recomputing beats caching at this size)."""
+    The filter is always applied, as in streaming/sync._partition_pruned:
+    it is evaluated once per list directory, never per row, so a batch
+    probing every list costs what a plain scan does. The driver collect
+    evaluates the probe subplan once; its result is re-derived in the
+    re-rank join (n_queries x nprobe rows — recomputing beats caching
+    at this size)."""
     probes = _ivf_probes(queries, centroids, nprobe, id_col, vec_col)
-    corpus = store.read(spark)
     probed = sorted(
         r["list_id"] for r in probes.select("list_id").distinct().collect()
     )
-    if probed and len(probed) <= prune_max_lists:
-        corpus = corpus.filter(F.col("list_id").isin(probed))
+    corpus = store.read(spark).filter(F.col("list_id").isin(probed))
     return _ivf_rerank(probes, corpus, k, id_col, vec_col, exclude_self)
 
 

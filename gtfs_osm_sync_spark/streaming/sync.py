@@ -37,12 +37,13 @@ coarse cells at TWICE the reach (coarse_partition_cells, the floor
 grid's one covering rule): an affected stop is within one reach of a
 changed position and every node the compare keeps is within one reach
 of an affected stop, so by the triangle inequality both scans can filter
-on that one cell list, which the scan turns into PartitionFilters. A
-covering wider than MAX_PRUNE_CELLS prunes nothing worth its
-literal-set evaluation, so both scans then run plain. The node log's
-post-compaction tail is always read in full: a base row superseded
-after compaction has its newer version in the tail (read_split), and an
-extra current tail row is dropped again by the state prune.
+on that one cell list, which the scan turns into PartitionFilters: the
+list is evaluated once per partition directory, never per row, so a
+covering as wide as the layout costs what a plain scan does and no
+width cut-off applies. The node log's post-compaction tail is always
+read in full: a base row superseded after compaction has its newer
+version in the tail (read_split), and an extra current tail row is
+dropped again by the state prune.
 
 The known-id universe (which feed ids exist, for the foreign-id verdict)
 is NEVER cell-pruned: a node near a re-compared stop may carry the id of
@@ -85,13 +86,6 @@ COARSE_DEG = math.degrees(
 )
 # bound on |cell_part| of a COARSE_DEG floor cell (row * stride + col)
 _MAX_PART = (math.ceil(90.0 / COARSE_DEG) + 1) * _GRID_STRIDE
-# a coarse covering wider than this scans plain: a wide scatter prunes
-# nothing and still pays the partition filter. On the floor layout
-# (tools/bench_delta_sync.py world, 1M stops in 129 partitions, 4-core
-# host, pruned vs plain in one JVM) a delta batch covering 2 cells ran
-# in 0.73x the plain batch's time, 36 cells in 0.92x, and 128 cells
-# (every partition) in 1.07x. A minority of the 1,800 cells.
-MAX_PRUNE_CELLS = 256
 # widest batch whose touched ids are pushed into the node-log scan as an
 # In list; a thousands-deep list bloats the plan and filters per row anyway
 ID_PUSHDOWN_LIMIT = 1000
@@ -154,21 +148,17 @@ def prune_state_to_stop_rings(
     return _within_reach(state, sub, radius_m)
 
 
-def coarse_partition_cells(
-    points: DataFrame, radius_m: float = DEFAULT_RADIUS_M
-) -> list[int] | None:
+def coarse_partition_cells(points: DataFrame, radius_m: float = DEFAULT_RADIUS_M) -> list[int]:
     """The sorted COARSE_DEG cells of every point within TWICE the
     compare's reach of radius_m from any (lat, lon) in `points` (the
-    batch covering of the module docstring), or None when that covering
-    exceeds MAX_PRUNE_CELLS (the caller then scans plain). `points` is
-    O(k) rows (the changed positions): each row's reach bbox is exploded
-    to its cells in the JVM, and the cell arrays are collected (no
-    shuffle) and deduplicated on the driver."""
+    batch covering of the module docstring). `points` is O(k) rows (the
+    changed positions): each row's reach bbox is exploded to its cells
+    in the JVM, and the cell arrays are collected (no shuffle) and
+    deduplicated on the driver."""
     cover = reach_cells_col(
         F.col("lat"), F.col("lon"), 2 * radius_m / VIN_OVER_HAV_MIN, COARSE_DEG
     )
-    cells = sorted({c for r in points.select(cover.alias("c")).collect() for c in r.c})
-    return None if len(cells) > MAX_PRUNE_CELLS else cells
+    return sorted({c for r in points.select(cover.alias("c")).collect() for c in r.c})
 
 
 def stamp_feed_cells(gtfs: DataFrame) -> DataFrame:
@@ -198,12 +188,12 @@ def compact_node_log(
 
 def _partition_pruned(df: DataFrame, part: str | None, cells: list[int] | None) -> DataFrame:
     """df filtered to the coarse `cells` when df is laid out by the
-    partition column `part` and a covering narrow enough to prune was
-    given; df itself otherwise. Raises on a layout whose partition
-    values are not COARSE_DEG floor cells (one stamped with the earlier
-    hex cells, ids >= 2^58): the covering would match none of its
-    partitions and silently drop every row."""
-    if not part or part not in df.columns or cells is None:
+    partition column `part`; df itself otherwise (cells is None only
+    for such a flat layout, which collects no covering). Raises on a
+    layout whose partition values are not COARSE_DEG floor cells (one
+    stamped with the earlier hex cells, ids >= 2^58): the covering would
+    match none of its partitions and silently drop every row."""
+    if not part or part not in df.columns:
         return df
     pat = re.compile(rf"/{re.escape(part)}=(-?\d+)/")
     for f in df.inputFiles():
@@ -318,7 +308,7 @@ def apply_update_batch(
         changed = changed.coalesce(par).localCheckpoint()
         # one covering for both scans (module docstring), collected only
         # when a scan can use it: a partitioned feed or a compacted
-        # partitioned node-log base
+        # partitioned node-log base (None: a flat layout)
         part = node_log.partition_by
         base, tail = node_log.read_split(spark) if part else (None, None)
         cells = (

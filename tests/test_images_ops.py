@@ -3,6 +3,7 @@
 import math
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from gtfs_osm_sync_spark import synth
@@ -128,7 +129,8 @@ def test_pyramid_serving_layout_pruned_fetch(spark, tmp_path):
 def test_tiles_for_bbox_range_equals_cover_isin(spark, tmp_path):
     """The range fetch returns exactly the rows of an isin over the
     bbox's polygon_cells cover, for small, large, southern-hemisphere
-    and |lat| 60 boxes, against a level stored densely around each box."""
+    and |lat| 60 boxes, against a level stored densely around each box;
+    an inverted box raises ValueError."""
     import pandas as pd
 
     from gtfs_osm_sync_spark.functions.cells import hex_cell_np
@@ -168,6 +170,11 @@ def test_tiles_for_bbox_range_equals_cover_isin(spark, tmp_path):
         )
         assert got == want, box
         assert 0 < len(got) < len(level), box
+    # inverted boxes (across the antimeridian, south above north) raise
+    # instead of fetching the whole band between the two edges
+    for box in ((0.0, 179.0, 1.0, -179.0), (1.0, 10.0, 0.0, 10.1)):
+        with pytest.raises(ValueError, match="antimeridian"):
+            IMG.tiles_for_bbox(spark, path, *box, res=res)
 
 
 def test_mosaic_pyramid_single_base_pass(spark):

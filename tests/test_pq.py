@@ -90,17 +90,6 @@ def test_stored_layout_prunes_scan_and_reads_codes_only(spark, tmp_path):
     rs = store_scans[0].split("ReadSchema")[1]
     assert "codes" in rs and "vnorm" in rs and "embedding" not in rs
 
-    # regime switch: prune_max_lists=0 scans plain
-    plain = PQ.pq_topk_stored(
-        spark, q, store, cents, books, k=5, nprobe=2, prune_max_lists=0
-    )
-    pplan = plain._jdf.queryExecution().executedPlan().toString()
-    for l in pplan.splitlines():
-        if "PartitionFilters" in l and "codes" in l:
-            assert " IN (" not in l.split("PartitionFilters")[1].split("]")[0]
-    key = lambda df: sorted(map(tuple, df.collect()))
-    assert key(plain) == key(got)
-
 
 def test_measured_recall_on_synth_corpus(spark, tmp_path):
     """Recall vs exact brute force on the (unstructured) synthetic

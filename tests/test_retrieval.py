@@ -2,8 +2,8 @@
 
 The oracle gate (t01/t02/t03) proves value parity vs DuckDB; these tests
 pin the physical properties the gate can't see: the pruned index scan's
-PartitionFilters, the indexed==brute equality on arbitrary params, the
-regime switch, and hand-checked BM25 math on a tiny corpus.
+PartitionFilters, the indexed==brute equality on arbitrary params and
+hand-checked BM25 math on a tiny corpus.
 """
 
 from __future__ import annotations
@@ -69,8 +69,8 @@ def test_indexed_layout_prunes_scan(spark, docs, tmp_path):
     """The stored inverted index's serving contract: the query
     vocabulary's term buckets push as In(bucket, ...) PartitionFilters
     on the postings scan (real I/O skipping), results row-identical to
-    the unindexed bm25_topk, and wide query sets regime-switch to a
-    plain scan (the ivf_topk_stored / _pruned_feed convention)."""
+    the unindexed bm25_topk (the ivf_topk_stored / _partition_pruned
+    convention)."""
     idx, stats = R.build_term_index(docs, str(tmp_path / "idx"))
     qs = [(1, "fast merge"), (2, "window the")]
     vocab = sorted({t for _, q in qs for t in q.split()})
@@ -88,14 +88,6 @@ def test_indexed_layout_prunes_scan(spark, docs, tmp_path):
     key = lambda df: sorted(map(tuple, df.collect()))
     want = R.bm25_topk(spark, docs, qs, k=4)
     assert key(got) == key(want)
-
-    # regime switch: prune_max_buckets=0 scans plain (no In on bucket)
-    plain = R.bm25_topk_indexed(spark, idx, stats, qs, k=4, prune_max_buckets=0)
-    pplan = plain._jdf.queryExecution().executedPlan().toString()
-    for l in pplan.splitlines():
-        if "PartitionFilters" in l:
-            assert " IN (" not in l.split("PartitionFilters")[1].split("]")[0]
-    assert key(plain) == key(want)
 
 
 def test_index_df_exact_under_pruning(spark, docs, tmp_path):

@@ -139,8 +139,7 @@ def test_ivf_stored_layout_prunes_scan(spark, emb, tmp_path):
     by list_id, and ivf_topk_stored filters the scan to the probed
     lists — PartitionFilters with In(list_id, ...) pinned in-plan (the
     feed-prune mirror), results row-identical to the in-memory
-    ivf_topk, and the regime switch falls back to a plain scan for
-    wide probes."""
+    ivf_topk, also for a probe of every list (nprobe=8)."""
     cents = SIM.kmeans_centroids(emb, n_lists=8, iters=2)
     store = SIM.ivf_store(emb, cents, str(tmp_path / "ivf"))
     # a narrow query batch: its probed-list set is a strict subset of
@@ -166,14 +165,6 @@ def test_ivf_stored_layout_prunes_scan(spark, emb, tmp_path):
     key = lambda df: sorted(map(tuple, df.collect()))
     assert key(got) == key(want)
 
-    # regime switch: wide probes (over prune_max_lists) scan plain
-    plain = SIM.ivf_topk_stored(
-        spark, q, store, cents, k=5, nprobe=2, prune_max_lists=0
-    )
-    pplan = plain._jdf.queryExecution().executedPlan().toString()
-    ppf = [l for l in pplan.splitlines() if "PartitionFilters" in l]
-    assert all(
-        " IN (" not in l.split("PartitionFilters")[1].split("]")[0]
-        for l in ppf
-    )
-    assert key(plain) == key(want)
+    # a probe of every list filters on all 8 and still equals ivf_topk
+    wide = SIM.ivf_topk_stored(spark, q, store, cents, k=5, nprobe=8)
+    assert key(wide) == key(SIM.ivf_topk(q, assigned, cents, k=5, nprobe=8))

@@ -3,6 +3,8 @@ updates must equal a from-scratch batch compare of the final state."""
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pyspark.sql.functions as F
 
@@ -198,12 +200,25 @@ def test_stream_wrapper_and_restart(spark, tmp_path):
     assert nlog.current_version() == v_n and rlog.current_version() == v_r
 
 
+def _only_partition_filtered(df, part="cell_part"):
+    """The executed plan filters `part` in the scan's PartitionFilters
+    and in no Filter node: the filter costs once per partition
+    directory, never per row."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    scan = [l for l in plan.splitlines() if "PartitionFilters" in l]
+    assert scan and part in scan[0].split("PartitionFilters")[1].split("]")[0]
+    filters = [l for l in plan.splitlines() if re.match(r"[\s+\-:*()\d]*Filter ", l)]
+    assert not [l for l in filters if part in l], plan
+
+
 def test_coarse_partition_filter_prunes_scan(spark, tmp_path):
     """The node-log layout apply_update_batch prescribes (parquet
     partitioned by the COARSE_RES cell) must turn the delta's coarse-cell
     filter into scan-level PartitionFilters — partitions outside the
     affected rings are never read (the 100 TB contract; wall-time
-    evidence in BENCH/delta_sync.json)."""
+    evidence in BENCH/delta_sync.json). A filter naming every partition
+    is also only a PartitionFilter, with no row-level Filter node, on a
+    plain partitioned scan and on a compacted SnapTable base alike."""
     path = str(tmp_path / "pstate")
     df = spark.range(100).select(
         F.col("id").alias("osm_id"),
@@ -211,11 +226,18 @@ def test_coarse_partition_filter_prunes_scan(spark, tmp_path):
         F.rand(1).alias("lat"),
     )
     df.write.mode("overwrite").partitionBy("cell_part").parquet(path)
-    rd = spark.read.parquet(path).filter(F.col("cell_part").isin([1, 3]))
-    plan = rd._jdf.queryExecution().executedPlan().toString()
-    scan = [l for l in plan.splitlines() if "PartitionFilters" in l]
-    assert scan and "cell_part" in scan[0].split("PartitionFilters")[1].split("]")[0]
-    assert rd.count() == len([i for i in range(100) if i % 7 in (1, 3)])
+    for keep in ([1, 3], list(range(7))):
+        rd = spark.read.parquet(path).filter(F.col("cell_part").isin(keep))
+        _only_partition_filtered(rd)
+        assert rd.count() == len([i for i in range(100) if i % 7 in keep])
+    log = SnapTable(str(tmp_path / "plog"), partition_by="cell_part")
+    log.append(df.withColumn("update_seq", F.lit(0)))
+    log.compact(spark)
+    base, tail = log.read_split(spark)
+    assert base is not None and tail is None
+    rd = base.filter(F.col("cell_part").isin(list(range(7))))
+    _only_partition_filtered(rd)
+    assert rd.count() == 100
 
 
 def _stamped_feed(spark, tmp_path, stops, name="feed_part"):
@@ -290,45 +312,8 @@ def test_feed_partition_filter_prunes_scan(spark, tmp_path):
     # and the prune is real: the far-away stops' partitions are gone
     kept = {r["gtfs_id"] for r in pruned.select("gtfs_id").collect()}
     assert len(kept) < stops.count()
-
-
-def test_feed_prune_regime_switch(spark, tmp_path, monkeypatch):
-    """A batch whose coarse covering exceeds MAX_PRUNE_CELLS skips the
-    feed filter (a wide scatter prunes nothing and the isin literal-set
-    eval is pure cost); the merged results are identical in both
-    regimes."""
-    stops, batches = _world(spark)
-    feed = _stamped_feed(spark, tmp_path, stops, "feed_regime")
-    nf = feed.count()
-    results = {}
-    for regime, max_cells in (("prune", 10_000), ("plain", 0)):
-        monkeypatch.setattr(S, "MAX_PRUNE_CELLS", max_cells)
-        nlog = SnapTable(str(tmp_path / f"nodes_{regime}"))
-        rlog = SnapTable(str(tmp_path / f"results_{regime}"))
-        for bid, b in enumerate(batches):
-            S.apply_update_batch(
-                spark, b, nlog, rlog, feed, [AG], bid,
-                full_recompare_frac=None, n_feed=nf,
-                id_digits=synth._CMP_DIGITS,
-            )
-        results[regime] = _sorted_rows(S.current_results(rlog, spark))
-    assert results["prune"] == results["plain"]
-    # the switch itself: narrow covering -> filtered feed; cutoff
-    # exceeded -> the SAME frame back, no isin built at all
-    changed = batches[1].select("lat", "lon")
-    monkeypatch.setattr(S, "MAX_PRUNE_CELLS", 10_000)
-    cover = S.coarse_partition_cells(changed)
-    assert cover
-    f_pruned = S._partition_pruned(feed, "cell_part", cover)
-    assert f_pruned is not feed
-    plan = f_pruned._jdf.queryExecution().executedPlan().toString()
-    scan = [l for l in plan.splitlines() if "PartitionFilters" in l]
-    assert scan and "cell_part" in scan[0].split("PartitionFilters")[1].split("]")[0]
-    monkeypatch.setattr(S, "MAX_PRUNE_CELLS", len(cover) - 1)
-    assert S.coarse_partition_cells(changed) is None
-    assert S._partition_pruned(feed, "cell_part", None) is feed
     # a flat (unpartitioned) feed never prunes
-    assert S._partition_pruned(stops, "cell_part", cover) is stops
+    assert S._partition_pruned(stops, "cell_part", cells) is stops
 
 
 def test_pre_floor_grid_layout_raises(spark, tmp_path):

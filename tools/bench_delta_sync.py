@@ -192,10 +192,9 @@ else:
         # sub still cost 22 s of per-stage task+worker overhead
         def delta_r5(changed=changed0, path=state_path):
             # apply_update_batch with a cell_part feed + n_feed + feed_ids:
-            # the feed scan goes through the SAME regime switch the
-            # engine uses (_partition_pruned, MAX_PRUNE_CELLS) —
-            # clustered batches measure the partition-pruned scan,
-            # worldwide scatters the plain partitioned scan (no isin);
+            # the feed scan goes through the SAME partition filter the
+            # engine uses (_partition_pruned) — clustered batches read a
+            # few partitions, worldwide scatters nearly all of them;
             # one covering (twice the reach) for both scans
             cells = coarse_partition_cells(changed)
             feed = _partition_pruned(stops_part, "cell_part", cells)
@@ -234,8 +233,7 @@ else:
             "recompared_stops": row[1],
             # ring coverage: coarse cells the batch touches, vs the
             # n_state_partitions the layout has — the pruning ratio
-            # (None: wider than MAX_PRUNE_CELLS, both scans run plain)
-            "n_ring_cells": len(coarse_partition_cells(changed0) or []) or None,
+            "n_ring_cells": len(coarse_partition_cells(changed0)),
             "delta_r5_sec": timed(delta_r5, trials=2),
             "delta_r4_sec": timed(delta_r4, trials=2),
             "delta_noprune_sec": timed(delta_noprune, trials=2),

@@ -638,14 +638,11 @@ Findings: pruning pays in proportion to ring coverage, and what it buys
 at this scale is BYTES, not wall.
 {clustered_line}A SPREAD k=100 batch (uniform worldwide scatter —
 adversarial) covers {k1.get('n_ring_cells', '?')} ring cells against
-{npart} partitions, so the partition filter would prune nothing while
-paying its own literal-set evaluation (same-JVM idle-core replica: bare
-partitioned scan ~1.3x flat, +isin(all cells) ~2.2x flat; measured
-in-bench ~1.6x before the switch, 22.46 s vs 14.13 s) —
-apply_update_batch therefore AUTO-SWITCHES past MAX_PRUNE_CELLS
-(256 cells) to a plain scan of the partitioned layout, measured
-at parity with the flat feed ({dsec(k1)} s vs {k1.get('delta_r4_sec')} s r4-flat) and
-{round(d['full_sec'] / dsec(k1), 1)}x under the full re-compare. At
+{npart} partitions, so the partition filter prunes little; it is
+evaluated once per partition directory, never per row, so the filtered
+scan costs what a plain scan of the partitioned layout does
+({dsec(k1)} s vs {k1.get('delta_r4_sec')} s r4-flat,
+{round(d['full_sec'] / dsec(k1), 1)}x under the full re-compare). At
 k=10k — {round(100 * d['k10000']['recompared_stops'] / d['n_stops'])}% of the feed
 affected — the delta machinery has no selectivity left and LOSES to the
 full run, so apply_update_batch falls back to a plain full compare above
@@ -657,11 +654,10 @@ pruned scan's bytes stay O(covered partitions); at 4M-in-RAM those O(N)
 scans cost ~2 s and fixed per-query costs dominate every variant. The
 operational disciplines are: cluster batches spatially where possible
 (OSM edits come that way), compact the layout, and let the fallback
-bound the wide tail. The spread-case isin tax is engine policy, not an
-operator caveat: apply_update_batch skips the feed filter when the
-coarse covering exceeds MAX_PRUNE_CELLS (256) — regime switch
-pinned in test_feed_prune_regime_switch, measured above at flat-feed
-parity.
+bound the wide tail. A filter naming every partition is a
+PartitionFilter only, with no row-level Filter node (pinned in
+test_coarse_partition_filter_prunes_scan), so apply_update_batch
+filters on its covering at any width.
 
 Two write-side disciplines this bench enforces (both prescribed by the
 sync docs): the hive layout is COMPACTED (repartition("cell_part")
@@ -703,9 +699,9 @@ ivf_store persists the assigned corpus hive-partitioned by list_id
 pushes the query batch's probed list ids as In(list_id, ...)
 PartitionFilters on the index scan, so only nprobe/n_lists of the
 index is READ (plan pinned in test_ivf_stored_layout_prunes_scan;
-wide probes regime-switch to a plain scan past prune_max_lists, the
-feed-prune convention). A/B over the SAME stored files — the only
-difference is the partition filter; results hash-identical in-run
+the filter applies at any probe width, the feed-prune convention).
+A/B over the SAME stored files — the only difference is the partition
+filter; results hash-identical in-run
 ({str(d['identical']).lower()}).
 
 | variant | wall (s) |
